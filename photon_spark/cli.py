@@ -293,6 +293,13 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             kept = result.fetched_bodies
             missing = waves
             if kept is not None:
+                # a failed crawl-time fetch left no body (DUMMY): drop
+                # those rows so their URLs land in `missing` and get
+                # one retry. An empty body is an answer (e.g. a 404
+                # page), not a failure, and is not fetched again.
+                kept = kept.filter(
+                    F.col("body").isNotNull() & (F.col("body") != DUMMY)
+                )
                 missing = waves.join(
                     kept.select("url"), "url", "left_anti"
                 )

@@ -74,21 +74,35 @@ class CrawlResult:
     def to_sets(self, max_rows: int = 5_000_000) -> dict[str, set]:
         """Collect every dataset — test/CLI helper, not for big runs.
 
+        One Spark action: the datasets are collected as one tagged
+        union, not one collect each.
+
         Guarded: a dataset larger than ``max_rows`` raises instead of
         OOMing the driver (use write_results_table for the scale path).
-        The guard costs nothing extra — ``limit(n+1)`` collects at most
-        one row beyond the bound.
+        The guard costs nothing extra — each dataset's ``limit(n+1)``
+        collects at most one row beyond the bound.
         """
-        out: dict[str, set] = {}
-        for name, df in self.datasets.items():
-            rows = df.limit(max_rows + 1).collect()
-            if len(rows) > max_rows:
+        names = list(self.datasets)
+        tagged = None
+        for i, name in enumerate(names):
+            part = (
+                self.datasets[name]
+                .limit(max_rows + 1)
+                .select(F.lit(i).alias("_d"), F.col("value"))
+            )
+            tagged = part if tagged is None else tagged.unionAll(part)
+        out: dict[str, set] = {name: set() for name in names}
+        rows = [0] * len(names)
+        for d, value in tagged.collect() if tagged is not None else ():
+            out[names[d]].add(value)
+            rows[d] += 1
+        for name, n in zip(names, rows):
+            if n > max_rows:
                 raise ValueError(
                     f"dataset {name!r} exceeds to_sets() driver-collect bound"
                     f" ({max_rows} rows); use sinks.write_results_table for"
                     f" large runs"
                 )
-            out[name] = {r["value"] for r in rows}
         return out
 
 

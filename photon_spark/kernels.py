@@ -16,7 +16,7 @@ import re
 from urllib.parse import urlparse
 
 from photon_spark import regexes as rx
-from photon_spark.config import BAD_TYPES, DUMMY
+from photon_spark.config import BAD_TYPES
 
 # ---------------------------------------------------------------------------
 # Document views
@@ -390,12 +390,3 @@ def robots_sitemaps(body: str) -> list[str]:
         return []
     return rx.ROBOTS_SITEMAP.findall(body)
 
-
-# ---------------------------------------------------------------------------
-# Fetch modeling (S1) — the sandbox "network" is the pages table
-
-
-def fetch_from_pages(url: str, pages: dict[str, str]) -> str:
-    """Fixture fetch: body if the URL is a known page else the 'dummy'
-    sentinel (reference core/requester.py:58,67,70 — Q11)."""
-    return pages.get(url, DUMMY)

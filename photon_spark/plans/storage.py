@@ -15,6 +15,35 @@ via write-then-rename of the manifest — a torn commit leaves the
 manifest at the previous wave and the orphan delta dir is overwritten
 on retry.
 
+On-disk layout. All tables share one wide parquet schema: the columns
+of every table (a column name declared by two tables has one type)
+plus a `_table` tag. A commit writes the wave's deltas as ONE tagged
+union partitioned by the tag — one write job and one file-commit
+protocol per wave, not one per table; compaction rewrites its tables
+the same way:
+
+    <root>/_wave_manifest.json
+    <root>/wave=W/_table=<name>/part-*.parquet        wave W's delta
+    <root>/base=wU-gG/_table=<name>/part-*.parquet    compacted base
+
+A table with no rows writes no dir, and the manifest lists only the
+dirs that landed. The manifest names its layout (`"layout"`); latest()
+refuses one without it, i.e. a store of the older per-table-dir layout.
+Readers scan a table's dirs with its declared schema
+(`spark.read.schema`), so no read runs a footer-inference job and the
+other tables' all-NULL columns are pruned. One exception: with
+bucket_seen > 0 the `processed` base is its own catalog write (the
+bucket spec lives in the catalog, not in the files) into the same
+`base=…/_table=processed` dir.
+
+Cost model: the layout trades fixed cost per Spark job for cost per
+row. Every row carries the other tables' columns as NULLs, in the
+commit's write and in compaction's one dropDuplicates shuffle. So it
+pays while per-job fixed cost dominates, i.e. while a wave's deltas
+are small. With large multi-table deltas, commits cost more per row
+and compaction's wide shuffle costs more than per-table ones
+(measured in SCALE.md §2 with scripts/bench_store_deltas.py).
+
 Maintenance mirrors Iceberg's table services: `compact(upto)` rewrites
 the snapshot-as-of `upto` into a consolidated base (new files first,
 then an atomic manifest swap — readers of the old manifest are never
@@ -34,10 +63,12 @@ tests/test_storage_contract.py is the contract it must pass unchanged):
 
 | interface        | Iceberg equivalent                                       |
 |------------------|----------------------------------------------------------|
-| commit(w, Δ)     | per table: `MERGE INTO state.<t> t USING Δ s ON <pk>     |
-|                  | WHEN NOT MATCHED THEN INSERT *` — or a plain append +    |
-|                  | dedup-on-read, matching this store; one snapshot per     |
-|                  | wave, wave id + meta in snapshot summary properties      |
+| commit(w, Δ)     | one multi-table append snapshot per wave: every table's  |
+|                  | Δ lands in one atomic commit (a catalog multi-table      |
+|                  | transaction), as a plain append + dedup-on-read like     |
+|                  | this store, or per table `MERGE INTO state.<t> t USING Δ |
+|                  | s ON <pk> WHEN NOT MATCHED THEN INSERT *`; wave id +     |
+|                  | meta in the snapshot summary properties                  |
 | latest()         | current snapshot's summary (`snapshot().summary()`)      |
 | load(w)          | time travel: `VERSION AS OF <snapshot-of-wave-w>`        |
 | compact()        | `rewrite_data_files` (bin-pack) — readers of older       |
@@ -61,9 +92,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from photon_spark.session import jvm_empty, split_schema
 
 STATE_SCHEMAS = {
     "internal": "url string",
@@ -76,6 +111,15 @@ STATE_SCHEMAS = {
     "keys": "value string",
     "waves": "url string, level int",
 }
+
+# Partition column naming each row's table in the wide tagged layout.
+TABLE_TAG = "_table"
+# Table names Spark writes verbatim as a partition value: any other
+# character is percent-escaped in the dir name (`_table=a%3Ab`).
+_TABLE_NAME = re.compile(r"[A-Za-z0-9_.-]+")
+# Written into every manifest; a manifest without it belongs to the
+# per-table-dir layout, which this store does not read.
+LAYOUT = "tagged-v1"
 
 
 class CrawlStore:
@@ -99,9 +143,12 @@ class CrawlStore:
         `bucket(N, url)`).
 
         ``schemas`` overrides the table set (default: the crawl state
-        tables). ``upsert_keys`` maps table name → key columns for
-        UPSERT tables: commits stay O(|delta|) appends, and load()
-        resolves last-writer-wins per key across waves — merge-on-read,
+        tables). All tables share one wide on-disk schema, so a column
+        name declared by two tables must have the same type there, and
+        a table name is a partition value, so only [A-Za-z0-9_.-]
+        (ValueError otherwise). ``upsert_keys`` maps table name → key
+        columns for UPSERT tables: commits stay O(|delta|) appends, and
+        load() resolves last-writer-wins per key across waves — merge-on-read,
         the Iceberg `MERGE INTO ... WHEN MATCHED THEN UPDATE` shape
         (equality deletes resolved at read; compact() materializes the
         resolution, i.e. the copy-on-write flush). Contract: one row
@@ -111,7 +158,32 @@ class CrawlStore:
         self.bucket_seen = bucket_seen
         self.schemas = dict(schemas) if schemas is not None else dict(STATE_SCHEMAS)
         self.upsert_keys = dict(upsert_keys) if upsert_keys else {}
+        self._columns = self._wide_columns()
         os.makedirs(root, exist_ok=True)
+
+    def _wide_columns(self) -> dict[str, str]:
+        """column → type of the shared on-disk schema: every table's
+        columns, each name once."""
+        cols: dict[str, str] = {}
+        for name, schema in self.schemas.items():
+            if not _TABLE_NAME.fullmatch(name):
+                raise ValueError(
+                    f"table name {name!r}: only [A-Za-z0-9_.-] (it is a"
+                    f" partition value of the on-disk layout)"
+                )
+            for col, tp in split_schema(schema):
+                if col == TABLE_TAG:
+                    raise ValueError(
+                        f"table {name!r}: column {TABLE_TAG!r} is the store's table tag"
+                    )
+                prev = cols.setdefault(col, tp)
+                if prev.replace(" ", "").lower() != tp.replace(" ", "").lower():
+                    raise ValueError(
+                        f"column {col!r} is {prev} in one table and {tp} in"
+                        f" {name!r}; tables sharing a column name must agree"
+                        f" on its type"
+                    )
+        return cols
 
     def _bucket_table_name(self, gen: int) -> str:
         import hashlib
@@ -152,23 +224,69 @@ class CrawlStore:
             for w, tables in meta.get("_waves_index", {}).items()
             if base["wave"] < int(w) <= wave and "processed" in tables
         ]
-        delta_df = spark.read.parquet(*paths) if paths else None
+        delta_df = self._scan(spark, "processed", paths) if paths else None
         return base_df, delta_df
 
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "_wave_manifest.json")
 
+    def _table_dir(self, parent: str, name: str) -> str:
+        return os.path.join(self.root, parent, f"{TABLE_TAG}={name}")
+
     def _delta_dir(self, wave: int, name: str) -> str:
-        return os.path.join(self.root, f"wave={wave}", name)
+        return self._table_dir(f"wave={wave}", name)
+
+    def _scan(self, spark: SparkSession, name: str, paths: list[str]) -> DataFrame:
+        """Table `name`'s rows under `paths`, read with its declared
+        schema: no footer-inference job, and the other tables' columns
+        are pruned."""
+        return spark.read.schema(self.schemas[name]).parquet(*paths)
+
+    def _tagged(self, frames: dict[str, DataFrame]) -> DataFrame:
+        """One relation over the wide schema: each table's rows in its
+        own columns, NULL in the rest, its name in the tag."""
+        out = None
+        for name, df in frames.items():
+            if name not in self.schemas:
+                raise ValueError(f"unknown table {name!r}")
+            own = {c for c, _ in split_schema(self.schemas[name])}
+            f = df.select(
+                *[
+                    (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
+                    for c, tp in self._columns.items()
+                ],
+                F.lit(name).alias(TABLE_TAG),
+            )
+            out = f if out is None else out.unionByName(f)
+        return out
+
+    def _write_tagged(self, tagged: DataFrame, parent: str, names) -> list[str]:
+        """Write a tagged union into <root>/<parent>/ as one job; returns
+        the tables whose dir landed (an empty table writes none)."""
+        tagged.write.mode("overwrite").partitionBy(TABLE_TAG).parquet(
+            os.path.join(self.root, parent)
+        )
+        landed = []
+        for name in names:
+            path = self._table_dir(parent, name)
+            if os.path.isdir(path):
+                # the write refreshes only <parent>; without this a
+                # reused root serves cached listings of an earlier
+                # lineage's files under the same table dir
+                tagged.sparkSession.catalog.refreshByPath(path)
+                landed.append(name)
+        return landed
 
     def commit(self, wave: int, deltas: dict[str, DataFrame], meta: dict) -> None:
-        """Append this wave's NEW rows per table. Absent/empty tables
-        write nothing. The manifest records which tables each wave
-        touched so load() lists only real paths."""
-        written: list[str] = []
-        for name, df in deltas.items():
-            df.write.mode("overwrite").parquet(self._delta_dir(wave, name))
-            written.append(name)
+        """Append this wave's NEW rows per table, every table in one
+        tagged write. Absent/empty tables write nothing. The manifest
+        records which tables each wave touched so load() lists only
+        real paths."""
+        written = (
+            self._write_tagged(self._tagged(deltas), f"wave={wave}", deltas)
+            if deltas
+            else []
+        )
         prev = self.latest()
         waves_index = dict(prev[1].get("_waves_index", {})) if prev else {}
         waves_index[str(wave)] = written
@@ -181,16 +299,22 @@ class CrawlStore:
     def _write_manifest(self, manifest: dict) -> None:
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            json.dump({**manifest, "layout": LAYOUT}, f)
         os.replace(tmp, self._manifest_path())
 
     def latest(self) -> tuple[int, dict] | None:
         try:
             with open(self._manifest_path()) as f:
                 m = json.load(f)
-            return m["latest_wave"], m["meta"]
         except FileNotFoundError:
             return None
+        if m.get("layout") != LAYOUT:
+            raise ValueError(
+                f"{self.root}: store written by the pre-tagged layout"
+                f" (per-table dirs, no layout marker); start a fresh crawl"
+                f" into this root"
+            )
+        return m["latest_wave"], m["meta"]
 
     def _snapshot_parts(
         self, name: str, wave: int, meta: dict
@@ -205,7 +329,7 @@ class CrawlStore:
         base_wave = base["wave"] if base and base["wave"] <= wave else None
         parts = []
         if base_wave is not None and name in base["tables"]:
-            parts.append((os.path.join(self.root, base["dir"], name), base_wave))
+            parts.append((self._table_dir(base["dir"], name), base_wave))
         floor = base_wave if base_wave is not None else -1
         for w_str, tables in waves_index.items():
             w = int(w_str)
@@ -223,9 +347,6 @@ class CrawlStore:
                 parts.append((p, w))
         return parts
 
-    def _snapshot_paths(self, name: str, wave: int, meta: dict) -> list[str]:
-        return [p for p, _ in self._snapshot_parts(name, wave, meta)]
-
     def _read_snapshot(
         self, spark: SparkSession, name: str, wave: int, meta: dict
     ) -> DataFrame:
@@ -238,20 +359,17 @@ class CrawlStore:
         key column's projection, so pruning can't skip the check);
         byte-identical duplicate rows are collapsed first — an
         idempotent retry of the same delta is not a collision."""
-        from photon_spark.session import jvm_empty
-
         parts = self._snapshot_parts(name, wave, meta)
         if not parts:
             return jvm_empty(spark, self.schemas[name])
         keys = self.upsert_keys.get(name)
         if keys is None:
-            return spark.read.parquet(*[p for p, _ in parts]).dropDuplicates()
+            return self._scan(spark, name, [p for p, _ in parts]).dropDuplicates()
         from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
         u = None
         for p, wv in parts:
-            f = spark.read.parquet(p).withColumn("_w", F.lit(int(wv)))
+            f = self._scan(spark, name, [p]).withColumn("_w", F.lit(int(wv)))
             u = f if u is None else u.unionByName(f)
         u = u.dropDuplicates()
         wk = Window.partitionBy(*keys).orderBy(F.col("_w").desc())
@@ -285,8 +403,8 @@ class CrawlStore:
         self, spark: SparkSession, wave: int, name: str
     ) -> DataFrame:
         """Snapshot-as-of `wave` for ONE table — the streaming hot path
-        reads only `processed`; load()'s all-tables dict would pay a
-        parquet listing/schema read per state table per micro-batch."""
+        reads only `processed`, without building the other tables'
+        plans."""
         latest = self.latest()
         meta = latest[1] if latest else {}
         return self._read_snapshot(spark, name, wave, meta)
@@ -311,52 +429,65 @@ class CrawlStore:
         the manifest swap, so a reader holding the old manifest keeps a
         consistent view; the superseded delta dirs stay on disk (for
         pre-base time travel) until expire(). O(|state|) — run it every
-        K waves, not per wave; commits stay O(|delta|)."""
+        K waves, not per wave; commits stay O(|delta|).
+
+        The manifest names the non-empty tables (only landed dirs are
+        listed), so no table is probed. The tables are rewritten in one
+        tagged write, deduplicated by ONE dropDuplicates over the union
+        (upsert tables arrive resolved, so it keeps their rows as they
+        are); the bucketed `processed` base is its own catalog write."""
         latest = self.latest()
         if latest is None:
             raise ValueError("compact() on an empty store")
         wave, meta = latest
         upto = wave if upto is None else upto
-        snapshot = self.load(spark, upto)
         prev_base = meta.get("_base")
         gen = (prev_base["gen"] + 1) if prev_base else 0
         base_dir = f"base=w{upto}-g{gen}"
+        parts = {n: self._snapshot_parts(n, upto, meta) for n in self.schemas}
+        bucketed = self.bucket_seen > 0 and bool(parts.get("processed"))
+        plain = [n for n, ps in parts.items() if ps and not (bucketed and n == "processed")]
         tables = []
+        if plain:
+            frames = {
+                n: self._read_snapshot(spark, n, upto, meta)
+                if n in self.upsert_keys
+                else self._scan(spark, n, [p for p, _ in parts[n]])
+                for n in plain
+            }
+            tables = self._write_tagged(
+                self._tagged(frames).dropDuplicates(), base_dir, plain
+            )
         bucketed_processed = None
-        for name, df in snapshot.items():
-            if df.limit(1).count() == 0:
-                continue
-            path = os.path.join(self.root, base_dir, name)
-            if name == "processed" and self.bucket_seen > 0:
-                # ONE copy serves both readers: written through the
-                # catalog so the bucket spec is recorded (plain
-                # .parquet() writes have nowhere to put it), while
-                # load() keeps reading the same files as ordinary
-                # parquet (bucket ids only live in the file names).
-                from photon_spark.plans.bucketing import write_bucketed
+        if bucketed:
+            # ONE copy serves both readers: written through the
+            # catalog so the bucket spec is recorded (plain
+            # .parquet() writes have nowhere to put it), while
+            # load() keeps reading the same files as ordinary
+            # parquet (bucket ids only live in the file names).
+            # Written after the tagged write, which overwrites base_dir.
+            from photon_spark.plans.bucketing import write_bucketed
 
-                table = self._bucket_table_name(gen)
-                # single_file_buckets: one file per bucket, so the
-                # per-wave sort-merge anti-join also skips the sort on
-                # the seen side (Spark only trusts bucket sortedness
-                # when a bucket is one file) — measured 2.6× vs the
-                # plain anti-join at 64M seen (BENCH/BASELINE.md).
-                write_bucketed(
-                    df,
-                    table,
-                    "url",
-                    self.bucket_seen,
-                    os.path.abspath(path),
-                    single_file_buckets=True,
-                )
-                bucketed_processed = {
-                    "table": table,
-                    "dir": f"{base_dir}/{name}",
-                    "n_buckets": self.bucket_seen,
-                }
-            else:
-                df.write.mode("overwrite").parquet(path)
-            tables.append(name)
+            table = self._bucket_table_name(gen)
+            # single_file_buckets: one file per bucket, so the
+            # per-wave sort-merge anti-join also skips the sort on
+            # the seen side (Spark only trusts bucket sortedness
+            # when a bucket is one file) — measured 2.6× vs the
+            # plain anti-join at 64M seen (BENCH/BASELINE.md).
+            write_bucketed(
+                self._read_snapshot(spark, "processed", upto, meta),
+                table,
+                "url",
+                self.bucket_seen,
+                os.path.abspath(self._table_dir(base_dir, "processed")),
+                single_file_buckets=True,
+            )
+            bucketed_processed = {
+                "table": table,
+                "dir": f"{base_dir}/{TABLE_TAG}=processed",
+                "n_buckets": self.bucket_seen,
+            }
+            tables.append("processed")
         meta = dict(meta)
         meta["_base"] = {"wave": upto, "dir": base_dir, "tables": tables, "gen": gen}
         if bucketed_processed:
@@ -401,16 +532,14 @@ class CrawlStore:
                 removed += 1
         self._write_manifest({"latest_wave": latest[0], "meta": meta})
         for w_str, tables in latest[1].get("_waves_index", {}).items():
-            if int(w_str) > base["wave"]:
+            w = int(w_str)
+            wave_dir = os.path.join(self.root, f"wave={w}")
+            if w > base["wave"] or not os.path.isdir(wave_dir):
                 continue
-            for name in tables:
-                p = self._delta_dir(int(w_str), name)
-                if os.path.exists(p):
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed += 1
-            parent = os.path.join(self.root, f"wave={int(w_str)}")
-            if os.path.isdir(parent) and not os.listdir(parent):
-                os.rmdir(parent)
+            removed += sum(os.path.isdir(self._delta_dir(w, n)) for n in tables)
+            # the whole wave dir: the tagged write leaves its _SUCCESS
+            # marker beside the table dirs
+            shutil.rmtree(wave_dir, ignore_errors=True)
         return removed
 
     def reset(self) -> None:

@@ -63,10 +63,6 @@ def export(result: CrawlResult, output_dir: str, method: str) -> str:
     raise ValueError(f"unknown export method: {method}")
 
 
-def to_stdout(result: CrawlResult, dataset: str) -> str:
-    return "".join(v + "\n" for v in sorted(result.to_sets()[dataset]))
-
-
 def mirror_relpath(url: str) -> str:
     """K3 path mapping — the reference's --clone directory
     reconstruction (core/mirror.py:6-37), byte-for-byte, including its

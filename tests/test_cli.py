@@ -411,3 +411,68 @@ def test_cli_clone_http_fetches_each_url_once(spark, tmp_path, monkeypatch):
     assert os.path.isfile(root_mirror)
     with open(root_mirror, encoding="utf-8") as f:
         assert f.read() == bodies[ROOT]
+
+
+def test_cli_clone_http_retries_failed_fetch(spark, tmp_path, monkeypatch):
+    """--clone retries a page whose crawl-time fetch failed (ADVICE:
+    the reused crawl bodies include the failure's 'dummy' body, which
+    used to hide the URL from the re-fetch pass, so the page silently
+    vanished from the mirror). The injected transport raises on the
+    first fetch of one page and serves it afterwards."""
+    import photon_spark.cli as cli_mod
+    from photon_spark.sinks import mirror_relpath
+
+    bodies = page_bodies()
+    crawled = oracle_crawl(bodies, ROOT, crawl_level=2).waves
+    target = sorted(u for u in crawled if u != ROOT and u in bodies)[0]
+    log = tmp_path / "fetch_log.txt"
+    log.write_text("")
+    logpath, marker = str(log), str(tmp_path / "failed_once")
+    real_make = cli_mod.make_http_fetcher
+
+    def factory():
+        from fixtures.gen import page_bodies as _pb
+
+        pages = _pb()
+
+        def do(url, headers, t):
+            with open(logpath, "a") as f:
+                f.write(url + "\n")
+            if url == target and not os.path.exists(marker):
+                open(marker, "w").close()  # visible across Python workers
+                raise ConnectionError("transient failure")
+            b = pages.get(url)
+            if b is None and url.endswith("/"):
+                b = pages.get(url.rstrip("/"))
+            if b is None:
+                return 404, "text/html", ""
+            return 200, "text/html", b
+
+        return do
+
+    monkeypatch.setattr(
+        cli_mod,
+        "make_http_fetcher",
+        lambda **kw: real_make(**{**kw, "transport_factory": factory}),
+    )
+    pages_path = str(tmp_path / "pages_retry.parquet")
+    pages_df(spark).write.parquet(pages_path)
+    out_dir = str(tmp_path / "out_retry")
+    rc = cli_mod.main(
+        [
+            "-u", ROOT,
+            "--pages", pages_path,
+            "-o", out_dir,
+            "--http",
+            "--clone",
+            "--partitions", "4",
+            "--salts", "1",
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    assert os.path.exists(marker)
+    assert open(logpath).read().splitlines().count(target) == 2
+    with open(os.path.join(out_dir, "mirror", mirror_relpath(target)),
+              encoding="utf-8") as f:
+        assert f.read() == bodies[target]

@@ -3036,8 +3036,8 @@ def test_gate_agreement_null_fail_fast(spark):
 
 def test_gate_agreement_empty_input_all_zero_counts(spark):
     """An EMPTY flags frame is legitimate (e.g. a fully-filtered
-    shard): counts are all zero and kappa degenerates to 1.0 via the
-    pe==1 branch — it must NOT trip the NULL-precondition check
+    shard): counts are all zero, and the rates and kappa are NULL over
+    zero rows — it must NOT trip the NULL-precondition check
     (ADVICE r4: SUM over zero rows is NULL before the coalesce)."""
     from photon_spark.operators.textstats import gate_agreement
 
