@@ -10,8 +10,9 @@ tests/test_registry.py; COVERAGE.md maps them to SURVEY.md §2 rows).
 Registry order is gate-aware and rotates round-to-round
 (queries_ext._TAIL parks already-driver-verified entries last,
 queries_ext._FRONT_R5 pins this round's window: the 9 r4 hash-false
-re-gates + the 41 remaining never-gated entries, one of them the
-documented rows-only cms_host_heavy_hitters; the 8 rows-only entries —
+re-gates + 41 never-gated entries, one of them the documented
+rows-only cms_host_heavy_hitters; the never-gated lang_id_ngram, oracled
+r5, is not in the window and rotates in r6; the 8 rows-only entries —
 xxhash/sketch/iterative ops with no DuckDB twin — have
 recall/error-bound pytests instead).
 """

@@ -249,18 +249,6 @@ def bench_frontier(
         bloom_elapsed = time.time() - t0
         out["bloom_sec"] = round(bloom_elapsed, 3)
         out["bloom_urls_per_s"] = round(n_cand / bloom_elapsed, 1)
-        # bucketed variant (the 10^10 path: per-bucket shards bound
-        # memory; probes route by bucket) — same exactness contract
-        from photon_spark.plans.frontier import ShardedUrlBloom
-
-        t0 = time.time()
-        sharded = ShardedUrlBloom.build(
-            seen, "url", expected=n_seen, fpp=0.01, n_buckets=16
-        )
-        run_wave(bloom=sharded)
-        sharded_elapsed = time.time() - t0
-        out["sharded_bloom_sec"] = round(sharded_elapsed, 3)
-        out["sharded_bloom_urls_per_s"] = round(n_cand / sharded_elapsed, 1)
 
     cand.unpersist()
     seen.unpersist()

@@ -106,11 +106,6 @@ class EngineConfig:
     host_salts: int = 8           # salting factor for skewed hosts
     bloom_expected: int = 1_000_000
     bloom_fpp: float = 0.01
-    # Which seen-set filter run_crawl(use_bloom=True) builds per wave:
-    # 'bloom' (single bitmap), 'sharded' (per-bucket shards — the
-    # 10^10 path), or 'cuckoo' (deletable fingerprints — recrawl).
-    # All three are exact via the anti-join backstop.
-    seen_filter: str = "bloom"
     # Store maintenance cadence: every K committed waves, rewrite the
     # accumulated deltas into one consolidated base and expire the
     # superseded delta dirs (CrawlStore.compact/expire). 0 = never.

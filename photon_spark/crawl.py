@@ -192,7 +192,10 @@ def run_crawl(
     ``stop_after_wave`` simulates a crash for resume tests: state is
     committed to ``store`` and the function returns None.
     ``use_bloom`` switches the per-wave dedup to the Bloom-prefiltered
-    path (always exact; worth it once `processed` is large).
+    path: a bucket-sharded ``UrlBloom`` built over `processed` each
+    wave (always exact via the anti-join backstop; worth it only once
+    `processed` outgrows the plain anti-join's shuffle). Not built in
+    waves that dedup against the store's bucketed seen base.
     ``fetcher``: optional replacement fetch stage — a callable
     (url, level) DataFrame → (url, level, body) DataFrame. The
     production HTTP stage is ``sources.fetch_http.fetch_stage``; the
@@ -383,27 +386,6 @@ def run_crawl(
     for level in range(start_wave, cfg.crawl_level):
         t0 = time.time()
 
-        bloom = None
-        if use_bloom and processed_count > 1:
-            if cfg.seen_filter == "sharded":
-                from photon_spark.plans.frontier import ShardedUrlBloom
-
-                bloom = ShardedUrlBloom.build(
-                    acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
-                )
-            elif cfg.seen_filter == "cuckoo":
-                # sharded build: per-bucket tables built inside tasks —
-                # no driver-side hash collect (UrlCuckoo.build is the
-                # small-set / per-shard kernel only)
-                from photon_spark.plans.frontier import ShardedUrlCuckoo
-
-                bloom = ShardedUrlCuckoo.build(
-                    acc["processed"], "url", cfg.bloom_expected
-                )
-            else:
-                bloom = UrlBloom.build(
-                    acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
-                )
         candidates = trap_filtered(acc["internal"])
         seen_parts = (
             store.processed_parts(spark)
@@ -421,6 +403,11 @@ def run_crawl(
                 candidates, seen_parts[0], seen_parts[1], "url"
             )
         else:
+            bloom = None
+            if use_bloom and processed_count > 1:
+                bloom = UrlBloom.build(
+                    acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
+                )
             links = dedup_candidates(candidates, acc["processed"], "url", bloom)
         links = gate_links(links).persist()
         # ONE driver action for both loop-control counts (|internal| for

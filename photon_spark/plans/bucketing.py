@@ -93,28 +93,3 @@ def scan_is_bucketed(df: DataFrame) -> bool:
     spec (``Bucketed: true`` in the FileScan node)."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "Bucketed: true" in plan
-
-
-def dedup_candidates_bucketed(
-    spark: SparkSession,
-    candidates: DataFrame,
-    seen_table: str,
-    url_col: str = "url",
-) -> DataFrame:
-    """candidates ∖ seen with the seen set stored BUCKETED on the url.
-
-    The top rung of frontier.dedup_candidates' strategy ladder for the
-    10^10-row seen set (reference keeps it as an in-memory Python set,
-    photon.py:158 / core/requester.py:31): when `seen` is written
-    bucketed on the join key, the per-wave anti-join reads it
-    pre-partitioned — ONLY the wave side (orders of magnitude smaller)
-    shuffles, and the seen side's sort-merge input comes straight off
-    sorted bucket files. Per-wave cost becomes O(|wave| shuffle +
-    co-located merge), independent of re-shuffling |seen|.
-
-    The table must have been written with write_bucketed(key=url_col);
-    tests/test_bucketing.py pins the plan shape (exactly one exchange,
-    bucketed scan on the seen side) and result parity with the plain
-    left_anti join.
-    """
-    return candidates.join(spark.table(seen_table), url_col, "left_anti")

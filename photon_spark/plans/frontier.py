@@ -9,17 +9,12 @@ only ~1% of genuinely-new URLs pay the join; false negatives are
 impossible, so the result is EXACT (north_rule: bloom/cuckoo seen set
 with an exact backstop — SURVEY.md §2.3 J1).
 
-The filter itself is a numpy bitmap built distributed (one partial
-bitmap per partition via mapInPandas, OR-reduced on the driver) over
-JVM-computed xxhash64 keys, then broadcast back. No JVM BloomFilter
-object crosses the Python boundary — the format is ours, deterministic,
-and vectorized on both build and probe.
-
-At 10^10 design scale a single 1.2 GB bitmap (1% fpp) is too big to
-broadcast whole; the documented scale-out is bucketing `seen` by
-``bucket(N, url_hash)`` and holding one bloom shard per bucket
-(SURVEY.md §7 hard parts). The sandbox path below is the single-shard
-variant with the same interface.
+The filter is one numpy bitmap per hash bucket ``bucket(N, xxhash64)``
+(SURVEY.md §7 hard parts), built distributed (per-partition partial
+bitmaps via mapInPandas, OR-reduced on the driver) over JVM-computed
+xxhash64 keys, then broadcast back. No JVM BloomFilter object crosses
+the Python boundary — the format is ours, deterministic, and
+vectorized on both build and probe.
 """
 
 from __future__ import annotations
@@ -44,13 +39,37 @@ def _positions(h: np.ndarray, k: int, m: int) -> Iterator[np.ndarray]:
         yield ((h1 + np.uint64(i) * h2) % np.uint64(m)).astype(np.int64)
 
 
-class UrlBloom:
-    """Immutable bloom bitmap over xxhash64(url)."""
+def _bucket_of(hu: np.ndarray, n_buckets: int) -> np.ndarray:
+    """bucket(N, url_hash): nonneg modulo of the uint64 key — identical
+    on build and probe, engine-independent."""
+    return (hu % np.uint64(n_buckets)).astype(np.int64)
 
-    def __init__(self, bits: np.ndarray, k: int):
-        self.bits = bits  # uint8 array, little-endian bit packing
+
+class UrlBloom:
+    """Immutable bloom filter over xxhash64(url), sharded per bucket.
+
+    One bitmap per bucket(N, xxhash64(url)), each sized for
+    |seen|/N keys, so no single bitmap exceeds an agg buffer /
+    broadcast chunk, and a probe touches exactly ONE shard's cache
+    lines (keys route by the same bucket function on both sides).
+    ``n_buckets=1`` is the plain single bitmap. False negatives are
+    impossible per shard ⇒ the exact anti-join backstop keeps the
+    result exact.
+
+    Sandbox shape: all shards ride one broadcast (sum of shard sizes ==
+    the single-bitmap size, so this prototypes routing, not memory
+    relief). At cluster scale the same build emits shards as rows
+    (bucket, bits) to storage; the probe side repartitions by bucket
+    and each task mmaps only its bucket's shard — executor-resident
+    memory drops from |bloom| to |bloom|/N. The build streams Arrow
+    batches into per-bucket partial bitmaps, so no bucket's membership
+    ever materializes as rows.
+    """
+
+    def __init__(self, n_buckets: int, shards: dict[int, np.ndarray], k: int):
+        self.n_buckets = n_buckets
+        self.shards = shards  # bucket -> uint8 bitmap (missing = empty)
         self.k = k
-        self.m = bits.size * 8
 
     @staticmethod
     def params(expected: int, fpp: float) -> tuple[int, int]:
@@ -60,113 +79,6 @@ class UrlBloom:
         return m, k
 
     @classmethod
-    def build(cls, df: DataFrame, col: str, expected: int, fpp: float) -> "UrlBloom":
-        """Distributed build: per-partition partial bitmaps, OR-reduce."""
-        m, k = cls.params(expected, fpp)
-        nbytes = m // 8
-
-        def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bits = np.zeros(nbytes, dtype=np.uint8)
-            any_rows = False
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                any_rows = True
-                h = pdf["h"].to_numpy(dtype=np.int64).view(np.uint64)
-                for pos in _positions(h, k, m):
-                    np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-            if any_rows:
-                yield pd.DataFrame({"bits": [bits.tobytes()]})
-
-        hashes = df.select(F.xxhash64(F.col(col)).alias("h"))
-        # Few fat partials beat many: each partial is m/8 bytes on the
-        # driver regardless of row count, and Python-worker spin-up is
-        # per-partition. 8 partials keeps the build parallel enough
-        # locally while bounding collect size; at cluster scale the
-        # bloom is sharded per bucket instead (module docstring).
-        nparts = hashes.rdd.getNumPartitions()
-        if nparts > 8:
-            hashes = hashes.coalesce(8)
-        parts = hashes.mapInPandas(partial, schema="bits binary").collect()
-        bits = np.zeros(nbytes, dtype=np.uint8)
-        for row in parts:
-            bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-        return cls(bits, k)
-
-    def might_contain(self, h: np.ndarray) -> np.ndarray:
-        """Vectorized membership over int64 xxhash64 keys."""
-        out = np.ones(h.size, dtype=bool)
-        hu = h.astype(np.int64).view(np.uint64)
-        for pos in _positions(hu, self.k, self.m):
-            out &= (self.bits[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
-        return out
-
-    def to_payload(self) -> tuple:
-        return ("single", self.bits.tobytes(), self.k, self.m)
-
-
-def _bloom_from_payload(payload: tuple):
-    if payload[0] == "single":
-        _, raw, k, _m = payload
-        return UrlBloom(np.frombuffer(raw, dtype=np.uint8), k)
-    if payload[0] == "cuckoo":
-        _, nb, raw = payload
-        return UrlCuckoo(nb, np.frombuffer(raw, dtype=np.uint16).reshape(nb, UrlCuckoo.SLOTS).copy())
-    if payload[0] == "sharded_cuckoo":
-        _, n_buckets, shard_raw = payload
-        return ShardedUrlCuckoo(
-            n_buckets,
-            {
-                b: UrlCuckoo(
-                    nb,
-                    np.frombuffer(raw, dtype=np.uint16)
-                    .reshape(nb, UrlCuckoo.SLOTS)
-                    .copy(),
-                )
-                for b, (nb, raw) in shard_raw.items()
-            },
-        )
-    _, n_buckets, k, shard_raw = payload
-    return ShardedUrlBloom(
-        n_buckets,
-        {b: np.frombuffer(raw, dtype=np.uint8) for b, raw in shard_raw.items()},
-        k,
-    )
-
-
-def _bucket_of(hu: np.ndarray, n_buckets: int) -> np.ndarray:
-    """bucket(N, url_hash): nonneg modulo of the uint64 key — identical
-    on build and probe, engine-independent."""
-    return (hu % np.uint64(n_buckets)).astype(np.int64)
-
-
-class ShardedUrlBloom:
-    """Per-bucket bloom shards over bucket(N, xxhash64(url)).
-
-    This is the 10^10-frontier variant the single-bitmap docstring
-    promises: one bitmap per hash bucket, each sized for |seen|/N keys,
-    so no single bitmap exceeds an agg buffer / broadcast chunk, and a
-    probe touches exactly ONE shard's cache lines (keys route by the
-    same bucket function on both sides). False negatives remain
-    impossible per shard ⇒ the exact anti-join backstop keeps the
-    result exact.
-
-    Sandbox shape: all shards ride one broadcast (sum of shard sizes ==
-    the single-bitmap size, so this prototypes routing, not memory
-    relief). At cluster scale the same build emits shards as rows
-    (bucket, bits) to storage; the probe side repartitions by bucket
-    and each task mmaps only its bucket's shard — executor-resident
-    memory drops from |bloom| to |bloom|/N. The build below already
-    streams Arrow batches with per-bucket partial bitmaps, so no
-    bucket's membership ever materializes as rows.
-    """
-
-    def __init__(self, n_buckets: int, shards: dict[int, np.ndarray], k: int):
-        self.n_buckets = n_buckets
-        self.shards = shards  # bucket -> uint8 bitmap (missing = empty)
-        self.k = k
-
-    @classmethod
     def build(
         cls,
         df: DataFrame,
@@ -174,8 +86,10 @@ class ShardedUrlBloom:
         expected: int,
         fpp: float,
         n_buckets: int = 8,
-    ) -> "ShardedUrlBloom":
-        m, k = UrlBloom.params(max(64, expected // n_buckets), fpp)
+    ) -> "UrlBloom":
+        """Distributed build: per-partition, per-bucket partial bitmaps,
+        OR-reduced on the driver."""
+        m, k = cls.params(max(64, expected // n_buckets), fpp)
         nbytes = m // 8
 
         def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -196,6 +110,10 @@ class ShardedUrlBloom:
                 yield pd.DataFrame({"bucket": [b], "bits": [bits.tobytes()]})
 
         hashes = df.select(F.xxhash64(F.col(col)).alias("h"))
+        # Few fat partials beat many: each partial is up to m/8 bytes per
+        # bucket on the driver regardless of row count, and Python-worker
+        # spin-up is per-partition. 8 partials keeps the build parallel
+        # enough locally while bounding collect size.
         nparts = hashes.rdd.getNumPartitions()
         if nparts > 8:
             hashes = hashes.coalesce(8)
@@ -210,6 +128,7 @@ class ShardedUrlBloom:
         return cls(n_buckets, shards, k)
 
     def might_contain(self, h: np.ndarray) -> np.ndarray:
+        """Vectorized membership over int64 xxhash64 keys."""
         out = np.zeros(h.size, dtype=bool)
         hu = h.astype(np.int64).view(np.uint64)
         buckets = _bucket_of(hu, self.n_buckets)
@@ -218,248 +137,14 @@ class ShardedUrlBloom:
             if bits is None:
                 continue  # empty shard: definitely new
             mask = buckets == b
-            out[mask] = UrlBloom(bits, self.k).might_contain(h[mask])
+            hit = np.ones(int(mask.sum()), dtype=bool)
+            for pos in _positions(hu[mask], self.k, bits.size * 8):
+                hit &= (bits[pos >> 3] & (np.uint8(1) << (pos & 7).astype(np.uint8))) != 0
+            out[mask] = hit
         return out
-
-    def to_payload(self) -> tuple:
-        return (
-            "sharded",
-            self.n_buckets,
-            self.k,
-            {b: bits.tobytes() for b, bits in self.shards.items()},
-        )
 
 
 _URL_PARTS = r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^#]*)"
-
-
-class UrlCuckoo:
-    """Cuckoo filter over xxhash64(url) — the north rule's second
-    seen-set option next to the bloom. Same exact-result contract
-    (false negatives impossible while load stays under capacity ⇒ the
-    anti-join backstop keeps dedup exact), but unlike the bloom it
-    supports DELETE — the recrawl path (drop a URL from `seen` so the
-    scheduler revisits it) that a bloom cannot express.
-
-    Layout: `nb` buckets × 4 slots of uint16 fingerprints (0 = empty;
-    fingerprints are mapped to 1..65535). Partial-bucket alternatives
-    don't exist for cuckoo (insert is stateful, with eviction), so the
-    distributed build shards by bucket(N, key) like ShardedUrlBloom:
-    each shard is built sequentially inside ONE task (applyInPandas per
-    shard key at scale; driver-side here over collected per-shard key
-    ranges is equivalent for the sandbox), shards build in parallel,
-    probes route by the same shard function.
-
-    Eviction is a DETERMINISTIC walk (slot chosen by the eviction
-    counter, not RNG) so builds are reproducible run-to-run.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, nb: int, table: np.ndarray):
-        self.nb = nb  # power of two
-        self.table = table  # shape (nb, SLOTS) uint16
-
-    # -- hashing ---------------------------------------------------------
-    @staticmethod
-    def _fingerprint(hu: np.ndarray) -> np.ndarray:
-        fp = ((hu >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-        return np.where(fp == 0, np.uint16(1), fp)  # 0 means empty slot
-
-    def _i1(self, hu: np.ndarray) -> np.ndarray:
-        return (hu & np.uint64(self.nb - 1)).astype(np.int64)
-
-    def _i2(self, i1: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        # partner bucket: i ^ H(fp) — involution, so either index
-        # recovers the other; nb is a power of two
-        mix = (fp.astype(np.uint64) * _MIX) & np.uint64(self.nb - 1)
-        return (i1.astype(np.uint64) ^ mix).astype(np.int64)
-
-    # -- build -----------------------------------------------------------
-    @classmethod
-    def build_from_hashes(cls, hashes: np.ndarray, expected: int) -> "UrlCuckoo":
-        """Sequential insert (one shard's build). Capacity sized to
-        ~84% max load (4-slot cuckoo's safe region) rounded up to a
-        power of two."""
-        nb = 1
-        while nb * cls.SLOTS * 0.84 < max(expected, 1):
-            nb *= 2
-        table = np.zeros((nb, cls.SLOTS), dtype=np.uint16)
-        f = cls(nb, table)
-        hu = hashes.astype(np.int64).view(np.uint64)
-        fps = cls._fingerprint(hu)
-        i1s = f._i1(hu)
-        i2s = f._i2(i1s, fps)
-        for fp, i1, i2 in zip(fps, i1s, i2s):
-            if not f._insert_one(int(fp), int(i1), int(i2)):
-                raise RuntimeError(
-                    "cuckoo filter over capacity — size `expected` correctly"
-                )
-        return f
-
-    def _insert_one(self, fp: int, i1: int, i2: int) -> bool:
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if empty.size:
-                row[empty[0]] = fp
-                return True
-        # evict: deterministic walk
-        i = i1
-        for kick in range(self.MAX_KICKS):
-            slot = kick % self.SLOTS
-            fp, self.table[i, slot] = int(self.table[i, slot]), fp
-            # same alternate-bucket map as the vectorized probe:
-            # i ^ ((fp·MIX mod 2^64) & (nb-1)). Python-int math (with
-            # the explicit 2^64 wrap numpy did implicitly) avoids
-            # numpy's scalar-overflow RuntimeWarning.
-            i = i ^ (((fp * int(_MIX)) & ((1 << 64) - 1)) & (self.nb - 1))
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if empty.size:
-                row[empty[0]] = fp
-                return True
-        return False
-
-    @classmethod
-    def build(cls, df: DataFrame, col: str, expected: int) -> "UrlCuckoo":
-        """Single-shard build — for SMALL seen sets and as the
-        per-shard kernel of ShardedUrlCuckoo.build (which is the
-        distributed path: this variant collects |seen| hashes to the
-        driver, so never use it on an unbounded frontier)."""
-        rows = df.select(F.xxhash64(F.col(col)).alias("h")).collect()
-        hashes = np.array([r["h"] for r in rows], dtype=np.int64)
-        return cls.build_from_hashes(hashes, expected)
-
-    # -- probe / delete --------------------------------------------------
-    def might_contain(self, h: np.ndarray) -> np.ndarray:
-        hu = h.astype(np.int64).view(np.uint64)
-        fps = self._fingerprint(hu)
-        i1 = self._i1(hu)
-        i2 = self._i2(i1, fps)
-        fcol = fps[:, None]
-        return ((self.table[i1] == fcol) | (self.table[i2] == fcol)).any(axis=1)
-
-    def delete(self, h: np.ndarray) -> int:
-        """Remove one stored fingerprint per present key (the recrawl
-        hook). Returns how many were removed."""
-        hu = h.astype(np.int64).view(np.uint64)
-        fps = self._fingerprint(hu)
-        i1s = self._i1(hu)
-        i2s = self._i2(i1s, fps)
-        removed = 0
-        for fp, i1, i2 in zip(fps, i1s, i2s):
-            for i in (int(i1), int(i2)):
-                hit = np.nonzero(self.table[i] == fp)[0]
-                if hit.size:
-                    self.table[i, hit[0]] = 0
-                    removed += 1
-                    break
-        return removed
-
-    def to_payload(self) -> tuple:
-        return ("cuckoo", self.nb, self.table.tobytes())
-
-
-class ShardedUrlCuckoo:
-    """Distributed cuckoo build: one UrlCuckoo shard per
-    bucket(N, xxhash64(url)), each built INSIDE its task (cuckoo
-    insertion is stateful — eviction — so unlike the bloom there is no
-    OR-reducible partial; sharding is the only parallel build). The
-    driver only ever holds the finished tables (2 bytes x 4 slots per
-    ~0.84 keys), never the raw hashes — no unbounded collect. Probes
-    route by the same bucket function; delete routes identically.
-
-    Sizing: applyInPandas materializes ONE shard's hashes per task, so
-    n_buckets must scale with |seen| — target ~10^6-10^7 keys/shard
-    (8-80 MB of hashes per task; at 10^10 keys that is n_buckets ≈
-    10^3-10^4, and the finished tables total ~24 GB, which at that
-    scale live as (bucket, table) rows in storage with bucket-routed
-    probes rather than one driver dict — same routing, different home).
-    """
-
-    def __init__(self, n_buckets: int, shards: dict[int, UrlCuckoo]):
-        self.n_buckets = n_buckets
-        self.shards = shards
-
-    @classmethod
-    def build(
-        cls, df: DataFrame, col: str, expected: int, n_buckets: int = 8
-    ) -> "ShardedUrlCuckoo":
-        per_shard = max(64, (expected * 2) // n_buckets)  # 2x slack for skew
-
-        def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf["bucket"].iloc[0])
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            # never trust the caller's estimate over the shard's actual
-            # size: a skewed bucket (or an undersized `expected`) must
-            # degrade to a bigger shard table, not fail the crawl wave
-            # inside an executor task. Capacity doubles on the (rare)
-            # eviction-cycle failure as well.
-            cap = max(per_shard, h.size)
-            while True:
-                try:
-                    ck = UrlCuckoo.build_from_hashes(h, cap)
-                    break
-                except RuntimeError:
-                    cap *= 2
-            return pd.DataFrame(
-                {"bucket": [b], "nb": [ck.nb], "table": [ck.table.tobytes()]}
-            )
-
-        hashes = df.select(F.xxhash64(F.col(col)).alias("h")).withColumn(
-            "bucket", F.pmod(F.col("h"), F.lit(n_buckets)).cast("int")
-        )
-        rows = (
-            hashes.groupBy("bucket")
-            .applyInPandas(per_bucket, schema="bucket int, nb long, table binary")
-            .collect()
-        )
-        shards = {
-            int(r["bucket"]): UrlCuckoo(
-                int(r["nb"]),
-                np.frombuffer(r["table"], dtype=np.uint16)
-                .reshape(int(r["nb"]), UrlCuckoo.SLOTS)
-                .copy(),
-            )
-            for r in rows
-        }
-        return cls(n_buckets, shards)
-
-    def _route(self, h: np.ndarray):
-        hu = h.astype(np.int64).view(np.uint64)
-        # pmod(xxhash64, N) is a SIGNED nonneg modulo in the JVM build;
-        # reproduce it exactly here
-        signed = hu.view(np.int64)
-        return ((signed % self.n_buckets) + self.n_buckets) % self.n_buckets
-
-    def might_contain(self, h: np.ndarray) -> np.ndarray:
-        out = np.zeros(h.size, dtype=bool)
-        buckets = self._route(h)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is None:
-                continue
-            mask = buckets == b
-            out[mask] = shard.might_contain(h[mask])
-        return out
-
-    def delete(self, h: np.ndarray) -> int:
-        removed = 0
-        buckets = self._route(h)
-        for b in np.unique(buckets):
-            shard = self.shards.get(int(b))
-            if shard is not None:
-                removed += shard.delete(h[buckets == b])
-        return removed
-
-    def to_payload(self) -> tuple:
-        return (
-            "sharded_cuckoo",
-            self.n_buckets,
-            {b: (s.nb, s.table.tobytes()) for b, s in self.shards.items()},
-        )
 
 
 def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -862,32 +547,30 @@ def dedup_candidates(
     candidates: DataFrame,
     seen: DataFrame,
     url_col: str = "url",
-    bloom: "UrlBloom | ShardedUrlBloom | None" = None,
-    broadcast_seen: bool = False,
+    bloom: UrlBloom | None = None,
 ) -> DataFrame:
     """candidates ∖ seen, exactly.
 
-    Strategy ladder by |seen| (all produce the identical exact result):
-    * ``broadcast_seen=True`` — broadcast-hash anti-join: the candidate
-      side is never shuffled; the probe parallelizes perfectly. Right
-      whenever `seen` fits executor memory (beyond AQE's conservative
-      10 MB autoBroadcast default).
-    * default — shuffled left_anti; AQE broadcasts if small enough.
+    Both paths produce the identical exact result:
+    * default — shuffled left_anti; AQE broadcasts `seen` if small
+      enough. The measured winner at sandbox scale (BENCH/BASELINE.md
+      §"Seen-filter strategy ladder").
     * ``bloom`` built over ``seen`` — bloom-negative rows skip the
       shuffle entirely; only bloom-positive rows (true dups + ~fpp of
       the new) pay the exact anti-join. The 10^10-frontier path, where
       `seen` fits neither broadcast nor memory.
+
+    A store-backed crawl with a bucketed `processed` base uses
+    `dedup_candidates_parts` instead.
     """
     if bloom is None:
-        rhs = F.broadcast(seen) if broadcast_seen else seen
-        return candidates.join(rhs, url_col, "left_anti")
+        return candidates.join(seen, url_col, "left_anti")
 
-    bloom_bc = candidates.sparkSession.sparkContext.broadcast(bloom.to_payload())
+    bloom_bc = candidates.sparkSession.sparkContext.broadcast(bloom)
 
     @F.pandas_udf("boolean")
     def maybe_seen(h: pd.Series) -> pd.Series:
-        bf = _bloom_from_payload(bloom_bc.value)
-        return pd.Series(bf.might_contain(h.to_numpy(dtype=np.int64)))
+        return pd.Series(bloom_bc.value.might_contain(h.to_numpy(dtype=np.int64)))
 
     with_flag = candidates.withColumn(
         "_maybe", maybe_seen(F.xxhash64(F.col(url_col)))

@@ -664,10 +664,10 @@ def recrawl_schedule(
     each URL by how stale it is times how often it historically changed
     — the classic freshness-driven recrawl policy (Cho & Garcia-Molina,
     "Effective Page Refresh Policies for Web Crawlers", TODS 2003) —
-    and emit each host's k most urgent URLs. Pairs with the cuckoo
-    seen-filter's DELETE support (plans/frontier.UrlCuckoo): a
-    scheduled recrawl deletes the URL's fingerprint so the frontier
-    re-admits it.
+    and emit each host's k most urgent URLs. The seen set is
+    append-only: a scheduled recrawl re-admits its URLs through store
+    state (photon_spark/recrawl.py), not by deleting them from a seen
+    filter.
 
     score = staleness_s · (n_obs − 1) · 10^6 div observed_span_s —
     integer arithmetic end to end (epoch seconds, integer div), so
@@ -1900,6 +1900,9 @@ def kll_rank_query(
     qs = sorted(set(quantiles))
     if not qs or not all(0.0 < q <= 1.0 for q in qs):
         raise ValueError("quantiles must lie in (0, 1]")
+    # Single-partition window by design: `merged` is a bounded summary
+    # of at most levels·k rows, so Spark's "No Partition Defined for
+    # Window operation" WindowExec warning is expected here.
     w_cum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     ranked = merged.select("v", F.sum("w").over(w_cum).alias("cw"))
     total = merged.agg(F.sum("w").alias("n"))

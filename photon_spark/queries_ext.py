@@ -5545,11 +5545,13 @@ _TAIL = (
     "having_repeat_customers",
     "rollup_lineitem_counts",
     # rows-only (no SQL twin; recall/error-bound pytests instead) —
-    # except dedup_embedding_lsh / ann_ivf_topk (oracled r4),
-    # lang_id_ngram (oracled r5 — constant-profile trigram argmax) and
-    # cms_host_heavy_hitters (promoted into the r5 window below for
-    # the driver's rows-only check); _FRONT_R5 pulls those forward,
-    # so their position here is moot:
+    # except dedup_embedding_lsh / ann_ivf_topk (oracled r4) and
+    # lang_id_ngram (oracled r5 — constant-profile trigram argmax).
+    # _FRONT_R5 pulls dedup_embedding_lsh, ann_ivf_topk and
+    # cms_host_heavy_hitters (for the driver's rows-only check)
+    # forward, so their position here is moot. lang_id_ngram is NOT
+    # in _FRONT_R5: it stays parked past the 50-entry window and
+    # rotates in r6:
     "cms_host_heavy_hitters",
     "dedup_simhash",
     "lang_id_ngram",
@@ -5578,7 +5580,8 @@ for _name in _TAIL:
 # (cms_host_heavy_hitters — the driver records its weaker rows-only
 # check; its value contract lives in the CMS linearity/overcount
 # pytests). That burns 45 of the 46-entry verification backlog; the
-# remaining 5 rows-only entries rotate in r6.
+# remaining 5 rows-only entries rotate in r6, and so does
+# lang_id_ngram (oracled r5, but not in this window).
 _FRONT_R5 = (
     # (a) the 9 re-gates after the registry-wide HUGEINT cast sweep
     "gate_agreement_kappa",

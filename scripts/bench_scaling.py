@@ -175,13 +175,14 @@ def main():
         "At sandbox scale (1M-URL wave, 300k seen) the plain exact anti-join",
         "wins: ~610-690k URLs/s vs ~330-410k through the sharded bloom and",
         "~220-260k through the single-bitmap bloom (the Python probe pass",
-        "costs more than the small shuffle it saves). The bloom/cuckoo paths",
-        "are the huge-|seen| regime tools — the 10^10 frontier where the",
-        "anti-join's shuffle of the seen side is the bottleneck — and all",
-        "of them stay EXACT via the anti-join backstop on filter-positive",
-        "rows. Sharded consistently beats single-bitmap (~1.5x) because",
-        "probes touch one shard's cache lines and the build never",
-        "materializes a full-size bitmap per task.",
+        "costs more than the small shuffle it saves). The bloom path is",
+        "the huge-|seen| regime tool — the 10^10 frontier where the",
+        "anti-join's shuffle of the seen side is the bottleneck — and it",
+        "stays EXACT via the anti-join backstop on filter-positive rows.",
+        "Sharded consistently beats single-bitmap (~1.5x) because probes",
+        "touch one shard's cache lines and the build never materializes a",
+        "full-size bitmap per task, so `UrlBloom` is the sharded filter",
+        "(`n_buckets=1` is the single bitmap).",
         "",
         f"Config: {os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g')} heap,",
         "AQE on, periodic GC 30s (steady-state shuffle-file cleanup).",

@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 
 from photon_spark.plans.bucketing import (
     cobucketed_join,
-    dedup_candidates_bucketed,
     exchange_count,
     has_exchange,
     scan_is_bucketed,
     write_bucketed,
 )
+from photon_spark.plans.frontier import dedup_candidates
 
 
 @pytest.fixture(scope="module")
@@ -91,7 +91,7 @@ def test_bucketed_seen_antijoin_shuffles_wave_side_only(spark, tmp_path_factory)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        fresh = dedup_candidates_bucketed(spark, wave, "b_seen")
+        fresh = dedup_candidates(wave, spark.table("b_seen"))
         n = fresh.count()
         assert n == 10000  # ids 30000..39999
         assert scan_is_bucketed(fresh)

@@ -92,14 +92,58 @@ def test_bloom_path_identical(spark, fixture_pages):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("kind", ["sharded", "cuckoo"])
-def test_alternate_seen_filters_identical(spark, fixture_pages, kind):
-    """Every seen-filter variant (sharded bloom, cuckoo) must yield the
-    byte-identical crawl — the anti-join backstop keeps them exact."""
-    cfg = EngineConfig(seen_filter=kind)
-    eng = run_crawl(spark, fixture_pages, ROOT, cfg, use_bloom=True)
+@pytest.mark.parametrize("kind", ["sharded"])
+def test_alternate_seen_filters_identical(spark, fixture_pages, kind, monkeypatch):
+    """The seen filter run_crawl(use_bloom=True) builds is the
+    bucket-sharded UrlBloom; it must yield the byte-identical crawl —
+    the anti-join backstop keeps it exact."""
+    from photon_spark.plans.frontier import UrlBloom
+
+    built = []
+    build = UrlBloom.build.__func__
+
+    def recording_build(cls, *args, **kwargs):
+        bloom = build(cls, *args, **kwargs)
+        built.append(bloom)
+        return bloom
+
+    monkeypatch.setattr(UrlBloom, "build", classmethod(recording_build))
+    eng = run_crawl(spark, fixture_pages, ROOT, use_bloom=True)
     ora = oracle_crawl(page_bodies(), ROOT)
     assert_match(eng, ora)
+    assert built and all(b.n_buckets > 1 for b in built)
+
+
+def test_bloom_path_resume_identical(spark, fixture_pages, tmp_path, monkeypatch):
+    """Bloom path over a store: crash after wave 0, resume with the
+    bloom rebuilt over the RELOADED `processed` — the result equals an
+    uninterrupted plain crawl."""
+    from photon_spark.plans.frontier import UrlBloom
+    from photon_spark.plans.storage import CrawlStore
+
+    builds = []
+    build = UrlBloom.build
+
+    def counting_build(*args, **kwargs):
+        builds.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(UrlBloom, "build", counting_build)
+    full = run_crawl(spark, fixture_pages, ROOT)
+    store = CrawlStore(str(tmp_path / "bloom_store"))
+    assert (
+        run_crawl(
+            spark, fixture_pages, ROOT, store=store, stop_after_wave=0,
+            use_bloom=True,
+        )
+        is None
+    )
+    resumed = run_crawl(
+        spark, fixture_pages, ROOT, store=store, resume=True, use_bloom=True
+    )
+    assert builds  # the resumed waves really took the bloom path
+    assert resumed.to_sets() == full.to_sets()
+    assert resumed.processed_count == full.processed_count
 
 
 def test_span_sequences_byte_equal(spark, fixture_pages):

@@ -271,8 +271,6 @@ def test_sharded_bloom_zero_loss_10m(spark):
     """The 10^10 story's bucketed variant: per-bucket bloom shards over
     bucket(N, xxhash64(url)) must stay EXACT (no lost URLs) at 10^7
     seen keys — sharded result ≡ plain anti-join result."""
-    from photon_spark.plans.frontier import ShardedUrlBloom
-
     seen = spark.range(10_000_000).select(
         F.concat(F.lit("http://h/"), F.col("id")).alias("url")
     )
@@ -280,7 +278,7 @@ def test_sharded_bloom_zero_loss_10m(spark):
     cand = spark.range(9_900_000, 10_100_000).select(
         F.concat(F.lit("http://h/"), F.col("id")).alias("url")
     )
-    sharded = ShardedUrlBloom.build(
+    sharded = UrlBloom.build(
         seen, "url", expected=10_000_000, fpp=0.01, n_buckets=16
     )
     got = {
@@ -295,12 +293,12 @@ def test_sharded_bloom_routes_by_bucket(spark):
     sharded filter equals membership via a per-bucket single filter."""
     import numpy as np
 
-    from photon_spark.plans.frontier import ShardedUrlBloom, _bucket_of
+    from photon_spark.plans.frontier import _bucket_of
 
     seen = spark.range(20_000).select(
         F.concat(F.lit("http://h/"), F.col("id")).alias("url")
     )
-    sharded = ShardedUrlBloom.build(seen, "url", expected=20_000, fpp=0.01, n_buckets=4)
+    sharded = UrlBloom.build(seen, "url", expected=20_000, fpp=0.01, n_buckets=4)
     hashes = np.array(
         [r["h"] for r in seen.select(F.xxhash64("url").alias("h")).collect()],
         dtype=np.int64,
@@ -411,65 +409,6 @@ def test_priority_scoring_orders_budget_selection(spark):
     assert plain2 == {"http://h.test/a/b", "http://h.test/deep/a/b/c/page"}
 
 
-def test_cuckoo_no_false_negatives_and_exact_dedup(spark):
-    """Cuckoo seen-set (north rule's second filter option): every
-    inserted key answers present; the dedup path through it stays
-    EXACT (anti-join backstop absorbs the ~fpp false positives)."""
-    import numpy as np
-
-    from photon_spark.plans.frontier import UrlCuckoo
-
-    seen = spark.range(50_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    ck = UrlCuckoo.build(seen, "url", expected=50_000)
-    hashes = np.array(
-        [r["h"] for r in seen.select(F.xxhash64("url").alias("h")).collect()],
-        dtype=np.int64,
-    )
-    assert ck.might_contain(hashes).all()
-
-    fresh = spark.range(50_000, 150_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    fresh_h = np.array(
-        [r["h"] for r in fresh.select(F.xxhash64("url").alias("h")).collect()],
-        dtype=np.int64,
-    )
-    # 16-bit fingerprints, 2 buckets x 4 slots: fpp ~ 8/2^16 ~ 0.012%
-    assert ck.might_contain(fresh_h).mean() < 0.01
-
-    cand = spark.range(49_000, 51_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    got = {r["url"] for r in dedup_candidates(cand, seen, bloom=ck).collect()}
-    assert got == {f"http://h/{i}" for i in range(50_000, 51_000)}
-
-
-def test_cuckoo_delete_enables_recrawl(spark):
-    """delete() — the capability blooms lack: removing a URL from the
-    seen filter makes it schedulable again."""
-    import numpy as np
-
-    from photon_spark.plans.frontier import UrlCuckoo
-
-    seen = spark.range(1_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    ck = UrlCuckoo.build(seen, "url", expected=1_000)
-    h42 = np.array(
-        [
-            seen.filter(F.col("url") == "http://h/42")
-            .select(F.xxhash64("url").alias("h"))
-            .collect()[0]["h"]
-        ],
-        dtype=np.int64,
-    )
-    assert ck.might_contain(h42).all()
-    assert ck.delete(h42) == 1
-    assert not ck.might_contain(h42).any()
-
-
 def test_canonicalize_parity_random_corpus(spark):
     """JVM ≡ pandas canonicalization over a seeded adversarial corpus:
     random schemes/hosts/ports/paths/fragments/unicode — 300 strings."""
@@ -505,55 +444,6 @@ def test_canonicalize_parity_random_corpus(spark):
     pd_ = [r["url"] for r in canonicalize_urls_pandas(df).collect()]
     mismatches = [(u, a, b) for u, a, b in zip(urls, jvm, pd_) if a != b]
     assert not mismatches, mismatches[:5]
-
-
-def test_sharded_cuckoo_distributed_build_zero_loss(spark):
-    """Distributed cuckoo (per-bucket applyInPandas build, no driver
-    hash collect): no false negatives, exact dedup, routed delete."""
-    import numpy as np
-
-    from photon_spark.plans.frontier import ShardedUrlCuckoo
-
-    seen = spark.range(200_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    ck = ShardedUrlCuckoo.build(seen, "url", expected=200_000, n_buckets=8)
-    hashes = np.array(
-        [r["h"] for r in seen.select(F.xxhash64("url").alias("h")).collect()],
-        dtype=np.int64,
-    )
-    assert ck.might_contain(hashes).all()
-
-    cand = spark.range(195_000, 205_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    got = {r["url"] for r in dedup_candidates(cand, seen, bloom=ck).collect()}
-    assert got == {f"http://h/{i}" for i in range(200_000, 205_000)}
-
-    assert ck.delete(hashes[:100]) == 100
-    assert not ck.might_contain(hashes[:100]).any()
-
-
-def test_sharded_cuckoo_undersized_expected_degrades_not_fails(spark):
-    """A grossly undersized `expected` (or one skewed bucket outgrowing
-    its (expected*2)//n_buckets slice) must NOT raise inside an executor
-    task and kill the crawl wave: the per-bucket builder sizes from the
-    shard's ACTUAL key count and doubles on eviction-cycle failure
-    (r2 ADVICE). The filter stays exact — zero false negatives."""
-    import numpy as np
-
-    from photon_spark.plans.frontier import ShardedUrlCuckoo
-
-    seen = spark.range(50_000).select(
-        F.concat(F.lit("http://h/"), F.col("id")).alias("url")
-    )
-    # expected=64 → per_shard=64 while real shards hold ~6,250 keys each
-    ck = ShardedUrlCuckoo.build(seen, "url", expected=64, n_buckets=8)
-    hashes = np.array(
-        [r["h"] for r in seen.select(F.xxhash64("url").alias("h")).collect()],
-        dtype=np.int64,
-    )
-    assert ck.might_contain(hashes).all()
 
 
 @pytest.mark.slow
