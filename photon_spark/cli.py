@@ -7,10 +7,13 @@ In-scope options map 1:1 to the reference's argparse (photon.py:57-99):
 non-interactive twin of the reference's --headers editor), and
 --seeds-file (the wayback-as-seeds adapter: the reference's --wayback
 feeds archive.org CDX results in as extra seeds — load the same list
-from a file; sources/wayback.py pins the CDX query construction).
-Out of scope (network or interactive plumbing, SURVEY.md §7 M5):
-proxies, --dns, --clone, --update, -t/-d/--timeout (fetch-stage tuning
-replaced by Spark parallelism + per-host budget).
+from a file; sources/wayback.py pins the CDX query construction), and
+-d/--delay and --timeout (photon.py:121-122, applied by the --http
+fetch stage; the reference has no short form of --timeout). Out of
+scope (network or interactive plumbing, SURVEY.md §7 M5): --dns,
+--update, -t/--threads (replaced by Spark parallelism + per-host
+budget; -t stays unbound, so a reference invocation with it fails
+loudly instead of setting something else).
 
 The sandbox "web" is a parquet table of interleaved span documents
 (--pages); in production the fetch join is swapped for the HTTP
@@ -69,6 +72,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="probe each proxy before the crawl and drop dead "
                         "ones (reference photon.py:126-136 is_good_proxy; "
                         "opt-in: needs live internet)")
+    p.add_argument("-d", "--delay", type=float, default=0.0,
+                   help="seconds to sleep before every HTTP request "
+                        "(reference -d, default 0; --http only)")
+    p.add_argument("--timeout", type=float, default=6.0,
+                   help="HTTP request timeout in seconds; a request that "
+                        "takes longer yields no body (reference --timeout, "
+                        "default 6; --http only)")
     p.add_argument("--http", action="store_true",
                    help="fetch via live HTTP (mapInPandas requests stage) instead of "
                         "the --pages table join")
@@ -256,7 +266,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 proxies = good
         fetcher = make_http_fetcher(
             headers=parse_headers(header_lines), cookie=args.cookie,
-            user_agents=uas, proxies=proxies,
+            user_agents=uas, proxies=proxies, delay=args.delay,
+            timeout=args.timeout,
         )
     store = CrawlStore(args.store) if args.store else None
     result = run_crawl(

@@ -38,11 +38,20 @@ from photon_spark.operators.extract import (
 from photon_spark.plans.frontier import UrlBloom, dedup_candidates
 from photon_spark.plans.schedule import schedule_wave
 from photon_spark.plans.storage import STATE_SCHEMAS, CrawlStore
+from photon_spark.session import small_plans
 
 DATASET_NAMES = (
     "files", "intel", "robots", "custom", "failed", "internal",
     "scripts", "external", "fuzzable", "endpoints", "keys",
 )
+
+
+def _internal_after_max(metrics: list[dict], default: float) -> float:
+    """Upper bound on |internal| after the last recorded wave (``default``
+    before any wave). A wave recorded without the bound keeps codegen."""
+    if not metrics:
+        return default
+    return metrics[-1].get("internal_after_max", float("inf"))
 
 
 @dataclass
@@ -75,7 +84,8 @@ class CrawlResult:
         """Collect every dataset — test/CLI helper, not for big runs.
 
         One Spark action: the datasets are collected as one tagged
-        union, not one collect each.
+        union, not one collect each, planned interpreted when the crawl
+        is small (``session.small_plans``).
 
         Guarded: a dataset larger than ``max_rows`` raises instead of
         OOMing the driver (use write_results_table for the scale path).
@@ -83,6 +93,8 @@ class CrawlResult:
         collects at most one row beyond the bound.
         """
         names = list(self.datasets)
+        if not names:
+            return {}
         tagged = None
         for i, name in enumerate(names):
             part = (
@@ -91,9 +103,15 @@ class CrawlResult:
                 .select(F.lit(i).alias("_d"), F.col("value"))
             )
             tagged = part if tagged is None else tagged.unionAll(part)
+        # Small crawls collect interpreted (session.small_plans), sized
+        # by the bound on the final |internal|; the other datasets are
+        # by-products of the same fetched pages.
+        bound = _internal_after_max(self.metrics, self.processed_count)
+        with small_plans(tagged.sparkSession, bound):
+            collected = tagged.collect()
         out: dict[str, set] = {name: set() for name in names}
         rows = [0] * len(names)
-        for d, value in tagged.collect() if tagged is not None else ():
+        for d, value in collected:
             out[names[d]].add(value)
             rows[d] += 1
         for name, n in zip(names, rows):
@@ -308,6 +326,15 @@ def run_crawl(
         processed_count = 1  # the 'dummy' sentinel (Q11)
 
     metrics: list[dict] = list(meta.get("metrics", []))
+    # Row count that decides the next small_plans scope: the seed set
+    # (unknown under sitemap_recursive, whose leaves stay a DataFrame),
+    # or on resume the bound on |internal| after the last recorded wave.
+    if not fresh_start:
+        wave_rows = _internal_after_max(metrics, processed_count)
+    elif cfg.sitemap_recursive:
+        wave_rows = float("inf")
+    else:
+        wave_rows = len(internal0)
 
     # Constant across waves: build the robots-disallow relation once,
     # JVM-only (inline of a literal struct array — no Python leaf).
@@ -386,191 +413,210 @@ def run_crawl(
     for level in range(start_wave, cfg.crawl_level):
         t0 = time.time()
 
-        candidates = trap_filtered(acc["internal"])
-        seen_parts = (
-            store.processed_parts(spark)
-            if store is not None and store.bucket_seen > 0
-            else None
-        )
-        if seen_parts is not None:
-            # Store-backed bucketed rung: the compacted seen base reads
-            # pre-partitioned off bucket files (no exchange on the
-            # |seen| side) and the small post-compaction delta tail is
-            # broadcast — per-wave dedup shuffles only the wave.
-            from photon_spark.plans.frontier import dedup_candidates_parts
-
-            links = dedup_candidates_parts(
-                candidates, seen_parts[0], seen_parts[1], "url"
+        # Each wave plans and runs its actions interpreted while it is
+        # small (session.small_plans): Janino compiles would cost more
+        # CPU than the rows they speed up. Every scope is sized by an
+        # upper bound on the |internal| it reads, known before it opens:
+        # the previous wave's internal_after_max up to the count action,
+        # this wave's |internal| up to the lineage collect, and this
+        # wave's internal_after_max from there on.
+        with small_plans(spark, wave_rows):
+            candidates = trap_filtered(acc["internal"])
+            seen_parts = (
+                store.processed_parts(spark)
+                if store is not None and store.bucket_seen > 0
+                else None
             )
-        else:
-            bloom = None
-            if use_bloom and processed_count > 1:
-                bloom = UrlBloom.build(
-                    acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
+            if seen_parts is not None:
+                # Store-backed bucketed rung: the compacted seen base reads
+                # pre-partitioned off bucket files (no exchange on the
+                # |seen| side) and the small post-compaction delta tail is
+                # broadcast — per-wave dedup shuffles only the wave.
+                from photon_spark.plans.frontier import dedup_candidates_parts
+
+                links = dedup_candidates_parts(
+                    candidates, seen_parts[0], seen_parts[1], "url"
                 )
-            links = dedup_candidates(candidates, acc["processed"], "url", bloom)
-        links = gate_links(links).persist()
-        # ONE driver action for both loop-control counts (|internal| for
-        # the Q25 break, |links| for termination + partition sizing) — a
-        # tagged union instead of two jobs per wave. links materializes
-        # into its persisted cache inside this same job.
-        wave_counts = {
-            r["k"]: r["n"]
-            for r in acc["internal"]
-            .select(F.lit("internal").alias("k"))
-            .unionAll(links.select(F.lit("links").alias("k")))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+            else:
+                bloom = None
+                if use_bloom and processed_count > 1:
+                    bloom = UrlBloom.build(
+                        acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
+                    )
+                links = dedup_candidates(candidates, acc["processed"], "url", bloom)
+            links = gate_links(links).persist()
+            # ONE driver action for both loop-control counts (|internal| for
+            # the Q25 break, |links| for termination + partition sizing) — a
+            # tagged union instead of two jobs per wave. links materializes
+            # into its persisted cache inside this same job.
+            wave_counts = {
+                r["k"]: r["n"]
+                for r in acc["internal"]
+                .select(F.lit("internal").alias("k"))
+                .unionAll(links.select(F.lit("links").alias("k")))
+                .groupBy("k")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
         internal_count = wave_counts.get("internal", 0)
         n = wave_counts.get("links", 0)
+        wave_rows = internal_count  # links ⊆ internal, so n <= internal_count
         if n == 0:
             break
         if internal_count <= processed_count and internal_count > 2 + len(cfg.seeds):
             break  # Q25
 
-        # Partition count scales with the wave: cfg.shuffle_partitions
-        # is the ceiling (the cluster-width knob), but a small wave gets
-        # few partitions — task + Python-worker spin-up would otherwise
-        # dominate tiny waves (the explicit repartition below is exempt
-        # from AQE coalescing, so we size it ourselves).
-        wave_parts = max(1, min(cfg.shuffle_partitions, -(-n // cfg.urls_per_partition)))
-        wave = links.withColumn("level", F.lit(level))
-        if cfg.use_priority:
-            from photon_spark.plans.schedule import priority_score
+        with small_plans(spark, wave_rows):
+            # Partition count scales with the wave: cfg.shuffle_partitions
+            # is the ceiling (the cluster-width knob), but a small wave gets
+            # few partitions — task + Python-worker spin-up would otherwise
+            # dominate tiny waves (the explicit repartition below is exempt
+            # from AQE coalescing, so we size it ourselves).
+            wave_parts = max(1, min(cfg.shuffle_partitions, -(-n // cfg.urls_per_partition)))
+            wave = links.withColumn("level", F.lit(level))
+            if cfg.use_priority:
+                from photon_spark.plans.schedule import priority_score
 
-            wave = priority_score(wave, host_ranks=host_ranks)
-        scheduled = schedule_wave(
-            wave,
-            budget=cfg.per_host_budget,
-            partitions=wave_parts,
-            salts=cfg.host_salts if wave_parts > 1 else 1,
-            host_budgets=host_budgets,
-        ).select("url", "level").persist()
-        fetched = fetch(scheduled)
-        if cfg.nofollow_gate or keep_bodies:
-            # the wave's bodies feed extra consumers (directive parse
-            # and/or the --clone mirror) — persist once; the ext
-            # lineage collect below populates the cache, so a later
-            # read of kept bodies never re-runs the fetch stage
-            fetched = fetched.persist()
-        if keep_bodies:
-            kept_bodies.append(fetched.select("url", "body"))
-        ext = extract_wave(fetched, cfg, main_url)
-        if cfg.nofollow_gate:
-            from photon_spark.operators.extract import html_directives
+                wave = priority_score(wave, host_ranks=host_ranks)
+            scheduled = schedule_wave(
+                wave,
+                budget=cfg.per_host_budget,
+                partitions=wave_parts,
+                salts=cfg.host_salts if wave_parts > 1 else 1,
+                host_budgets=host_budgets,
+            ).select("url", "level").persist()
+            fetched = fetch(scheduled)
+            if cfg.nofollow_gate or keep_bodies:
+                # the wave's bodies feed extra consumers (directive parse
+                # and/or the --clone mirror) — persist once; the ext
+                # lineage collect below populates the cache, so a later
+                # read of kept bodies never re-runs the fetch stage
+                fetched = fetched.persist()
+            if keep_bodies:
+                kept_bodies.append(fetched.select("url", "body"))
+            ext = extract_wave(fetched, cfg, main_url)
+            if cfg.nofollow_gate:
+                from photon_spark.operators.extract import html_directives
 
-            nf = html_directives(fetched).select("url", "nofollow")
-            blank = F.array().cast("array<string>")
-            gated = F.coalesce(F.col("nofollow"), F.lit(False))
-            ext = ext.join(nf, "url", "left")
-            for c in ("internal_new", "external_new", "file_links"):
-                ext = ext.withColumn(
-                    c, F.when(gated, blank).otherwise(F.col(c))
+                nf = html_directives(fetched).select("url", "nofollow")
+                blank = F.array().cast("array<string>")
+                gated = F.coalesce(F.col("nofollow"), F.lit(False))
+                ext = ext.join(nf, "url", "left")
+                for c in ("internal_new", "external_new", "file_links"):
+                    ext = ext.withColumn(
+                        c, F.when(gated, blank).otherwise(F.col(c))
+                    )
+                ext = ext.drop("nofollow")
+            ext = ext.persist()
+
+            # The per-partition lineage collect doubles as (a) ext's cache
+            # materialization (7 delta branches read it next) and (b) the
+            # scheduled-count action: extract emits exactly one row per
+            # scheduled URL, so Σ part counts == |scheduled| — no separate
+            # scheduled.count() job. Budget-capped URLs are deferred, not
+            # dropped: they stay out of `processed`, remain in `internal`,
+            # and re-candidate next wave. (Fusing this collect into the
+            # checkpoint as an extra leg was measured SLOWER: without the
+            # eager materialization the checkpoint's concurrent stages
+            # duplicate the extract compute — see BENCH/BASELINE.md.)
+            # The same job sums the wave's new internal links: |internal|
+            # after the wave is at most internal_count plus that sum.
+            lineage = (
+                ext.groupBy(F.spark_partition_id().alias("pid"))
+                .agg(
+                    F.count(F.lit(1)).alias("count"),
+                    F.sum(F.size("internal_new")).alias("links"),
                 )
-            ext = ext.drop("nofollow")
-        ext = ext.persist()
-
-        # The per-partition lineage collect doubles as (a) ext's cache
-        # materialization (7 delta branches read it next) and (b) the
-        # scheduled-count action: extract emits exactly one row per
-        # scheduled URL, so Σ part counts == |scheduled| — no separate
-        # scheduled.count() job. Budget-capped URLs are deferred, not
-        # dropped: they stay out of `processed`, remain in `internal`,
-        # and re-candidate next wave. (Fusing this collect into the
-        # checkpoint as an extra leg was measured SLOWER: without the
-        # eager materialization the checkpoint's concurrent stages
-        # duplicate the extract compute — see BENCH/BASELINE.md.)
-        part_counts = [
-            (r["pid"], r["count"])
-            for r in ext.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        ]
-        n_sched = sum(c for _, c in part_counts)
-
-        def exploded(col: str, out: str = "value") -> DataFrame:
-            return ext.select(F.explode(col).alias(out))
-
-        # ---- this wave's NEW rows per table (the store commits ONLY
-        # these — append-only snapshots, never a full-state rewrite).
-        # files side-effect is gated on the processed check
-        # (utils.py:40-46): anti-join against processed as of wave start.
-        # The internal delta skips its own distinct on the fast path —
-        # the accumulator merge dropDuplicates right below covers it;
-        # store commits keep it (append files should carry deduped rows).
-        internal_delta = exploded("internal_new", "url")
-        if not fast_path:
-            internal_delta = internal_delta.distinct()
-        delta = {
-            "internal": internal_delta,
-            "external": exploded("external_new", "url").distinct(),
-            "files": exploded("file_links")
-            .join(acc["processed"], F.col("value") == F.col("url"), "left_anti")
-            .distinct(),
-            "bad_intel": ext.select("url", F.explode("intel").alias("i"))
-            .select("url", "i.name", "i.parts", "i.is_tuple")
-            .dropDuplicates(),
-            "bad_scripts": exploded("script_srcs").distinct(),
-            "custom": exploded("custom").distinct(),
-            "keys": exploded("keys").distinct(),
-            "processed": scheduled.select("url"),
-            "waves": scheduled.select("url", "level"),
-        }
-        if store is not None and level == start_wave and fresh_start:
-            # first commit carries the seed state (wave -1 has no dir)
-            delta["internal"] = delta["internal"].unionByName(state["internal"])
-
-        # Only `internal` is deduped per wave — the loop itself reads it
-        # (the Q25 count compares SET sizes, and the anti-join feeds on
-        # it). Every other table is merged as a plain union and deduped
-        # ONCE at dataset construction: a per-wave dropDuplicates chain
-        # replays one shuffle per wave per table every time the final
-        # plan runs (O(waves) shuffles against O(1)).
-        for k in delta:
-            acc[k] = (
-                acc[k].unionByName(delta[k]).dropDuplicates()
-                if k == "internal"
-                else acc[k].unionByName(delta[k])
+                .collect()
             )
+            part_counts = [(r["pid"], r["count"]) for r in lineage]
+            n_sched = sum(c for _, c in part_counts)
+        internal_after_max = internal_count + sum(r["links"] or 0 for r in lineage)
+        wave_rows = internal_after_max
 
-        # ---- snapshot: append-delta commit (resumable) or lineage
-        # truncation.
-        if store is not None:
-            processed_count += n_sched
-            meta = {
-                "processed_count": processed_count,
-                "robots_urls": robots_urls,
-                "disallow_rules": [list(r) for r in disallow_rules],
-                "crawl_delay": crawl_delay,
-                "metrics": metrics,
+        with small_plans(spark, wave_rows):
+            def exploded(col: str, out: str = "value") -> DataFrame:
+                return ext.select(F.explode(col).alias(out))
+
+            # ---- this wave's NEW rows per table (the store commits ONLY
+            # these — append-only snapshots, never a full-state rewrite).
+            # files side-effect is gated on the processed check
+            # (utils.py:40-46): anti-join against processed as of wave start.
+            # The internal delta skips its own distinct on the fast path —
+            # the accumulator merge dropDuplicates right below covers it;
+            # store commits keep it (append files should carry deduped rows).
+            internal_delta = exploded("internal_new", "url")
+            if not fast_path:
+                internal_delta = internal_delta.distinct()
+            delta = {
+                "internal": internal_delta,
+                "external": exploded("external_new", "url").distinct(),
+                "files": exploded("file_links")
+                .join(acc["processed"], F.col("value") == F.col("url"), "left_anti")
+                .distinct(),
+                "bad_intel": ext.select("url", F.explode("intel").alias("i"))
+                .select("url", "i.name", "i.parts", "i.is_tuple")
+                .dropDuplicates(),
+                "bad_scripts": exploded("script_srcs").distinct(),
+                "custom": exploded("custom").distinct(),
+                "keys": exploded("keys").distinct(),
+                "processed": scheduled.select("url"),
+                "waves": scheduled.select("url", "level"),
             }
-            store.commit(level, delta, meta)
-            if cfg.compact_every and (level + 1) % cfg.compact_every == 0:
-                store.compact(spark)
-                store.expire()
-            acc = store.load(spark, level)
-        else:
-            processed_count += n_sched
-            # Truncate the two per-wave-growing lineages in ONE job: a
-            # tagged union checkpointed once, then split by narrow
-            # filters over the cached partitions (two eager
-            # localCheckpoints would be two jobs per wave).
-            tagged = (
-                acc["internal"]
-                .withColumn("_t", F.lit("i"))
-                .unionByName(acc["processed"].withColumn("_t", F.lit("p")))
-                .localCheckpoint(eager=True)
-            )
-            acc["internal"] = tagged.filter(F.col("_t") == "i").drop("_t")
-            acc["processed"] = tagged.filter(F.col("_t") == "p").drop("_t")
+            if store is not None and level == start_wave and fresh_start:
+                # first commit carries the seed state (wave -1 has no dir)
+                delta["internal"] = delta["internal"].unionByName(state["internal"])
+
+            # Only `internal` is deduped per wave — the loop itself reads it
+            # (the Q25 count compares SET sizes, and the anti-join feeds on
+            # it). Every other table is merged as a plain union and deduped
+            # ONCE at dataset construction: a per-wave dropDuplicates chain
+            # replays one shuffle per wave per table every time the final
+            # plan runs (O(waves) shuffles against O(1)).
+            for k in delta:
+                acc[k] = (
+                    acc[k].unionByName(delta[k]).dropDuplicates()
+                    if k == "internal"
+                    else acc[k].unionByName(delta[k])
+                )
+
+            # ---- snapshot: append-delta commit (resumable) or lineage
+            # truncation.
+            if store is not None:
+                processed_count += n_sched
+                meta = {
+                    "processed_count": processed_count,
+                    "robots_urls": robots_urls,
+                    "disallow_rules": [list(r) for r in disallow_rules],
+                    "crawl_delay": crawl_delay,
+                    "metrics": metrics,
+                }
+                store.commit(level, delta, meta)
+                if cfg.compact_every and (level + 1) % cfg.compact_every == 0:
+                    store.compact(spark)
+                    store.expire()
+                acc = store.load(spark, level)
+            else:
+                processed_count += n_sched
+                # Truncate the two per-wave-growing lineages in ONE job: a
+                # tagged union checkpointed once, then split by narrow
+                # filters over the cached partitions (two eager
+                # localCheckpoints would be two jobs per wave).
+                tagged = (
+                    acc["internal"]
+                    .withColumn("_t", F.lit("i"))
+                    .unionByName(acc["processed"].withColumn("_t", F.lit("p")))
+                    .localCheckpoint(eager=True)
+                )
+                acc["internal"] = tagged.filter(F.col("_t") == "i").drop("_t")
+                acc["processed"] = tagged.filter(F.col("_t") == "p").drop("_t")
 
         elapsed = time.time() - t0
         metrics.append(
             {
                 "wave": level,
                 "internal_before": internal_count,
+                "internal_after_max": internal_after_max,
                 "urls_candidates": n,
                 "urls_scheduled": n_sched,
                 "fetched": n_sched,
@@ -594,29 +640,32 @@ def run_crawl(
     fuzzable = empty_vals
     intel = empty_vals
     if not cfg.only_urls:
-        scripts = (
-            acc["bad_scripts"]
-            .select(normalize_scripts_col(F.col("value"), main_url).alias("value"))
-            .filter(F.col("value").isNotNull())
-            .distinct()
-            .persist()
-        )
-        sfetched = fetch(scripts.select(F.col("value").alias("url"), F.lit(-1).alias("level")))
-        endpoints = (
-            extract_endpoints(sfetched)
-            .select(F.explode("endpoints").alias("value"))
-            .distinct()
-        )
-        if fetcher is not None:
-            # endpoints is consumed by multiple downstream actions
-            # (txt writer, counts, exports); without the cache each
-            # action replays the JS second-pass FETCH — a second
-            # network hit per script URL per action. Only under a real
-            # fetcher: the sandbox pages-join recompute is cheap and
-            # the unconditional persist measurably slowed the crawl
-            # loop (~1s/run, r5 A/B probe).
-            endpoints = endpoints.persist()
-        processed_count += scripts.count()
+        # sized by the bound on the final |internal|: the last wave's
+        # internal_after_max, or the counted |internal| after a break
+        with small_plans(spark, wave_rows):
+            scripts = (
+                acc["bad_scripts"]
+                .select(normalize_scripts_col(F.col("value"), main_url).alias("value"))
+                .filter(F.col("value").isNotNull())
+                .distinct()
+                .persist()
+            )
+            sfetched = fetch(scripts.select(F.col("value").alias("url"), F.lit(-1).alias("level")))
+            endpoints = (
+                extract_endpoints(sfetched)
+                .select(F.explode("endpoints").alias("value"))
+                .distinct()
+            )
+            if fetcher is not None:
+                # endpoints is consumed by multiple downstream actions
+                # (txt writer, counts, exports); without the cache each
+                # action replays the JS second-pass FETCH — a second
+                # network hit per script URL per action. Only under a real
+                # fetcher: the sandbox pages-join recompute is cheap and
+                # the unconditional persist measurably slowed the crawl
+                # loop (~1s/run, r5 A/B probe).
+                endpoints = endpoints.persist()
+            processed_count += scripts.count()
 
         fuzzable = (
             acc["internal"].filter(F.col("url").contains("="))

@@ -3,8 +3,21 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+# Below this many rows a plan runs interpreted (small_plans). From the
+# wave-size sweep in SCALE.md §2 (scripts/codegen_sweep.py): waves over
+# up to 1.1e4 URLs ran no slower interpreted, cold JVM or warm; from
+# 1.1e5 the warm compiled wave was faster, and at 1.1e6 both were. The
+# bound sits between, at their geometric mean rounded down.
+CODEGEN_MIN_ROWS = 30_000
+
+_INTERPRETED = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
 
 
 def get_spark(
@@ -18,6 +31,18 @@ def get_spark(
 
     AQE stays on (runtime coalescing + skew-join splitting — SURVEY.md
     §4); Arrow is on because every extractor is a pandas UDF.
+
+    Whole-stage codegen stays on session-wide: the frontier, schedule
+    and registry plans process enough rows to repay their Janino
+    compiles. Turning it off session-wide cost the 75k-URL
+    ``frontier_wave`` benchmark about 6% of its URLs per CPU-second,
+    and about 12% with interpreted expressions too (SCALE.md §2).
+    Exactly two places turn both off, through ``small_plans``: each
+    wave of ``crawl.run_crawl`` and the collect in
+    ``CrawlResult.to_sets``, while their row counts are below
+    ``CODEGEN_MIN_ROWS``. There the compiles cost more CPU than the
+    few rows they speed up: a cold fixture crawl compiled about 190
+    classes for 80 result values.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
     shuffle_partitions = shuffle_partitions or max(8, cores)
@@ -50,6 +75,50 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def small_plans(spark: SparkSession, rows: float):
+    """Plan and run the enclosed actions interpreted when ``rows`` is
+    below ``CODEGEN_MIN_ROWS``: no whole-stage codegen, and expressions
+    evaluated without Janino-compiled projections or predicates. At or
+    above the bound the block runs unchanged.
+
+    Spark reads these confs when an action (or ``persist``) plans its
+    query, so the block must enclose the actions themselves, not just
+    the code that builds the DataFrames. ``spark.conf`` is session-
+    global: for the duration of the block every query planned on this
+    session — from any thread — runs interpreted. The values the
+    session had before come back on exit, exception or not (unset ones
+    are unset again).
+    """
+    if rows >= CODEGEN_MIN_ROWS:
+        yield
+        return
+    conf = spark.conf
+    prior = conf.getAll
+    for key, value in _INTERPRETED.items():
+        conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key in _INTERPRETED:
+            if key in prior:
+                conf.set(key, prior[key])
+            else:
+                conf.unset(key)
+
+
+def janino_compiles(spark: SparkSession) -> tuple[int, float | None]:
+    """(classes compiled, compile milliseconds) by Janino in this JVM so
+    far, from Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``
+    histogram. Cache hits compile nothing and are not counted. The
+    milliseconds sum the histogram's reservoir, exact up to its 1028
+    samples; past that they are None."""
+    hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count = hist.getCount()
+    ms = float(sum(hist.getSnapshot().getValues())) if count <= 1028 else None
+    return count, ms
 
 
 def split_schema(schema: str) -> list[tuple[str, str]]:

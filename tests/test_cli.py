@@ -476,3 +476,97 @@ def test_cli_clone_http_retries_failed_fetch(spark, tmp_path, monkeypatch):
     with open(os.path.join(out_dir, "mirror", mirror_relpath(target)),
               encoding="utf-8") as f:
         assert f.read() == bodies[target]
+
+
+def test_cli_timeout_drops_hung_page(spark, tmp_path, monkeypatch):
+    """--timeout and -d/--delay reach the HTTP fetch stage
+    (reference photon.py:121-122). Over a loopback server, a page that
+    answers only after --timeout yields no body — its outlink is never
+    discovered — and the crawl still completes and writes its output."""
+    import threading
+    import time
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    import photon_spark.cli as cli_mod
+    from fixtures.gen import PAGES_SCHEMA, _spanify
+
+    site = {
+        "/": '<a href="/a.html">a</a>\n<a href="/slow.html">s</a>',
+        "/a.html": '<a href="/b.html">b</a>',
+        "/slow.html": '<a href="/only-from-slow.html">x</a>',
+    }
+    hang_s = 3.0
+
+    class Handler(BaseHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):  # noqa: N802 (http.server API)
+            if self.path == "/slow.html":
+                time.sleep(hang_s)
+            body = site.get(self.path)
+            try:
+                if body is None:
+                    self.send_response(404)
+                    self.send_header("Content-Length", "0")
+                    self.end_headers()
+                    return
+                data = body.encode()
+                self.send_response(200)
+                self.send_header("Content-Type", "text/html")
+                self.send_header("Content-Length", str(len(data)))
+                self.end_headers()
+                self.wfile.write(data)
+            except OSError:
+                pass  # the client gave up on the hung page
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    root = f"http://127.0.0.1:{server.server_address[1]}"
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+
+    seen = {}
+    real_make = cli_mod.make_http_fetcher
+
+    def recording_make(**kw):
+        seen.update(kw)
+        return real_make(**kw)
+
+    monkeypatch.setattr(cli_mod, "make_http_fetcher", recording_make)
+    pages_path = str(tmp_path / "pages_hang.parquet")
+    bodies = {(root + p).rstrip("/"): b for p, b in site.items()}
+    spark.createDataFrame(
+        [{"doc_id": u, "spans": _spanify(u, b)} for u, b in bodies.items()],
+        schema=PAGES_SCHEMA,
+    ).write.parquet(pages_path)
+    out_dir = str(tmp_path / "out_hang")
+    try:
+        rc = cli_mod.main(
+            ["-u", root, "--pages", pages_path, "-o", out_dir, "--http",
+             "--timeout", "0.5", "-d", "0.01", "--partitions", "2", "--salts", "1"],
+            spark=spark,
+        )
+    finally:
+        server.shutdown()
+        server.server_close()
+        thread.join(timeout=5)
+    assert not thread.is_alive()
+    assert rc == 0
+    assert seen["timeout"] == 0.5 and seen["delay"] == 0.01
+    # the crawl equals the oracle's over the site without the hung page
+    del bodies[root + "/slow.html"]
+    want = oracle_crawl(bodies, root, crawl_level=2).datasets["internal"]
+    assert root + "/only-from-slow.html" not in want
+    with open(os.path.join(out_dir, "internal.txt")) as f:
+        assert set(f.read().splitlines()) == want
+
+
+def test_cli_t_is_not_timeout():
+    """The reference's -t is --threads; its timeout has only the long
+    flag. -t stays unbound, so a reference invocation fails loudly."""
+    from photon_spark.cli import build_parser
+
+    args = ["-u", "http://h0.fixture.test", "--pages", "p.parquet"]
+    assert build_parser().parse_args(args + ["--timeout", "0.5"]).timeout == 0.5
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(args + ["-t", "10"])
