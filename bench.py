@@ -217,9 +217,9 @@ def bench_frontier(
         fresh = dedup_candidates(canon, seen, bloom=bloom)
         return schedule_wave(
             # salting factor IS the cluster-width knob: the hot host's
-            # stage-1 cap runs on `salts` partitions, so it must grow
-            # with the executor count or the skewed host serializes the
-            # wave at high parallelism
+            # URLs spread over `salts` output partitions, so it must
+            # grow with the executor count or the skewed host's fetch
+            # partition straggles at high parallelism
             fresh, budget=budget, partitions=parallelism,
             salts=max(8, parallelism)
         ).count()

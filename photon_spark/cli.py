@@ -95,7 +95,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--cores", type=int, default=None, help="local[<cores>] (default: env/4)")
     p.add_argument("--partitions", type=int, default=32, help="shuffle-partition ceiling")
     p.add_argument("--budget", type=int, default=None, help="per-host politeness budget/wave")
-    p.add_argument("--salts", type=int, default=8, help="host-skew salting factor")
+    p.add_argument("--salts", type=int, default=8, help="fetch partitions a hot host spreads over")
     p.add_argument("--respect-robots", action="store_true",
                    help="gate fetches on robots.txt Disallow rules")
     p.add_argument("--robots-agent", default=None, metavar="NAME",

@@ -103,7 +103,7 @@ class EngineConfig:
     # Spark-side knobs (scale levers, not semantics):
     shuffle_partitions: int = 32   # ceiling; waves scale down to size
     urls_per_partition: int = 500  # target wave-partition granularity
-    host_salts: int = 8           # salting factor for skewed hosts
+    host_salts: int = 8           # fetch partitions a hot host spreads over
     bloom_expected: int = 1_000_000
     bloom_fpp: float = 0.01
     # Store maintenance cadence: every K committed waves, rewrite the

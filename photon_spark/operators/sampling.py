@@ -114,10 +114,11 @@ def sample_k_per_group(
     and partitionings, and a row's membership only changes when a
     LOWER-hashed row arrives in its group.
 
-    One group-keyed window; skew note: a group with 10^9 rows
-    serializes its sort on one partition — cap with a two-stage
-    (group, salt) pre-rank (schedule_wave's pattern) when k << group
-    size at that scale.
+    One group-keyed window; skew note: for a literal k ≤ 1000 Spark
+    puts a partial WindowGroupLimit below the group exchange, so no
+    group ships more than k rows per map task. Above that a group with
+    10^9 rows serializes its sort on one partition — cap with a
+    (group, salt) pre-rank when k << group size at that scale.
     """
     from pyspark.sql import Window
 

@@ -160,11 +160,22 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
 
     URLs that don't parse as scheme://host... fall back to fragment
     stripping only (still a stable dedup key).
+
+    Each regex group is extracted once per URL, into a helper column
+    of a first projection: `CollapseProject` does not inline a
+    non-cheap expression its consumer references more than once, so
+    the optimized plan holds 3 `regexp_extract` calls, where inlined
+    groups would give 9. The scheme group is non-empty exactly when
+    `_URL_PARTS` matches, so ``scheme != ''`` is the parse test (NULL
+    for a NULL url, which falls through to the NULL fragment strip).
     """
     url = F.col(url_col)
-    scheme = F.lower(F.regexp_extract(url, _URL_PARTS, 1))
-    host = F.lower(F.regexp_extract(url, _URL_PARTS, 2))
-    rest = F.regexp_extract(url, _URL_PARTS, 3)
+    parts = {
+        "__canon_scheme": F.lower(F.regexp_extract(url, _URL_PARTS, 1)),
+        "__canon_host": F.lower(F.regexp_extract(url, _URL_PARTS, 2)),
+        "__canon_rest": F.regexp_extract(url, _URL_PARTS, 3),
+    }
+    scheme, host, rest = (F.col(c) for c in parts)
     host = F.when(
         (scheme == "http") & host.endswith(":80"),
         F.regexp_replace(host, ":80$", ""),
@@ -173,11 +184,13 @@ def canonicalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
         F.regexp_replace(host, ":443$", ""),
     ).otherwise(host)
     canon = F.concat(scheme, F.lit("://"), host, rest)
-    return df.withColumn(
-        url_col,
-        F.when(url.rlike(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://"), canon).otherwise(
-            F.split(url, "#").getItem(0)
-        ),
+    return (
+        df.withColumns(parts)
+        .withColumn(
+            url_col,
+            F.when(scheme != "", canon).otherwise(F.split(url, "#").getItem(0)),
+        )
+        .drop(*parts)
     )
 
 

@@ -10,9 +10,19 @@ The engine's contract (SURVEY.md §2.3 F3/F4):
   score desc, url)`` ≤ budget. With budget=None this is skipped and the
   engine degenerates to the reference's behavior (Q26).
 * fetch locality: repartition by host so one host's URLs land in one
-  partition (politeness + connection reuse per north_rule); the
-  extract stage instead salts the host key because Zipf-skewed hosts
-  would straggle (SURVEY.md §4 skew).
+  partition (politeness + connection reuse per north_rule); with
+  ``salts`` > 1 the key is (host, salt), which spreads a Zipf-hot host
+  over up to ``salts`` fetch partitions (SURVEY.md §4 skew).
+
+The budget cap is one host window. Hot hosts do not serialize it:
+Spark's InferWindowGroupLimit puts a partial WindowGroupLimit below
+the host exchange, so each map task ships at most ``budget`` rows per
+host and the window sees at most tasks·budget rows for any host. Spark
+does that only for a literal cap ≤
+``spark.sql.optimizer.windowGroupLimitThreshold`` (1000); a larger
+``budget`` or a ``host_budgets`` column cap gets no partial limit, and
+the window task of a host holding more than 1/partitions of the wave
+straggles (SCALE.md §1).
 """
 
 from __future__ import annotations
@@ -213,10 +223,14 @@ def schedule_wave(
 ) -> DataFrame:
     """Apply priority + per-host budget, then host-partition the wave.
 
-    The budget cap runs BEFORE any wide per-host operation so window
-    skew is bounded (SURVEY.md §4). Salting >1 spreads one hot host
-    over `salts` partitions for the extract stage (fetch politeness is
-    then enforced within the UDF per sub-partition budget).
+    The budget cap is one ``row_number()`` window per host, ordered by
+    ``score desc`` (when a score column exists) then ``url asc``. It
+    suffices because Spark caps each host map-side, before the host
+    exchange, for a literal budget ≤ 1000; a larger budget or
+    ``host_budgets`` gets no such cap (module docstring). Salting >1
+    spreads one hot host over `salts` output partitions for the
+    fetch/extract stage (fetch politeness is then enforced within the
+    UDF per sub-partition budget).
 
     ``host_budgets`` — optional (host, host_budget) frame of per-host
     overrides (e.g. robots.txt Crawl-delay converted to a per-wave
@@ -227,10 +241,8 @@ def schedule_wave(
     """
     out = with_host(wave, url_col)
     if budget is not None or host_budgets is not None:
-        order = [
-            F.col("score").desc() if "score" in out.columns else F.lit(0),
-            F.col(url_col).asc(),
-        ]
+        order = [F.col("score").desc()] if "score" in out.columns else []
+        order.append(F.col(url_col).asc())
         if host_budgets is not None:
             out = out.join(
                 F.broadcast(
@@ -244,24 +256,6 @@ def schedule_wave(
             cap = F.lit(budget)
         # NULL cap (no scalar budget, host not listed) means uncapped.
         keep = cap.isNull() | (F.col("_rn") <= cap)
-        if salts > 1:
-            # Two-stage top-k for Zipf-skewed hosts: a single
-            # partitionBy(host) window serializes the hottest host on
-            # one core. Stage 1 caps within (host, salt) — balanced
-            # partitions; any row with global rank ≤ budget also has
-            # salt-local rank ≤ budget, so stage 2's exact global cap
-            # over ≤ salts·budget survivors/host returns the identical
-            # row set to the single-stage window. (The cap is constant
-            # within a host, so the proof is unchanged under per-host
-            # budgets.)
-            salt = F.pmod(F.xxhash64(F.col(url_col)), F.lit(salts))
-            w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-            out = (
-                out.withColumn("_salt", salt)
-                .withColumn("_rn", F.row_number().over(w1))
-                .filter(keep)
-                .drop("_rn", "_salt")
-            )
         w = Window.partitionBy("host").orderBy(*order)
         out = (
             out.withColumn("_rn", F.row_number().over(w))
@@ -679,10 +673,11 @@ def recrawl_schedule(
     Shape at scale: one map-side-combinable groupBy((host, url)) — the
     observation log (the big input) is touched exactly once — then a
     per-host top-k window over the far smaller one-row-per-URL frame.
-    A Zipf-hot host with 10^8 distinct URLs serializes its window task;
-    at that skew, cap with the same two-stage salt trick as
-    schedule_wave (rank ≤ k within (host, salt) first — identical
-    result set, same proof).
+    A Zipf-hot host with 10^8 distinct URLs would serialize its window
+    task; for a literal k ≤ 1000 Spark's partial WindowGroupLimit caps
+    each host map-side first, as in schedule_wave. Above that, a
+    (host, salt) pre-rank (rank ≤ k within each salt, then over host)
+    returns the identical result set.
     """
     n = F.count(F.lit(1))
     last = F.max(F.unix_timestamp(F.col(ts_col)))
@@ -738,9 +733,8 @@ def recrawl_schedule_cold(
     truth) — gate the union on n_obs ≥ 2.
 
     Shape at scale: the hints frame is one row per sitemap-listed URL
-    (no observation log); one window over host partitions — same
-    two-stage salt escape hatch as `recrawl_schedule` if one host
-    lists 10^8 URLs.
+    (no observation log); one window over host partitions — host skew
+    is handled as in `recrawl_schedule` if one host lists 10^8 URLs.
     """
     h = with_host(hints, url_col) if "host" not in hints.columns else hints
     score = (
@@ -801,7 +795,7 @@ def recrawl_schedule_unified(
     free: each source fills its own columns and NULLs the others —
     cheaper than two full-outer joins and still exact because every
     source is url-unique by contract), then the per-host top-k window
-    — same salt escape hatch as `recrawl_schedule` under host skew.
+    — host skew is handled as in `recrawl_schedule`.
     ``freshness``: (url, stale_at_s, freshness_s); ``hints``:
     `sitemap_url_hints` output. Either may be None."""
     spark = observations.sparkSession

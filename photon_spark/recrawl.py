@@ -23,8 +23,9 @@ Scheduling policy per wave w (all integer arithmetic, wave units):
   instead of starving behind a fixed tie-break.
 
 The scored union goes through `plans/schedule.schedule_wave(budget=k)`
-— per-host top-k with the salted two-stage cap, so one Zipf-hot host
-with 10^8 URLs cannot serialize the wave. Scoring itself is ONE
+— one per-host top-k window; for k ≤ 1000 Spark caps each host
+map-side before the host exchange, so one Zipf-hot host with 10^8 URLs
+cannot serialize the wave. Scoring itself is ONE
 map-side-combinable groupBy over the observation log (no window until
 the per-host cap); the log is touched once per wave.
 

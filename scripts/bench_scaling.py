@@ -126,7 +126,7 @@ def main():
         "deduped + politeness-scheduled per second on a synthetic Zipf-skewed",
         "frontier (candidate URLs with non-canonical variants, 30%",
         "seen overlap, 1000 hosts with heavy host-0 skew; per-host budget 1000,",
-        "salted two-stage cap). Wave = URL canonicalization (pure JVM",
+        "one host window, salted fetch repartition). Wave = URL canonicalization (pure JVM",
         "expressions, whole-stage-codegen with the hash) → exact anti-join",
         "dedup vs `seen` → per-host politeness window. Steady state: untimed",
         "warmup, then min of timed waves over repeated rounds in the",
@@ -163,8 +163,8 @@ def main():
         "larger fraction of a shorter wave — a real crawl wave at 10^10",
         "frontier scale is orders of magnitude longer still. The engine's",
         "shuffle structure is identical at both sizes: one anti-join",
-        "exchange + one salted window exchange + one host-cap exchange per",
-        "wave, independent of cluster size. A shuffle-partition sweep (32",
+        "exchange + one host-cap exchange + one salted (host, salt) output",
+        "repartition per wave, independent of cluster size. A shuffle-partition sweep (32",
         "vs 64 vs 128 partitions at local[32], 16M-URL wave: 7.0s / 8.1s /",
         "8.8s) confirms cores-count partitioning is optimal — no plan-shape",
         "change is hiding in the pair sizing.",

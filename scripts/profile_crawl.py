@@ -12,6 +12,10 @@ Crawls:
   fixture      the golden fixture site, full extraction, then to_sets()
   resume_http  the crawl_resume_http benchmark crawl (loopback HTTP into
                a CrawlStore, crashed after wave 0, resumed, write_txt)
+  frontier     the frontier_wave benchmark wave (75k Zipf-skewed URLs:
+               canonicalize, dedup, schedule with budget 1000 and
+               salts=max(8, cores)); 6 untimed warm-up waves, then 8
+               waves each profiled, then their total
 
 Crawls run in the order given, in one JVM: only the first is cold.
 Cores come from SPARK_GRAFT_CPUS (default 4), like get_spark.
@@ -154,7 +158,28 @@ def resume_http(spark) -> None:
             wl.close()
 
 
-CRAWLS = {"big": big, "fixture": fixture, "resume_http": resume_http}
+def frontier(spark) -> None:
+    from perfbench.workloads import FrontierWave
+
+    nproc = int(spark.sparkContext.defaultParallelism)
+    with tempfile.TemporaryDirectory() as tmp:
+        wl = FrontierWave(seed=1, nproc=nproc, tmp=tmp)
+        wl.build(spark)
+        wl.prepare_reference()
+        for _ in range(6):
+            wl.run_once()
+        total = Probe(spark)
+        for i in range(8):
+            probe = Probe(spark)
+            it = wl.run_once()
+            probe.report(f"frontier wave {i} ({it.pages} scheduled, correct={it.ok})")
+        total.report("frontier, 8 waves")
+        wl.generated.unpersist()
+        wl.seen.unpersist()
+
+
+CRAWLS = {"big": big, "fixture": fixture, "resume_http": resume_http,
+          "frontier": frontier}
 
 
 def main() -> None:

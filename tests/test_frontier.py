@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -69,6 +71,44 @@ def test_politeness_budget_caps_per_host(spark):
     got = sorted(r["url"] for r in capped.collect() if r["url"].startswith("http://h0"))
     want = sorted(f"http://h0.test/p{i}" for i in range(30) if i % 3 == 0)[:4]
     assert got == want
+
+
+def test_schedule_wave_plan_one_window_partial_limit(spark):
+    """One host window, and Spark's map-side partial WindowGroupLimit
+    below the host exchange caps every host before the shuffle. Two
+    hash exchanges: the host exchange and the (host, salt) output
+    repartition. If Spark stops inserting the partial limit (it does
+    so only for a literal cap <= windowGroupLimitThreshold, and only
+    over a child with no maxRows bound at or below the cap), a hot
+    host's whole candidate set reaches one window task again; this
+    test then fails."""
+    src = (
+        spark.range(0, 5000, numPartitions=4)
+        .filter(F.col("id") >= 0)
+        .select(
+            F.concat(F.lit("http://h"), (F.col("id") % 7).cast("string"),
+                     F.lit(".test/p"), F.col("id").cast("string")).alias("url")
+        )
+    )
+    plan = (
+        schedule_wave(src, budget=1000, partitions=4, salts=8)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    lines = plan.splitlines()
+    windows = [ln for ln in lines if ln.lstrip("+- :").startswith("Window [")]
+    assert len(windows) == 1, plan
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(" in ln]
+    assert len(exchanges) == 2, plan
+    host_exchange = next(
+        i for i in exchanges if "ENSURE_REQUIREMENTS" in lines[i]
+    )
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    ]
+    assert len(partial) == 1 and partial[0] > host_exchange, plan
+    # no constant sort key when there is no score column
+    assert not re.search(r"[\[ ]0 ASC", plan), plan
 
 
 def test_host_partition_locality(spark):
@@ -360,11 +400,37 @@ def test_canonicalize_jvm_equals_pandas(spark):
         "http://host:80",
         "https://host:443#only-frag",
         "",
+        # the parse guard's boundaries: no url, a scheme that starts
+        # with a digit, an empty host, an upper-case default port
+        None,
+        "1http://x/",
+        "http://",
+        "HTTP://A:80",
     ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    jvm = [r["url"] for r in canonicalize_urls(df).collect()]
+    # other columns keep their values and places around the url
+    df = spark.createDataFrame(
+        [(i, u, "t") for i, u in enumerate(urls)], "id int, url string, tag string"
+    )
+    out = canonicalize_urls(df)
+    assert out.columns == ["id", "url", "tag"]
+    rows = out.collect()
+    assert [(r["id"], r["tag"]) for r in rows] == [(i, "t") for i in range(len(urls))]
+    jvm = [r["url"] for r in rows]
     pd_ = [r["url"] for r in canonicalize_urls_pandas(df).collect()]
     assert jvm == pd_, list(zip(urls, jvm, pd_))
+    assert jvm[-4:] == [None, "1http://x/", "http://", "http://a"]
+
+
+def test_canonicalize_plan_extracts_each_group_once(spark):
+    """Each regex group is evaluated once per URL: the optimized plan
+    holds exactly 3 regexp_extract calls (one per group) and no RLIKE
+    parse guard."""
+    from photon_spark.plans.frontier import canonicalize_urls
+
+    df = spark.range(10).select(F.col("id").cast("string").alias("url"))
+    plan = canonicalize_urls(df)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("regexp_extract(") == 3, plan
+    assert "RLIKE" not in plan, plan
 
 
 def test_host_rank_power_iteration(spark):
@@ -517,7 +583,7 @@ def test_crawl_with_bucketed_seen_store(spark, fixture_pages, tmp_path):
 def test_schedule_wave_per_host_budget_override(spark):
     """host_budgets caps a listed host at its own budget; unlisted
     hosts keep the scalar budget (or stay uncapped when it's None).
-    The salted two-stage path must return the identical row set."""
+    Salting the output repartition must not change the row set."""
     rows = [(f"http://h{i % 3}.test/p{i:02d}",) for i in range(30)]
     df = spark.createDataFrame(rows, "url string")
     hb = spark.createDataFrame([("h0.test", 2)], "host string, host_budget int")
@@ -532,7 +598,7 @@ def test_schedule_wave_per_host_budget_override(spark):
     h0 = sorted(r["url"] for r in got.collect() if "h0" in r["url"])
     assert h0 == ["http://h0.test/p00", "http://h0.test/p03"]
 
-    # salted two-stage ≡ single-stage under per-host budgets
+    # salted repartition ≡ unsalted under per-host budgets
     salted = {
         r["url"] for r in schedule_wave(df, budget=4, host_budgets=hb, salts=4).collect()
     }
