@@ -343,7 +343,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         for v in sorted(result.to_sets().get(args.stdout_set, ())):
             print(v)
 
-    counts = {k: v.count() for k, v in result.datasets.items()}
+    # one Spark job for the whole summary, not one count per dataset
+    counts = dict(result.results.groupBy("dataset").count().collect())
     print(
         "datasets: "
         + ", ".join(f"{k}={n}" for k, n in sorted(counts.items()) if n),

@@ -10,7 +10,7 @@ Constants mirror the reference's semantics contract:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Reference core/config.py:12-27. Tuple order preserved; matching is a
 # plain suffix test with NO leading dot (quirk Q4: '/mapjs' is a "file").
@@ -112,4 +112,3 @@ class EngineConfig:
     # Bounds load()'s file count at deep crawl levels — a 10^4-wave
     # crawl without it reads 10^4 small delta dirs per table.
     compact_every: int = 0
-    extra_datasets: dict = field(default_factory=dict)

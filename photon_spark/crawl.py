@@ -36,9 +36,9 @@ from photon_spark.operators.extract import (
     normalize_scripts_col,
 )
 from photon_spark.plans.frontier import UrlBloom, dedup_candidates
-from photon_spark.plans.schedule import schedule_wave
+from photon_spark.plans.schedule import schedule_wave, with_host
 from photon_spark.plans.storage import STATE_SCHEMAS, CrawlStore
-from photon_spark.session import small_plans
+from photon_spark.session import jvm_empty, small_plans
 
 DATASET_NAMES = (
     "files", "intel", "robots", "custom", "failed", "internal",
@@ -164,24 +164,12 @@ def assemble_intel(bad_intel: DataFrame, external: DataFrame) -> DataFrame:
     return intel.unionByName(promoted).distinct()
 
 
-def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    """Typed empty relation with a pure-JVM plan (session.jvm_empty):
-    createDataFrame([]) builds a Python-parallelize leaf whose scan
-    spins up a Python worker per partition on EVERY downstream action —
-    ~0.5s of fixed cost each time an empty accumulator's lineage
-    replays (measured on the fixture crawl: even `failed`.count() took
-    0.47s)."""
-    from photon_spark.session import jvm_empty
-
-    return jvm_empty(spark, schema)
-
-
 def _urls(spark: SparkSession, urls, colname: str = "url") -> DataFrame:
     """Small in-line URL list as a pure-JVM plan (explode of a literal
-    array — no Python-parallelize leg; see _empty)."""
+    array — no Python-parallelize leg; see session.jvm_empty)."""
     urls = list(urls)
     if not urls:
-        return _empty(spark, f"{colname} string")
+        return jvm_empty(spark, f"{colname} string")
     return spark.range(1).select(
         F.explode(F.array(*[F.lit(u) for u in urls])).alias(colname)
     )
@@ -252,7 +240,12 @@ def run_crawl(
         start_wave = last_wave + 1
         processed_count = meta["processed_count"]
         robots_urls = meta["robots_urls"]
-        disallow_rules = [tuple(r) for r in meta.get("disallow_rules", [])]
+        # stores written before the rules lost their host field hold
+        # [netloc, prefix] pairs; the host is main_url's either way
+        disallow_rules = [
+            r[-1] if isinstance(r, list) else r
+            for r in meta.get("disallow_rules", [])
+        ]
         crawl_delay = meta.get("crawl_delay")
     else:
         if store is not None:
@@ -272,8 +265,6 @@ def run_crawl(
 
         robots_body = special.get(main_url + "/robots.txt", DUMMY)
         robots_urls = [main_url + p for p in K.robots_paths(robots_body)]
-        from urllib.parse import urlparse
-
         if cfg.robots_agent is not None:
             # RFC 9309 group selection: gate + delay from the
             # most-specific User-agent group for this crawler
@@ -281,22 +272,18 @@ def run_crawl(
                 robots_body, cfg.robots_agent
             )
             disallow_rules = [
-                (urlparse(main_url).netloc, p)
-                for rule, p in group_rules
-                if rule == "disallow" and p
+                p for rule, p in group_rules if rule == "disallow" and p
             ]
             crawl_delay = group_delay
         else:
             disallow_rules = [
-                (urlparse(main_url).netloc, p)
-                for rule, p in K.robots_rules(robots_body)
-                if rule == "disallow"
+                p for rule, p in K.robots_rules(robots_body) if rule == "disallow"
             ]
             crawl_delay = K.robots_crawl_delay(robots_body)
         sitemap_urls = K.sitemap_locs(special.get(main_url + "/sitemap.xml", DUMMY))
 
         internal0 = set(cfg.seeds) | {main_url} | set(robots_urls) | set(sitemap_urls)
-        state = {name: _empty(spark, sch) for name, sch in STATE_SCHEMAS.items()}
+        state = {name: jvm_empty(spark, sch) for name, sch in STATE_SCHEMAS.items()}
         state["internal"] = _urls(spark, sorted(internal0))
         if cfg.sitemap_recursive:
             # opt-in beyond-reference seeding: walk <sitemapindex>
@@ -337,18 +324,16 @@ def run_crawl(
         wave_rows = len(internal0)
 
     # Constant across waves: build the robots-disallow relation once,
-    # JVM-only (inline of a literal struct array — no Python leaf).
+    # JVM-only (explode of a literal array — no Python leaf). Its host,
+    # like the Crawl-delay row's below, is with_host of the root URL:
+    # the expression robots_gate and schedule_wave match on (a root with
+    # a port keeps no port in that key).
+    root = spark.range(1).select(F.lit(main_url).alias("url"))
     disallows = None
     if cfg.respect_robots and disallow_rules:
-        disallows = spark.range(1).select(
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(F.lit(h).alias("host"), F.lit(p).alias("prefix"))
-                        for h, p in disallow_rules
-                    ]
-                )
-            )
+        disallows = with_host(root).select(
+            "host",
+            F.explode(F.array(*[F.lit(p) for p in disallow_rules])).alias("prefix"),
         )
 
     # Constant across waves: robots.txt Crawl-delay → per-wave budget
@@ -358,14 +343,11 @@ def run_crawl(
     # the schedule (one row per crawled host — no exchange).
     host_budgets = None
     if cfg.respect_robots and cfg.crawl_delay_window and crawl_delay:
-        from urllib.parse import urlparse as _urlparse
-
         delay_budget = max(1, int(cfg.crawl_delay_window // crawl_delay))
         if cfg.per_host_budget is not None:
             delay_budget = min(delay_budget, cfg.per_host_budget)
-        host_budgets = spark.range(1).select(
-            F.lit(_urlparse(main_url).netloc).alias("host"),
-            F.lit(delay_budget).alias("host_budget"),
+        host_budgets = with_host(root).select(
+            "host", F.lit(delay_budget).alias("host_budget")
         )
 
     # Accumulators start from loaded state; per-wave pieces are unioned in.
@@ -587,7 +569,7 @@ def run_crawl(
                 meta = {
                     "processed_count": processed_count,
                     "robots_urls": robots_urls,
-                    "disallow_rules": [list(r) for r in disallow_rules],
+                    "disallow_rules": disallow_rules,
                     "crawl_delay": crawl_delay,
                     "metrics": metrics,
                 }
@@ -634,7 +616,7 @@ def run_crawl(
 
     # ------------------------------------------------------------------
     # Post-loop stages (photon.py:332-368), all skipped under only_urls.
-    empty_vals = _empty(spark, "value string")
+    empty_vals = jvm_empty(spark, "value string")
     scripts = empty_vals
     endpoints = empty_vals
     fuzzable = empty_vals

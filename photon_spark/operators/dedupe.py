@@ -37,35 +37,16 @@ def shingles_col(text, k: int = SHINGLE_WORDS):
     )
 
 
-def minhash_signature(text, n_hashes: int = MINHASHES):
-    """Array of n lexicographic-min md5(seed|shingle) hex strings.
-
-    min over hex strings == min over uniform 128-bit ints, and md5 is
-    identical in Spark and DuckDB — the oracle reproduces this exactly.
-
-    NOTE: prefer `minhash_signatures` (exploded-agg form) on real data —
-    this expression form re-evaluates the shingle array per hash and
-    produces a whole-stage-codegen blob that scales badly with
-    n_hashes. Kept for tiny inputs and as the semantics reference.
-    """
-    sh = shingles_col(text)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(sh, lambda s: F.md5(F.concat_ws("|", F.lit(str(i)), s)))
-            )
-            for i in range(n_hashes)
-        ]
-    )
-
-
 def minhash_signatures(documents: DataFrame, n_hashes: int = MINHASHES) -> DataFrame:
     """(doc_id, h0..h{n-1}) minhash signature via explode + groupBy-min.
 
     Scale path: shingling is a narrow flat-map; the min-per-hash
     aggregation partial-aggregates map-side, so the shuffle carries at
-    most |docs|·n_hashes tiny rows — not |docs|·|shingles|. Values are
-    bit-identical to `minhash_signature` (same md5('i|shingle') family).
+    most |docs|·n_hashes tiny rows — not |docs|·|shingles|.
+
+    h_i is the lexicographic-min md5('i|shingle') hex string: min over
+    hex strings == min over uniform 128-bit ints, and md5 is identical
+    in Spark and DuckDB, so the oracle reproduces it exactly.
     """
     src = documents.select("doc_id", "text")
     # the n_hashes×|shingles| md5s evaluate in the map-side partial

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,11 +52,65 @@ def _final_ckpt(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFram
     return df.sparkSession.read.parquet(path)
 
 
+def _host_of(url: Column) -> Column:
+    """with_host's host expression, for use inside a select."""
+    return F.coalesce(F.parse_url(url, F.lit("HOST")), url)
+
+
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Host column via parse_url; unparseable URLs fall back to the raw
     string (still a stable partition key)."""
-    return df.withColumn(
-        "host", F.coalesce(F.parse_url(F.col(url_col), F.lit("HOST")), F.col(url_col))
+    return df.withColumn("host", _host_of(F.col(url_col)))
+
+
+def _round6(c: Column) -> Column:
+    """Floor-round at 1e-6: the dialect-stable rounding of the oracled
+    scores (see host_rank)."""
+    return F.floor(c * 1e6 + 0.5) / 1e6
+
+
+def _state_hint(broadcast_state: bool):
+    """Join hint for a |hosts|-row state vector: a broadcast, or none
+    past broadcast size so AQE picks the strategy (see host_rank)."""
+    return F.broadcast if broadcast_state else (lambda df: df)
+
+
+def _nodes(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Node set (host) of a directed edge frame."""
+    return (
+        edges.select(F.col(src_col).alias("host"))
+        .unionByName(edges.select(F.col(dst_col).alias("host")))
+        .distinct()
+    )
+
+
+def _host_graph(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Distinct directed (src, dst) edges and their node set (host)."""
+    e = edges.select(
+        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+    ).distinct()
+    return e, _nodes(e, "src", "dst")
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Distinct undirected edges (u < v) with self-loops dropped."""
+    s, d = F.col(src_col), F.col(dst_col)
+    return (
+        edges.filter(s != d)
+        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(host, degree) over an undirected (u, v) edge set."""
+    return (
+        und.select(F.col("u").alias("host"))
+        .unionAll(und.select(F.col("v").alias("host")))
+        .groupBy("host")
+        .agg(F.count("*").alias("degree"))
     )
 
 
@@ -300,6 +354,11 @@ def host_rank(
     frontier (10^7 hosts for a 10^10 frontier), so a few rounds of
     host-keyed shuffles are cheap relative to one frontier wave.
 
+    It is the uniform-teleport case of the one power iteration
+    (:func:`_pagerank`) that :func:`trust_rank` personalizes:
+    host_rank(e) equals trust_rank(e, <every node>) row for row, while
+    host_rank's teleport stays a literal with no seed join.
+
     Returns (host, rank) with rank floor-rounded at 1e-6 — the
     dialect-stable rounding used across the oracled queries (sums of
     doubles are order-dependent at the last ulp; rounding far above it
@@ -314,23 +373,49 @@ def host_rank(
     of OOMing the executors. Results are identical either way
     (test_graph_sampling::test_broadcast_state_off_parity).
     """
-    _b = F.broadcast if broadcast_state else (lambda df: df)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    e, nodes = _host_graph(edges, src_col, dst_col)
+    nodes = nodes.persist()
     n_hosts = nodes.count()  # bounded scalar; also materializes the cache
-    ranks = nodes.select("host", (F.lit(1.0) / F.lit(float(n_hosts))).alias("rank"))
+    return _pagerank(
+        e,
+        nodes,
+        init=F.lit(1.0) / F.lit(float(n_hosts)),
+        teleport=F.lit((1.0 - damping) / float(n_hosts)),  # = SQL twin
+        iters=iters,
+        damping=damping,
+        broadcast_state=broadcast_state,
+        out_col="rank",
+        checkpoint_dir=checkpoint_dir,
+        tag="host_rank",
+    )
+
+
+def _pagerank(
+    e: DataFrame,
+    nodes: DataFrame,
+    init: Column,
+    teleport: Column,
+    iters: int,
+    damping: float,
+    broadcast_state: bool,
+    out_col: str,
+    checkpoint_dir: str | None,
+    tag: str,
+) -> DataFrame:
+    """The power iteration shared by host_rank (uniform teleport) and
+    trust_rank (teleport on the seeds only): ``iters`` rounds of
+    rank = teleport + damping · Σ in-neighbor rank/out-degree, from the
+    ``init`` vector. ``e`` is the distinct edge set, ``nodes`` the
+    persisted node frame (``init`` and ``teleport`` may read its
+    columns). Returns (host, out_col) floor-rounded at 1e-6 and
+    checkpointed under ``tag``; both loop caches are released."""
+    _b = _state_hint(broadcast_state)
+    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # the loop references the edge+degree join and the node set once
     # per round: persist them so the distinct/degree shuffles run once
     # instead of O(iters) times when the final single action fires
     ew = e.join(outdeg, "src").persist()
+    ranks = nodes.select("host", init.alias("rank"))
     # The rank vector is |hosts| rows — orders of magnitude below the
     # edge set — so it rides the loop as a BROADCAST side: each round
     # is map-side join + one host-keyed partial-agg shuffle, and the
@@ -344,19 +429,14 @@ def host_rank(
             .groupBy("host")
             .agg(F.sum("c").alias("c"))
         )
-        base = (1.0 - damping) / float(n_hosts)  # one IEEE div, = SQL twin
         ranks = nodes.join(_b(contrib), "host", "left").select(
             "host",
-            (
-                F.lit(base) + damping * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("rank"),
+            (teleport + damping * F.coalesce(F.col("c"), F.lit(0.0))).alias("rank"),
         )
     out = _final_ckpt(
-        ranks.select(
-            "host", (F.floor(F.col("rank") * 1e6 + 0.5) / 1e6).alias("rank")
-        ),
+        ranks.select("host", _round6(F.col("rank")).alias(out_col)),
         checkpoint_dir,
-        "host_rank",
+        tag,
     )
     # the checkpoint truncates lineage, so the loop caches can be
     # released here instead of leaking into the shared session (the
@@ -385,11 +465,11 @@ def trust_rank(
     host_rank's topic-blind authority (a farm can fake in-links, it
     cannot fake a path from a trusted seed).
 
-    Same declarative power iteration as :func:`host_rank` (broadcast
-    rank vector, one host-keyed partial-agg shuffle per round); the two
-    differences are the personalized teleport — base mass
-    (1-damping)/|seeds| lands ONLY on seed hosts — and the seed-uniform
-    initial vector. Seeds are dimension-sized by construction (a vetted
+    The same power iteration as :func:`host_rank` — one shared loop,
+    :func:`_pagerank` (broadcast rank vector, one host-keyed partial-agg
+    shuffle per round); the two differences are the personalized
+    teleport — base mass (1-damping)/|seeds| lands ONLY on seed hosts —
+    and the seed-uniform initial vector. Seeds are dimension-sized by construction (a vetted
     list), so the membership flag rides a broadcast left join onto the
     node set. Hosts unreachable from every seed end at exactly 0.
 
@@ -399,15 +479,9 @@ def trust_rank(
     False past ~10^8 hosts; the SEED join stays broadcast either way —
     a vetted seed list is dimension-sized by construction).
     """
-    _b = F.broadcast if broadcast_state else (lambda df: df)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e, nodes = _host_graph(edges, src_col, dst_col)
     nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .join(
+        nodes.join(
             F.broadcast(
                 seeds.select(F.col(seed_col).alias("host")).distinct()
                 .withColumn("_s", F.lit(True))
@@ -427,43 +501,22 @@ def trust_rank(
         )
         nodes.unpersist()
         return out
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ew = e.join(outdeg, "src").persist()
-    seed_mass = F.when(
-        F.col("is_seed"), F.lit((1.0 - damping) / float(n_seeds))
-    ).otherwise(F.lit(0.0))
-    ranks = nodes.select(
-        "host",
-        F.when(F.col("is_seed"), F.lit(1.0 / float(n_seeds)))
-        .otherwise(F.lit(0.0))
-        .alias("rank"),
-    )
-    for _ in range(iters):
-        contrib = (
-            ew.join(_b(ranks), ew["src"] == ranks["host"])
-            .select(
-                F.col("dst").alias("host"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("host")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = nodes.join(_b(contrib), "host", "left").select(
-            "host",
-            (
-                seed_mass + damping * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    out = _final_ckpt(
-        ranks.select(
-            "host", (F.floor(F.col("rank") * 1e6 + 0.5) / 1e6).alias("trust")
+    return _pagerank(
+        e,
+        nodes,
+        init=F.when(F.col("is_seed"), F.lit(1.0 / float(n_seeds))).otherwise(
+            F.lit(0.0)
         ),
-        checkpoint_dir,
-        "trust_rank",
+        teleport=F.when(
+            F.col("is_seed"), F.lit((1.0 - damping) / float(n_seeds))
+        ).otherwise(F.lit(0.0)),
+        iters=iters,
+        damping=damping,
+        broadcast_state=broadcast_state,
+        out_col="trust",
+        checkpoint_dir=checkpoint_dir,
+        tag="trust_rank",
     )
-    nodes.unpersist()
-    ew.unpersist()
-    return out
 
 
 def hits_scores(
@@ -496,16 +549,9 @@ def hits_scores(
     """
     if int(iters) < 1:
         raise ValueError("iters must be >= 1")
-    _b = F.broadcast if broadcast_state else (lambda df: df)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .persist()
-    )
+    _b = _state_hint(broadcast_state)
+    e, nodes = _host_graph(edges, src_col, dst_col)
+    e, nodes = e.persist(), nodes.persist()
     nodes.count()  # materialize both caches before the loop reuses them
     hub = nodes.select("host", F.lit(1).cast("bigint").alias("h"))
     auth = None
@@ -1277,11 +1323,13 @@ def opic_scores(
     all (photon.py:91-100 walks levels and exits), so this is engine
     surface, not parity.
 
-    Declarative: `rounds` unrolled cash-flow steps, each ONE host-keyed
-    partial-agg shuffle (contributions) plus a 1-row dangling-mass
-    aggregate that rides a crossJoin broadcast — NO driver action per
-    round (the dangling total stays a lazy 1-row frame; only the node
-    count is collected once, the same bounded scalar as host_rank).
+    Declarative: `rounds` unrolled cash-flow steps — the step
+    :func:`opic_update` runs once (:func:`_opic_step`) — each ONE
+    host-keyed partial-agg shuffle (contributions) plus a 1-row
+    dangling-mass aggregate that rides a crossJoin broadcast — NO
+    driver action per round (the dangling total stays a lazy 1-row
+    frame; only the node count is collected once, the same bounded
+    scalar as host_rank).
     The state vector CARRIES the static out-degree (null = dangling),
     so the per-round dangling mass is a scan-filter aggregate over
     state — no join — and the contribution join needs no separate
@@ -1297,28 +1345,13 @@ def opic_scores(
     :func:`host_rank` (pass False past ~10^8 hosts); the 1-row
     dangling-mass frame stays broadcast either way.
     """
-    _b = F.broadcast if broadcast_state else (lambda df: df)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    _b = _state_hint(broadcast_state)
+    e, nodes = _host_graph(edges, src_col, dst_col)
+    nodes = nodes.persist()
     n_hosts = nodes.count()  # bounded scalar; also materializes the cache
     e = e.persist()
-    # state carries (host, deg-or-null, cash, hist): null deg marks a
-    # dangling host whose cash is redistributed uniformly
-    state = nodes.join(
-        _b(outdeg.withColumnRenamed("src", "host")), "host", "left"
-    ).select(
-        "host",
-        "deg",
-        (F.lit(1.0) / F.lit(float(n_hosts))).alias("cash"),
-        F.lit(0.0).alias("hist"),
+    state = _opic_state(
+        e, nodes, F.lit(1.0) / F.lit(float(n_hosts)), F.lit(0.0), _b
     )
     # each round's state is consumed by THREE subtrees (contribution
     # join, dangling aggregate, next-state join); persist the
@@ -1327,42 +1360,13 @@ def opic_scores(
     # consumer — all released after the eager checkpoint below
     rounds_cached = [state.persist()]
     for _ in range(int(rounds)):
-        contrib = (
-            e.join(_b(state), e["src"] == state["host"])
-            .select(
-                F.col("dst").alias("host"),
-                (F.col("cash") / F.col("deg")).alias("c"),
-            )
-            .groupBy("host")
-            .agg(F.sum("c").alias("c"))
-        )
-        dang = state.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("cash"), F.lit(0.0)).alias("d")
-        )
-        state = (
-            state.join(_b(contrib), "host", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "host",
-                "deg",
-                (
-                    F.coalesce(F.col("c"), F.lit(0.0))
-                    + F.col("d") / F.lit(float(n_hosts))
-                ).alias("cash"),
-                (F.col("hist") + F.col("cash")).alias("hist"),
-            )
-        )
+        state = _opic_step(e, state, n_hosts, _b)
         rounds_cached.append(state.persist())
     total = float(rounds) + 1.0
     out = _final_ckpt(
         state.select(
             "host",
-            (
-                F.floor(
-                    (F.col("hist") + F.col("cash")) / F.lit(total) * 1e6 + 0.5
-                )
-                / 1e6
-            ).alias("opic"),
+            _round6((F.col("hist") + F.col("cash")) / F.lit(total)).alias("opic"),
         ),
         checkpoint_dir,
         "opic_scores",
@@ -1372,6 +1376,51 @@ def opic_scores(
     for s in rounds_cached:
         s.unpersist()
     return out
+
+
+def _opic_state(
+    e: DataFrame, hosts: DataFrame, cash: Column, hist: Column, _b
+) -> DataFrame:
+    """OPIC state (host, deg, cash, hist) over ``hosts``: the static
+    out-degree rides the state row (null = dangling), so the per-round
+    dangling mass is a scan-filter aggregate, not a join."""
+    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    return hosts.join(
+        _b(outdeg.withColumnRenamed("src", "host")), "host", "left"
+    ).select("host", "deg", cash.alias("cash"), hist.alias("hist"))
+
+
+def _opic_step(e: DataFrame, state: DataFrame, n: int, _b) -> DataFrame:
+    """One OPIC cash-flow round over (host, deg, cash, hist): each host
+    spends its cash over its out-links, dangling cash spreads uniformly
+    over all ``n`` hosts, and the spent cash is banked into hist. ONE
+    host-keyed partial-agg shuffle (contributions) plus the 1-row
+    dangling total as a crossJoin broadcast — no driver action. Shared
+    by :func:`opic_scores`' loop and :func:`opic_update`."""
+    contrib = (
+        e.join(_b(state), e["src"] == state["host"])
+        .select(
+            F.col("dst").alias("host"),
+            (F.col("cash") / F.col("deg")).alias("c"),
+        )
+        .groupBy("host")
+        .agg(F.sum("c").alias("c"))
+    )
+    dang = state.filter(F.col("deg").isNull()).agg(
+        F.coalesce(F.sum("cash"), F.lit(0.0)).alias("d")
+    )
+    return (
+        state.join(_b(contrib), "host", "left")
+        .crossJoin(F.broadcast(dang))
+        .select(
+            "host",
+            "deg",
+            (
+                F.coalesce(F.col("c"), F.lit(0.0)) + F.col("d") / F.lit(float(n))
+            ).alias("cash"),
+            (F.col("hist") + F.col("cash")).alias("hist"),
+        )
+    )
 
 
 def shark_relevance(
@@ -1418,8 +1467,8 @@ def shark_relevance(
     )
     return frontier.select(
         F.col(url_col).alias("url"),
-        (F.floor(sim * 1e6 + 0.5) / 1e6).alias("anchor_sim"),
-        (F.floor(score * 1e6 + 0.5) / 1e6).alias("score"),
+        _round6(sim).alias("anchor_sim"),
+        _round6(score).alias("score"),
     )
 
 
@@ -1472,10 +1521,9 @@ def spam_mass(
         "host",
         F.col("rank").alias("pr"),
         "trust",
-        (
-            F.floor((F.col("rank") - F.col("trust")) / F.col("rank") * 1e6 + 0.5)
-            / 1e6
-        ).alias("spam_mass"),
+        _round6((F.col("rank") - F.col("trust")) / F.col("rank")).alias(
+            "spam_mass"
+        ),
     )
 
 
@@ -1491,14 +1539,8 @@ def opic_init(
     exactly n * (1/n); hist starts at 0. `checkpoint_dir` /
     `checkpoint_tag` park the state in reliable storage (see
     :func:`_final_ckpt`) — tag it like the updates (e.g. wave 0)."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    )
+    # straight off the edges: no distinct edge set, so no extra shuffle
+    nodes = _nodes(edges, src_col, dst_col)
     n = nodes.count()  # bounded scalar
     return _final_ckpt(
         nodes.select(
@@ -1532,9 +1574,10 @@ def opic_update(
     same static graph t times reproduces opic_scores(rounds=t) —
     pytest-pinned.
 
-    Same per-round shape as the batch loop: ONE host-keyed partial-agg
-    shuffle for contributions, the dangling total as a 1-row crossJoin
-    broadcast, the state vector broadcast into the edge join. The
+    The round is the batch loop's own step (:func:`_opic_step`): ONE
+    host-keyed partial-agg shuffle for contributions, the dangling
+    total as a 1-row crossJoin broadcast, the state vector broadcast
+    into the edge join. The
     returned frame is eagerly checkpointed so per-wave lineage stays
     O(1) across an arbitrarily long crawl (the same contract as the
     batch operator and dup_components). `broadcast_state` gates the
@@ -1548,55 +1591,17 @@ def opic_update(
     update into the same tag would overwrite the parquet the input
     state is still being scanned from mid-job.
     """
-    _b = F.broadcast if broadcast_state else (lambda df: df)
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    hosts = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # (host, deg-or-null, cash, hist) — deg folded into the state row
-    # exactly as in the batch loop, so the dangling mass is a
-    # scan-filter aggregate, not a join
-    full = (
-        hosts.join(state, "host", "full")
-        .join(_b(outdeg.withColumnRenamed("src", "host")), "host", "left")
-        .select(
-            "host",
-            "deg",
-            F.coalesce(F.col("cash"), F.lit(0.0)).alias("cash"),
-            F.coalesce(F.col("hist"), F.lit(0.0)).alias("hist"),
-        )
-        .persist()
-    )
+    _b = _state_hint(broadcast_state)
+    e, hosts = _host_graph(edges, src_col, dst_col)
+    full = _opic_state(
+        e,
+        hosts.join(state, "host", "full"),
+        F.coalesce(F.col("cash"), F.lit(0.0)),
+        F.coalesce(F.col("hist"), F.lit(0.0)),
+        _b,
+    ).persist()
     n = full.count()  # bounded scalar; materializes the cache
-    contrib = (
-        e.join(_b(full), F.col("src") == full["host"])
-        .select(
-            F.col("dst").alias("host"),
-            (F.col("cash") / F.col("deg")).alias("c"),
-        )
-        .groupBy("host")
-        .agg(F.sum("c").alias("c"))
-    )
-    dang = full.filter(F.col("deg").isNull()).agg(
-        F.coalesce(F.sum("cash"), F.lit(0.0)).alias("d")
-    )
-    out = (
-        full.join(_b(contrib), "host", "left")
-        .crossJoin(F.broadcast(dang))
-        .select(
-            "host",
-            (
-                F.coalesce(F.col("c"), F.lit(0.0))
-                + F.col("d") / F.lit(float(n))
-            ).alias("cash"),
-            (F.col("hist") + F.col("cash")).alias("hist"),
-        )
-    )
+    out = _opic_step(e, full, n, _b).drop("deg")
     out = _final_ckpt(out, checkpoint_dir, checkpoint_tag)
     full.unpersist()
     return out
@@ -1641,13 +1646,10 @@ def link_signals(
     dom = lambda c: F.array_join(  # noqa: E731
         F.slice(F.split(c, "\\."), -2, 2), "."
     )
-    host = lambda c: F.coalesce(  # noqa: E731
-        F.parse_url(c, F.lit("HOST")), c
-    )
     pairs = (
         edges.select(
-            host(F.col(src_col)).alias("src_host"),
-            host(F.col(dst_col)).alias("dst_host"),
+            _host_of(F.col(src_col)).alias("src_host"),
+            _host_of(F.col(dst_col)).alias("dst_host"),
         )
         .filter(F.col("src_host") != F.col("dst_host"))
         .groupBy("src_host", "dst_host")
@@ -2013,18 +2015,8 @@ def host_triangles(
     Output: one row per host — (host, degree, n_triangles, cc_ppm);
     degree-0/1 hosts report cc_ppm 0.
     """
-    s, d = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("host"))
-        .unionAll(und.select(F.col("v").alias("host")))
-        .groupBy("host")
-        .agg(F.count("*").alias("degree"))
-    )
+    und = _undirected(edges, src_col, dst_col)
+    deg = _degrees(und)
     w = Window.orderBy(F.col("degree").asc(), F.col("host").asc())
     nodes = deg.select(
         "host", "degree", F.row_number().over(w).alias("rk")
@@ -2100,23 +2092,10 @@ def kcore_peel(
     Per round: one map-side-combinable degree agg + two semi-joins.
     Output: (host, degree) of the surviving subgraph.
     """
-    s, d = F.col(src_col), F.col(dst_col)
-    cur = (
-        edges.filter(s != d)
-        .select(F.least(s, d).alias("u"), F.greatest(s, d).alias("v"))
-        .distinct()
-    )
-
-    def degrees(e: DataFrame) -> DataFrame:
-        return (
-            e.select(F.col("u").alias("host"))
-            .unionAll(e.select(F.col("v").alias("host")))
-            .groupBy("host")
-            .agg(F.count("*").alias("degree"))
-        )
+    cur = _undirected(edges, src_col, dst_col)
 
     def peel(e: DataFrame) -> DataFrame:
-        keep = degrees(e).filter(F.col("degree") >= k).select("host")
+        keep = _degrees(e).filter(F.col("degree") >= k).select("host")
         return e.join(
             keep.withColumnRenamed("host", "u"), "u", "left_semi"
         ).join(keep.withColumnRenamed("host", "v"), "v", "left_semi")
@@ -2129,7 +2108,7 @@ def kcore_peel(
             cur = _final_ckpt(
                 peel(cur), checkpoint_dir, f"{checkpoint_tag}-{i % 2}"
             )
-        return degrees(cur)
+        return _degrees(cur)
 
     cur = _final_ckpt(cur, checkpoint_dir, f"{checkpoint_tag}-0")
     n_prev = cur.count()
@@ -2140,7 +2119,7 @@ def kcore_peel(
         if n_next == n_prev:
             break
         n_prev = n_next
-    return degrees(cur)
+    return _degrees(cur)
 
 
 def cocitation_pairs(
@@ -2171,11 +2150,10 @@ def cocitation_pairs(
     Output: (host_a, host_b, n_common, cocite_ppm) for pairs with
     ``min_common`` + shared linkers, host_a < host_b.
     """
-    host = lambda c: F.coalesce(  # noqa: E731
-        F.parse_url(F.col(c), F.lit("HOST")), F.col(c)
-    )
     hp = (
-        edges.select(host(src_col).alias("s"), host(dst_col).alias("d"))
+        edges.select(
+            _host_of(F.col(src_col)).alias("s"), _host_of(F.col(dst_col)).alias("d")
+        )
         .filter(F.col("s") != F.col("d"))
         .groupBy("s")
         .agg(F.array_sort(F.collect_set("d")).alias("ds"))
@@ -2244,11 +2222,10 @@ def latency_aware_delay(
     floor-rounded (length_percentile_gate precedent), then an integer
     floor×clamp — cross-engine exact end to end.
     """
-    r6 = lambda c: F.floor(c * 1000000.0 + 0.5) / 1000000.0  # noqa: E731
     per = fetch_log.groupBy(host_col).agg(
         F.count("*").alias("n_obs"),
-        r6(F.percentile(latency_col, F.lit(0.50))).alias("p50_ms"),
-        r6(F.percentile(latency_col, F.lit(0.95))).alias("p95_ms"),
+        _round6(F.percentile(latency_col, F.lit(0.50))).alias("p50_ms"),
+        _round6(F.percentile(latency_col, F.lit(0.95))).alias("p95_ms"),
     )
     return per.select(
         host_col,
@@ -2391,14 +2368,7 @@ def lpa_communities(
     ``rounds`` keeps lineage linear; for high-diameter use, checkpoint
     between rounds like dup_components.
     """
-    u, v = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.filter(u != v)
-        .select(
-            F.least(u, v).alias("u"), F.greatest(u, v).alias("v")
-        )
-        .distinct()
-    )
+    und = _undirected(edges, src_col, dst_col)
     adj = und.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
         und.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from photon_spark.operators import dedupe, multimodal, similarity, textstats
-from photon_spark.operators.extract import luhn_valid
+from photon_spark.operators.extract import files_pred, luhn_valid
 
 Q: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
 
@@ -230,7 +230,7 @@ _DOC_URL_SQL = (
     f"SELECT url FROM ({_DOC_URL_SQL}) t WHERE NOT regexp_matches(url, '{_BAD_SUFFIX}')",
 )
 def t2(spark, sf):
-    return _doc_urls(spark, sf).filter(~F.col("url").rlike(_BAD_SUFFIX))
+    return _doc_urls(spark, sf).filter(~files_pred(F.col("url")))
 
 
 # T3 — scope classification

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from photon_spark.plans.storage import CrawlStore
+from photon_spark.session import jvm_empty
 from photon_spark.sources.fetch_cond import (
     CondTransport,
     apply_revalidation,
@@ -82,12 +83,6 @@ class RecrawlResult:
     state: DataFrame         # RECRAWL_SCHEMAS["state"]
     observations: DataFrame  # RECRAWL_SCHEMAS["observations"]
     metrics: list[dict] = field(default_factory=list)
-
-
-def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    from photon_spark.session import jvm_empty
-
-    return jvm_empty(spark, schema)
 
 
 def run_recrawl(
@@ -127,8 +122,8 @@ def run_recrawl(
     else:
         if store is not None:
             store.reset()
-        state = _empty(spark, RECRAWL_SCHEMAS["state"])
-        observations = _empty(spark, RECRAWL_SCHEMAS["observations"])
+        state = jvm_empty(spark, RECRAWL_SCHEMAS["state"])
+        observations = jvm_empty(spark, RECRAWL_SCHEMAS["observations"])
 
     metrics: list[dict] = []
     for w in range(start_wave, n_waves):

@@ -1,10 +1,13 @@
 """Measured throughput of the host-graph operators at 10^6 edges.
 
-host_rank (PageRank power iteration) and hits_scores (hub/authority)
-both claim broadcast-rank-vector + one host-keyed partial-agg shuffle
+host_rank and trust_rank (one shared PageRank loop), spam_mass (both
+of them plus a join), hits_scores (hub/authority) and the OPIC family
+(opic_scores, and opic_init followed by two opic_update steps) all
+claim a broadcast state vector + one host-keyed partial-agg shuffle
 per (half-)round; this measures them on a synthesized Zipf-ish host
 graph so the claims carry wall-clock evidence at a graph size three
-orders of magnitude above the oracle entries.
+orders of magnitude above the oracle entries. The trust seeds are
+every (n_hosts // 100)-th host id.
 
 Usage: python scripts/bench_graph_scale.py [n_edges] [n_hosts] [cores]
 Appends one JSON line to BENCH/graph_scale.jsonl.
@@ -29,7 +32,15 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from photon_spark.plans.schedule import hits_scores, host_rank, opic_scores
+    from photon_spark.plans.schedule import (
+        hits_scores,
+        host_rank,
+        opic_init,
+        opic_scores,
+        opic_update,
+        spam_mass,
+        trust_rank,
+    )
     from photon_spark.session import get_spark
 
     spark = get_spark(cores=cores, shuffle_partitions=cores,
@@ -54,26 +65,32 @@ def main() -> None:
             times.append(time.monotonic() - t0)
         return min(times), out
 
-    sec, n_pr = best(lambda: host_rank(e, iters=3).count())
-    results = {
-        "host_rank_3_iters": {
+    seeds = spark.range(0, n_hosts, max(1, n_hosts // 100)).select(
+        F.col("id").alias("host")
+    )
+
+    def opic_incremental():
+        state = opic_init(e)
+        for _ in range(2):
+            state = opic_update(state, e)
+        return state
+
+    ops = {
+        "host_rank_3_iters": lambda: host_rank(e, iters=3),
+        "trust_rank_3_iters": lambda: trust_rank(e, seeds, iters=3),
+        "spam_mass_3_iters": lambda: spam_mass(e, seeds, iters=3),
+        "hits_2_iters": lambda: hits_scores(e, iters=2),
+        "opic_3_rounds": lambda: opic_scores(e, rounds=3),
+        "opic_init_2_updates": opic_incremental,
+    }
+    results = {}
+    for name, op in ops.items():
+        sec, n = best(lambda: op().count())
+        results[name] = {
             "sec": round(sec, 3),
             "edges_per_s": round(n_edges / sec),
-            "hosts": n_pr,
+            "hosts": n,
         }
-    }
-    sec, n_h = best(lambda: hits_scores(e, iters=2).count())
-    results["hits_2_iters"] = {
-        "sec": round(sec, 3),
-        "edges_per_s": round(n_edges / sec),
-        "hosts": n_h,
-    }
-    sec, n_o = best(lambda: opic_scores(e, rounds=3).count())
-    results["opic_3_rounds"] = {
-        "sec": round(sec, 3),
-        "edges_per_s": round(n_edges / sec),
-        "hosts": n_o,
-    }
     e.unpersist()
 
     rec = {

@@ -1075,6 +1075,55 @@ def test_crawl_robots_agent_group_selection(spark):
     assert host + "/private.html" in fetched_anon
 
 
+@pytest.mark.slow
+@pytest.mark.parametrize("root", ["http://h.test", "http://h.test:8080"])
+def test_crawl_robots_bind_root_with_port(spark, tmp_path, root):
+    """Disallow and Crawl-delay bind the crawled host whether or not the
+    root URL carries a port: both relations take their host from
+    with_host, the key robots_gate and schedule_wave match on, so the
+    fetched paths and the per-wave cap are the same for both roots,
+    fresh and across a store resume."""
+    from photon_spark.config import EngineConfig
+    from photon_spark.crawl import run_crawl
+    from photon_spark.plans.storage import CrawlStore
+
+    robots = "User-agent: *\nDisallow: /private\nCrawl-delay: 30\n"
+    paths = ["/public/a", "/public/b", "/public/c", "/private/a", "/public/d"]
+    body = "<html>\n" + "".join(f'<a href="{p}">x</a>\n' for p in paths) + "</html>"
+    rows = [(root, body), (root + "/robots.txt", robots)] + [
+        (root + p, "<html>leaf</html>") for p in paths + ["/private"]
+    ]
+    pages = spark.createDataFrame(
+        [
+            (d, [{"kind": "text", "text": b, "media_ref": "", "offset": 0}])
+            for d, b in rows
+        ],
+        "doc_id string, spans array<struct<"
+        "kind string, text string, media_ref string, offset int>>",
+    )
+    cfg = EngineConfig(crawl_level=10, respect_robots=True, crawl_delay_window=60.0)
+
+    def fetched_and_per_wave(res):
+        waves = [(r["level"], r["url"][len(root):]) for r in res.waves.collect()]
+        per_wave = [
+            sum(1 for lv, _ in waves if lv == level)
+            for level in sorted({lv for lv, _ in waves})
+        ]
+        return sorted(path for _, path in waves), per_wave
+
+    # Disallow gates /private and /private/a; floor(60 / 30) = 2 per wave
+    want = (["", "/public/a", "/public/b", "/public/c", "/public/d"], [1, 2, 2])
+    assert fetched_and_per_wave(run_crawl(spark, pages, root, cfg=cfg)) == want
+
+    store = CrawlStore(str(tmp_path / "robots_store"))
+    assert (
+        run_crawl(spark, pages, root, cfg=cfg, store=store, stop_after_wave=0)
+        is None
+    )
+    resumed = run_crawl(spark, pages, root, cfg=cfg, store=store, resume=True)
+    assert fetched_and_per_wave(resumed) == want
+
+
 # ---------------------------------------------------------------------------
 # param_significance — learned URL-parameter folding
 

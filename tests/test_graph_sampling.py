@@ -191,6 +191,26 @@ def test_trustrank_isolated_component_exactly_zero(spark):
     assert set(t0.values()) == {0.0}
 
 
+@pytest.mark.parametrize("damping", [0.85, 0.75])
+def test_host_rank_is_trust_rank_seeded_everywhere(spark, damping):
+    """host_rank is the uniform-teleport case of trust_rank's power
+    iteration: seeding every node gives the same rows, rank == trust,
+    dangling hosts included."""
+    from photon_spark.plans.schedule import host_rank, trust_rank
+
+    rng = random.Random(5)
+    edges = [(rng.randint(0, 60), rng.randint(0, 70)) for _ in range(400)]
+    e = spark.createDataFrame(edges, "src int, dst int")
+    every = e.selectExpr("src AS host").union(e.selectExpr("dst AS host"))
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(host_rank(e, iters=4, damping=damping)) == rows(
+        trust_rank(e, every, iters=4, damping=damping)
+    )
+
+
 # ---------------------------------------------------------------------------
 # broadcast_state=False — the >10^8-host escape hatch
 
