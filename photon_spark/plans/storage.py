@@ -122,6 +122,15 @@ _TABLE_NAME = re.compile(r"[A-Za-z0-9_.-]+")
 LAYOUT = "tagged-v1"
 
 
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write `obj` as JSON to `path` via tmp + rename: a reader sees the
+    old file or the new one, never a torn one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class CrawlStore:
     def __init__(
         self,
@@ -297,10 +306,7 @@ class CrawlStore:
         self._write_manifest({"latest_wave": wave, "meta": meta})
 
     def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({**manifest, "layout": LAYOUT}, f)
-        os.replace(tmp, self._manifest_path())
+        _write_json_atomic(self._manifest_path(), {**manifest, "layout": LAYOUT})
 
     def latest(self) -> tuple[int, dict] | None:
         try:
@@ -559,3 +565,63 @@ class CrawlStore:
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
+
+
+class SwappedTable:
+    """A parquet table replaced as a whole, crash-safely: the state of
+    the foreachBatch maintainers (streaming/).
+
+        <root>/_pointer.json     {"version": n, "batch": id}
+        <root>/v<n>/part-*.parquet
+
+    replace() writes a fresh version dir, then atomically rewrites the
+    pointer, then removes the versions older than the one the pointer
+    left. A crash at any point leaves the pointer on a complete
+    version: the old one until the pointer swap (a retry overwrites the
+    orphaned new dir), the new one after it. The version the pointer
+    left stays until the next replace(), so a reader that read the
+    pointer just before the swap still finds its files. `batch` is the
+    id of the last micro-batch folded into the table, the maintainers'
+    replay marker, so it swaps with the state in one write. Version dirs
+    hold no `=`, so Spark infers no partition column from them.
+    """
+
+    def __init__(self, root: str):
+        self.root = root
+        self._pointer_path = os.path.join(root, "_pointer.json")
+
+    def _pointer(self) -> dict | None:
+        try:
+            with open(self._pointer_path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            pass
+        if os.path.isdir(self.root) and any(
+            f.endswith(".parquet") for f in os.listdir(self.root)
+        ):
+            raise ValueError(
+                f"{self.root}: state written by the pre-pointer layout"
+                f" (parquet files, no _pointer.json); start the stream"
+                f" with a fresh state dir"
+            )
+        return None
+
+    def _version_dir(self, version: int) -> str:
+        return os.path.join(self.root, f"v{version}")
+
+    def read(self, spark: SparkSession) -> tuple[DataFrame | None, int]:
+        """(current version, its batch id), or (None, -1) before the
+        first replace()."""
+        p = self._pointer()
+        if p is None:
+            return None, -1
+        return spark.read.parquet(self._version_dir(p["version"])), p["batch"]
+
+    def replace(self, df: DataFrame, batch: int) -> None:
+        p = self._pointer()
+        version = 0 if p is None else p["version"] + 1
+        df.write.mode("overwrite").parquet(self._version_dir(version))
+        _write_json_atomic(self._pointer_path, {"version": version, "batch": batch})
+        for d in os.listdir(self.root):
+            if re.fullmatch(r"v\d+", d) and int(d[1:]) < version - 1:
+                shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)

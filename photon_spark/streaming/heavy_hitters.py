@@ -6,11 +6,11 @@ the sketches — so each micro-batch's increments merge into the stored
 sketch with one (i, bucket) aggregation, the same property that lets a
 real cluster build per-executor partial sketches and OR^H^Hsum them at
 the reduce. The stored sketch is a parquet table of (i, bucket, c)
-rows (≤ depth·width), following StreamingScheduler's
-parquet-backed-state pattern (streaming/wave_stream.py): tiny, atomic
-to swap, and readable by the batch estimator
-(plans/schedule.cms_estimate) at any time — the crawl-operations
-"which hosts are flooding the frontier RIGHT NOW" gauge.
+rows (≤ depth·width) held in a ``SwappedTable`` (plans/storage.py):
+tiny, replaced crash-safely per batch, and readable by the batch
+estimator (plans/schedule.cms_estimate) at any time — the
+crawl-operations "which hosts are flooding the frontier RIGHT NOW"
+gauge.
 
 Parity contract (pytest): after streaming N micro-batches, the stored
 sketch is row-identical to ``cms_sketch`` over the concatenated batch
@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from photon_spark.plans.schedule import cms_estimate, cms_sketch
+from photon_spark.plans.storage import SwappedTable
+from photon_spark.streaming import start_foreach_batch
 
 
 class StreamingHeavyHitters:
@@ -43,14 +45,10 @@ class StreamingHeavyHitters:
         self.key_col = key_col
         self.depth = depth
         self.width = width
-        self._path = os.path.join(state_dir, "cms_sketch")
+        self._state = SwappedTable(os.path.join(state_dir, "cms_sketch"))
 
     def sketch(self) -> DataFrame | None:
-        if os.path.isdir(self._path) and any(
-            f.endswith(".parquet") for f in os.listdir(self._path)
-        ):
-            return self.spark.read.parquet(self._path)
-        return None
+        return self._state.read(self.spark)[0]
 
     def estimate(self, keys: DataFrame) -> DataFrame:
         """Point estimates for `keys` against the CURRENT stored
@@ -62,44 +60,22 @@ class StreamingHeavyHitters:
             )
         return cms_estimate(s, keys, self.key_col, self.depth, self.width)
 
-    def _last_batch(self) -> int:
-        try:
-            with open(os.path.join(self._path, "_last_batch")) as f:
-                return int(f.read())
-        except (OSError, ValueError):
-            return -1
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # Replay guard (same contract as StreamingQuantiles): a
         # re-delivered batch_id after restart must not double-count
         # into the sketch; the marker swaps atomically with the state.
-        if batch_id <= self._last_batch():
+        prev, last = self._state.read(self.spark)
+        if batch_id <= last:
             return
         inc = cms_sketch(batch_df, self.key_col, self.depth, self.width)
-        prev = self.sketch()
         if prev is not None:
             inc = (
                 inc.unionByName(prev)
                 .groupBy("i", "bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        # write-then-swap so a concurrent estimate() never reads a torn
-        # sketch (same discipline as CrawlStore's manifest)
-        tmp = self._path + f"._b{batch_id}"
-        inc.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_last_batch"), "w") as f:
-            f.write(str(batch_id))
-        final = self._path
-        if os.path.isdir(final):
-            import shutil
-
-            shutil.rmtree(final)
-        os.replace(tmp, final)
+        self._state.replace(inc, batch_id)
 
     def attach(self, stream: DataFrame, checkpoint: str):
         """Start the maintainer on a readStream of keyed rows."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        return start_foreach_batch(stream, self.process_batch, checkpoint)

@@ -10,12 +10,16 @@ micro-batch and GROWS the corpus with each batch's clean survivors:
   recorded with their matched corpus doc; clean docs' band keys are
   appended to the corpus state.
 
-State layout (parquet, following StreamingScheduler's pattern):
+State layout (parquet):
   <state>/bands/batch=N/   clean band keys admitted by batch N
+  <state>/bands/base/      compact()'s fold of the batch dirs, a
+                           ``SwappedTable`` (plans/storage.py) whose
+                           pointer names the last batch folded
   <state>/flags/batch=N/   (new_doc, matched_doc) rejections of batch N
-Each batch writes ONLY its own batch= subdirectory with overwrite —
-replaying a batch (checkpoint recovery) rewrites the same files, so
-the state is exactly-once idempotent without a manifest.
+Each batch writes ONLY its own batch= subdirectories with overwrite —
+replaying a batch (checkpoint recovery) rewrites the same files, and a
+batch the base already folded is skipped, so the state is exactly-once
+idempotent.
 
 At 100 TB the corpus band table is the stored artifact of the batch
 dedup pass (computed once per admitted doc); per micro-batch work is
@@ -26,6 +30,7 @@ economics that make the batch twin incremental.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +39,8 @@ from photon_spark.operators.dedupe import (
     _band_keys,
     minhash_signatures,
 )
+from photon_spark.plans.storage import SwappedTable
+from photon_spark.streaming import start_foreach_batch
 
 
 class StreamingIngestDedup:
@@ -54,36 +61,52 @@ class StreamingIngestDedup:
         self.max_bucket = max_bucket
         self._bands_dir = os.path.join(state_dir, "bands")
         self._flags_dir = os.path.join(state_dir, "flags")
+        self._base = SwappedTable(os.path.join(self._bands_dir, "base"))
 
-    def _read(
-        self, base: str, exclude_batch: int | None = None
+    @staticmethod
+    def _batch_dirs(parent: str) -> dict[int, str]:
+        """batch id → its batch=N dir under `parent`."""
+        if not os.path.isdir(parent):
+            return {}
+        return {
+            int(d[len("batch="):]): os.path.join(parent, d)
+            for d in os.listdir(parent)
+            if d.startswith("batch=")
+        }
+
+    def _corpus(
+        self, base: DataFrame | None, folded: int, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        if not os.path.isdir(base):
-            return None
-        subs = [
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if (
-                d.startswith("batch=")
-                and (exclude_batch is None or d != f"batch={exclude_batch}")
-            )
-            or d == "base"  # compacted fold of earlier batches
+        """The base plus the band dirs of the batches it has not folded."""
+        paths = [
+            p
+            for b, p in self._batch_dirs(self._bands_dir).items()
+            if b > folded and b != exclude_batch
         ]
-        if not subs:
-            return None
-        return self.spark.read.parquet(*subs)
+        tail = self.spark.read.parquet(*paths) if paths else None
+        if base is None or tail is None:
+            return tail if base is None else base
+        return base.unionByName(tail)
 
     def corpus_bands(
         self, exclude_batch: int | None = None
     ) -> DataFrame | None:
         """The admitted corpus's band table (doc_id, band, key)."""
-        return self._read(self._bands_dir, exclude_batch)
+        return self._corpus(*self._base.read(self.spark), exclude_batch)
 
     def flags(self) -> DataFrame | None:
         """All rejections so far (new_doc, matched_doc)."""
-        return self._read(self._flags_dir)
+        paths = list(self._batch_dirs(self._flags_dir).values())
+        return self.spark.read.parquet(*paths) if paths else None
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        base, folded = self._base.read(self.spark)
+        if batch_id <= folded:
+            # replay of a batch compact() already folded: its bands are
+            # in the base and its flags on disk. Admitting it again
+            # would double its band rows and push its buckets over
+            # max_bucket.
+            return
         rows_per_band = self.n_hashes // self.bands
         nb = _band_keys(
             minhash_signatures(batch_df, self.n_hashes),
@@ -94,7 +117,7 @@ class StreamingIngestDedup:
         # vs the stored corpus, bucket-capped on the corpus side;
         # exclude this batch's own prior state so checkpoint REPLAY of
         # a batch can't match the batch against itself
-        corpus = self.corpus_bands(exclude_batch=batch_id)
+        corpus = self._corpus(base, folded, exclude_batch=batch_id)
         if corpus is not None:
             ok = (
                 corpus.groupBy("band", "key")
@@ -111,10 +134,6 @@ class StreamingIngestDedup:
                     ["band", "key"],
                 )
                 .select(F.col("doc_id").alias("new_doc"), "matched_doc")
-                # a replayed batch meets its OWN rows once compact()
-                # folded them into base (batch-id exclusion can't see
-                # them there): a doc is never a duplicate of itself
-                .where(F.col("new_doc") != F.col("matched_doc"))
             )
         else:
             # empty frame with the caller's doc_id type
@@ -156,48 +175,30 @@ class StreamingIngestDedup:
         )
 
     def compact(self) -> int:
-        """Fold all batch=N band directories into one ``base`` dir —
+        """Fold all batch=N band directories into the ``base`` table —
         the same delta→base rewrite CrawlStore.compact() runs for the
         crawl's seen table (small-file pressure grows one dir per
         micro-batch; the band table is read by EVERY batch's join).
         Returns the number of batch dirs folded.
 
-        Write-then-swap: the new base lands under a temp name and
-        replaces the old base atomically before the batch dirs are
-        removed, so a concurrent reader never sees a torn state. Run
-        it between batches (foreachBatch serializes with the stream);
-        replaying a pre-compaction batch afterwards re-admits that
-        batch's rows next to the base copy — duplicate band rows only
-        duplicate LSH candidates, which the downstream distinct
-        already removes.
+        The base is a ``SwappedTable`` whose pointer records the highest
+        batch id folded, and the batch dirs are removed only after the
+        pointer swap: a crash at any point keeps every admitted row
+        readable exactly once (readers skip batch dirs the base
+        already folded). Run it between batches (foreachBatch
+        serializes with the stream).
         """
-        import shutil
-
-        if not os.path.isdir(self._bands_dir):
-            return 0
-        subs = [
-            d
-            for d in os.listdir(self._bands_dir)
-            if d.startswith("batch=")
-        ]
-        if not subs:
-            return 0
-        merged = self._read(self._bands_dir).dropDuplicates(
-            ["doc_id", "band", "key"]
-        )
-        base = os.path.join(self._bands_dir, "base")
-        tmp = base + "._compact"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(base):
-            shutil.rmtree(base)
-        os.replace(tmp, base)
-        for d in subs:
-            shutil.rmtree(os.path.join(self._bands_dir, d))
-        return len(subs)
+        base, folded = self._base.read(self.spark)
+        dirs = self._batch_dirs(self._bands_dir)
+        new = [b for b in dirs if b > folded]
+        if new:
+            merged = self._corpus(base, folded).dropDuplicates(
+                ["doc_id", "band", "key"]
+            )
+            self._base.replace(merged, max(new))
+        for p in dirs.values():
+            shutil.rmtree(p)
+        return len(new)
 
     def attach(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        return start_foreach_batch(stream, self.process_batch, checkpoint)

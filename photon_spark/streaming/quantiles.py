@@ -16,9 +16,9 @@ contract is therefore two-tier (pytest-pinned, tests/test_streaming.py):
   error stays within the same bound the batch pytest pins.
 
 State is a parquet table of (v double, w long) rows — ≤ levels·k,
-tiny, write-then-swap atomic (StreamingScheduler's pattern), readable
-mid-stream by ``quantiles()`` at any time: the crawl-operations
-"latency/size percentile RIGHT NOW" gauge.
+tiny, held in a ``SwappedTable`` (plans/storage.py) that replaces it
+crash-safely per batch, readable mid-stream by ``quantiles()`` at any
+time: the crawl-operations "latency/size percentile RIGHT NOW" gauge.
 """
 
 from __future__ import annotations
@@ -32,6 +32,9 @@ from photon_spark.plans.schedule import (
     kll_partials,
     kll_rank_query,
 )
+from photon_spark.plans.storage import SwappedTable
+from photon_spark.session import jvm_empty
+from photon_spark.streaming import start_foreach_batch
 
 
 class StreamingQuantiles:
@@ -47,14 +50,10 @@ class StreamingQuantiles:
         self.spark = spark
         self.value_col = value_col
         self.k = k
-        self._path = os.path.join(state_dir, "kll_summary")
+        self._state = SwappedTable(os.path.join(state_dir, "kll_summary"))
 
     def summary(self) -> DataFrame | None:
-        if os.path.isdir(self._path) and any(
-            f.endswith(".parquet") for f in os.listdir(self._path)
-        ):
-            return self.spark.read.parquet(self._path)
-        return None
+        return self._state.read(self.spark)[0]
 
     def quantiles(
         self, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
@@ -63,46 +62,22 @@ class StreamingQuantiles:
         frame with the right schema before the first batch)."""
         s = self.summary()
         if s is None:
-            return self.spark.createDataFrame(
-                [], "q double, value double, n bigint"
-            )
+            return jvm_empty(self.spark, "q double, value double, n bigint")
         return kll_rank_query(s, qs)
-
-    def _last_batch(self) -> int:
-        try:
-            with open(os.path.join(self._path, "_last_batch")) as f:
-                return int(f.read())
-        except (OSError, ValueError):
-            return -1
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # Replay guard: after a failure/restart foreachBatch re-delivers
         # the last batch_id; folding it twice would inflate n and skew
         # quantiles. The applied-batch marker swaps atomically WITH the
         # summary, so state and marker can't diverge.
-        if batch_id <= self._last_batch():
+        prev, last = self._state.read(self.spark)
+        if batch_id <= last:
             return
         inc = kll_partials(batch_df, self.value_col, self.k)
-        prev = self.summary()
         if prev is not None:
             inc = inc.unionByName(prev)
-        merged = kll_merge(inc, self.k)
-        # write-then-swap so a concurrent quantiles() never reads a
-        # torn summary (same discipline as CrawlStore's manifest)
-        tmp = self._path + f"._b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_last_batch"), "w") as f:
-            f.write(str(batch_id))
-        if os.path.isdir(self._path):
-            import shutil
-
-            shutil.rmtree(self._path)
-        os.replace(tmp, self._path)
+        self._state.replace(kll_merge(inc, self.k), batch_id)
 
     def attach(self, stream: DataFrame, checkpoint: str):
         """Start the maintainer on a readStream of value rows."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        return start_foreach_batch(stream, self.process_batch, checkpoint)

@@ -3,15 +3,14 @@
 The batch engine's wave function (canonicalize → dedup vs seen →
 politeness schedule) re-used under ``foreachBatch``: a stream of
 discovered candidate URLs becomes a stream of scheduled fetch work,
-with the `seen` set carried as an external parquet state table exactly
-like the batch driver's CrawlStore. This is the production shape for a
-continuous crawler: discovery events arrive continuously; each
-micro-batch is one scheduling wave.
+with the `seen` set carried in the batch driver's own CrawlStore. This
+is the production shape for a continuous crawler: discovery events
+arrive continuously; each micro-batch is one scheduling wave.
 
 Batch/stream parity: each micro-batch applies the SAME dataframe
 stages as photon_spark.crawl's wave loop, so the semantics contract is
-the batch one (golden-tested); the test asserts stream output ==
-running the batch wave over the same inputs.
+the batch one (golden-tested); the tests assert the stream schedules
+every distinct canonical URL exactly once across batches.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from photon_spark.plans.frontier import (
     canonicalize_urls,
@@ -28,78 +26,7 @@ from photon_spark.plans.frontier import (
     dedup_candidates_parts,
 )
 from photon_spark.plans.schedule import schedule_wave
-
-
-class StreamingScheduler:
-    """foreachBatch wave scheduler with parquet-backed seen-state."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        out_dir: str,
-        budget: int | None = 100,
-        partitions: int = 8,
-        salts: int = 4,
-    ):
-        self.spark = spark
-        self.state_dir = state_dir
-        self.out_dir = out_dir
-        self.budget = budget
-        self.partitions = partitions
-        self.salts = salts
-        self._seen_path = os.path.join(state_dir, "seen")
-
-    def _seen(self) -> DataFrame:
-        if os.path.isdir(self._seen_path) and any(
-            f.endswith(".parquet") for f in os.listdir(self._seen_path)
-        ):
-            return self.spark.read.parquet(self._seen_path)
-        from photon_spark.session import jvm_empty
-
-        return jvm_empty(self.spark, "url string")
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """One micro-batch = one scheduling wave (idempotent per sink
-        append; the seen-merge makes replays converge)."""
-        canon = canonicalize_urls(batch_df.select("url")).dropDuplicates(["url"])
-        seen = self._seen()
-        fresh = dedup_candidates(canon, seen)
-        scheduled = schedule_wave(
-            fresh,
-            budget=self.budget,
-            partitions=self.partitions,
-            salts=self.salts,
-        ).select("url")
-        scheduled = scheduled.persist()
-        (
-            scheduled.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(self.out_dir)
-        )
-        # merge scheduled into seen (scheduled == fetched in the batch
-        # engine's contract: processed.add at fetch time, requester.py:31)
-        seen.unionByName(scheduled).distinct().write.mode("overwrite").parquet(
-            self._seen_path + "_next"
-        )
-        scheduled.unpersist()
-        # atomic-enough swap for the sandbox; Iceberg snapshot commit in prod
-        bak = self._seen_path + "_old"
-        if os.path.isdir(self._seen_path):
-            os.rename(self._seen_path, bak)
-        os.rename(self._seen_path + "_next", self._seen_path)
-        if os.path.isdir(bak):
-            import shutil
-
-            shutil.rmtree(bak)
-
-    def start(self, url_stream: DataFrame, checkpoint_dir: str):
-        """Attach to a readStream of (url string) and run continuously."""
-        return (
-            url_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
+from photon_spark.streaming import start_foreach_batch
 
 
 class StoreBackedScheduler:
@@ -227,8 +154,4 @@ class StoreBackedScheduler:
                 self.store.expire()
 
     def start(self, url_stream: DataFrame, checkpoint_dir: str):
-        return (
-            url_stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
+        return start_foreach_batch(url_stream, self.process_batch, checkpoint_dir)

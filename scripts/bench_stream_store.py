@@ -2,10 +2,8 @@
 
 Measures the per-micro-batch cost of StoreBackedScheduler (canonicalize
 -> dedup vs CrawlStore seen-state -> politeness schedule -> sink write
--> store commit) against the same wave stages run WITHOUT the store
-(StreamingScheduler's stages, batch-applied) — i.e. what the
-exactly-once store contract costs per batch. Real readStream file
-source, one file per trigger.
+-> store commit, with compaction every 4 batches) and checks that the
+dedup is exact. Real readStream file source, one file per trigger.
 
 Usage: python scripts/bench_stream_store.py [n_batches] [urls_per_batch] [cores]
 Appends one JSON line to BENCH/stream_store_runs.jsonl.
@@ -90,32 +88,6 @@ def main() -> None:
     distinct = new * n_batches
     assert out_rows == distinct, (out_rows, distinct)  # dedup exact
 
-    # comparison leg: the same stream through the storeless scheduler
-    # (parquet-swap seen state) — isolates what the exactly-once store
-    # contract costs per batch vs. plain foreachBatch machinery
-    from photon_spark.streaming.wave_stream import StreamingScheduler
-
-    plain = StreamingScheduler(
-        spark,
-        state_dir=os.path.join(work, "plain_state"),
-        out_dir=os.path.join(work, "plain_out"),
-        budget=None,
-        partitions=cores,
-        salts=max(8, cores),
-    )
-    stream2 = (
-        spark.readStream.schema("url string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir + "/*")
-    )
-    t0 = time.time()
-    q2 = plain.start(stream2, checkpoint_dir=os.path.join(work, "ckpt2"))
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    plain_sec = time.time() - t0
-
     report = {
         "job": "store_backed_stream",
         "cores": cores,
@@ -125,8 +97,6 @@ def main() -> None:
         "sec": round(sec, 3),
         "urls_per_s": round(urls_in / sec, 1),
         "sec_per_batch": round(sec / n_batches, 3),
-        "plain_sec_per_batch": round(plain_sec / n_batches, 3),
-        "store_overhead_per_batch": round((sec - plain_sec) / n_batches, 3),
         "compact_every": 4,
         "ts": datetime.now(timezone.utc).isoformat(),
     }

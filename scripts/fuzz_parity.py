@@ -18,7 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from photon_spark import regexes as rx  # noqa: E402
-from tests.test_regex_parity import _FRAGMENTS, ref_ns as _ref_fixture  # noqa: E402
+from tests.test_regex_parity import REF, _FRAGMENTS, ref_ns as _ref_fixture  # noqa: E402
 
 
 def load_ref():
@@ -31,6 +31,10 @@ def load_ref():
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 1234
+    if not os.path.exists(REF):
+        # the same gate that skips tests/test_regex_parity.py
+        print(f"{REF} not found: no reference patterns to compare against")
+        return 2
     rng = random.Random(seed)
     ref = load_ref()
     ref_map = {name: pat for pat, name in ref["rintels"]}

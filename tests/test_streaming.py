@@ -1,17 +1,23 @@
 """Structured Streaming paths: tumbling-window aggregation, the
-applyInPandasWithState sessionizer, and the foreachBatch wave
-scheduler — each run as a real readStream query and checked against
-its batch equivalent (which is DuckDB-oracle-checked)."""
+applyInPandasWithState sessionizer, the foreachBatch wave scheduler
+and state maintainers — each run as a real readStream query and
+checked against its batch equivalent (which is DuckDB-oracle-checked)
+— and crashes inside the maintainers' state swaps."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
 import pytest
 
-pytestmark = pytest.mark.slow  # streaming restart/watermark twins are end-to-end micro-batch runs
+# The readStream twins are end-to-end micro-batch runs (slow); the
+# crash-point tests of the state swaps call process_batch directly and
+# stay in the per-change gate.
 
 
+@pytest.mark.slow
 def test_streaming_tumbling_counts_match_batch(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     batch = spark.read.parquet(f"{sf}/events.parquet")
@@ -67,6 +73,7 @@ def test_streaming_tumbling_counts_match_batch(spark, tmp_path):
     assert len(got) > 0
 
 
+@pytest.mark.slow
 def test_sessionize_stateful_matches_batch(spark, tmp_path):
     """applyInPandasWithState sessionizer: closed sessions must equal
     the batch gaps-and-islands sessions minus each user's final
@@ -129,53 +136,7 @@ def test_sessionize_stateful_matches_batch(spark, tmp_path):
     assert len(got) > 100
 
 
-def test_streaming_wave_scheduler(spark, tmp_path):
-    """foreachBatch wave scheduler: two micro-batches of candidate
-    URLs; batch 2 must dedup against batch 1's scheduled set via the
-    parquet seen-state, matching the batch-engine computation."""
-    from photon_spark.streaming.wave_stream import StreamingScheduler
-
-    in_dir = tmp_path / "urls_in"
-    in_dir.mkdir()
-    urls1 = spark.createDataFrame(
-        [(f"http://h{i % 5}.test/p/{i}",) for i in range(100)], "url string"
-    )
-    urls2 = spark.createDataFrame(
-        # 50 repeats of batch 1 (+ fragments → same canonical url) + 50 new
-        [(f"http://h{i % 5}.test/p/{i}#frag",) for i in range(50)]
-        + [(f"http://h{i % 5}.test/p/{i}",) for i in range(100, 150)],
-        "url string",
-    )
-    urls1.coalesce(1).write.parquet(str(in_dir / "b0"))
-    urls2.coalesce(1).write.parquet(str(in_dir / "b1"))
-
-    sched = StreamingScheduler(
-        spark,
-        state_dir=str(tmp_path / "state"),
-        out_dir=str(tmp_path / "out"),
-        budget=1000,
-        partitions=2,
-        salts=2,
-    )
-    stream = (
-        spark.readStream.schema("url string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(in_dir) + "/*")
-    )
-    q = sched.start(stream, checkpoint_dir=str(tmp_path / "ckpt2"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    out = spark.read.parquet(str(tmp_path / "out"))
-    urls_out = {r["url"] for r in out.collect()}
-    # every candidate canonical url exactly once — repeats deduped
-    want = {f"http://h{i % 5}.test/p/{i}" for i in range(150)}
-    assert urls_out == want
-    assert out.count() == 150  # no double-scheduling across batches
-
-
+@pytest.mark.slow
 def test_watermark_drops_late_events(spark, tmp_path):
     """Append-mode tumbling agg with a 30-min watermark: an event
     arriving after its window is finalized must be dropped, and windows
@@ -230,6 +191,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert ("10:00", 4) not in got
 
 
+@pytest.mark.slow
 def test_sessionize_event_time_timeout_flushes_open_sessions(spark, tmp_path):
     """With a watermark, open sessions flush once event time passes
     last+gap — no later same-user event needed."""
@@ -279,6 +241,7 @@ def test_sessionize_event_time_timeout_flushes_open_sessions(spark, tmp_path):
     assert not any(u == 99 for u, *_ in got)
 
 
+@pytest.mark.slow
 def test_sessionize_large_group_out_of_order_chunks(spark, tmp_path):
     """Regression (r1 ADVICE): applyInPandasWithState splits one
     group's micro-batch rows into ~2048-row Arrow chunks, and chunk
@@ -335,6 +298,7 @@ def test_sessionize_large_group_out_of_order_chunks(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_dedup_first_arrival_only(spark, tmp_path):
     """Streaming exact dedup: duplicates across micro-batches are
     dropped; surviving fingerprint set equals the batch distinct."""
@@ -375,6 +339,7 @@ def test_streaming_dedup_first_arrival_only(spark, tmp_path):
     assert ids["aa"] in (1, 3) and ids["bb"] == 2
 
 
+@pytest.mark.slow
 def test_streaming_quality_filter_matches_batch(spark, tmp_path):
     """The training-data scrub pass (redact_pii + stratified keep) runs
     UNCHANGED on a stream: pure column expressions need no stateful
@@ -415,6 +380,7 @@ def test_streaming_quality_filter_matches_batch(spark, tmp_path):
     assert 0 < len(got) < batch.count()  # the 'en' stratum was thinned
 
 
+@pytest.mark.slow
 def test_streaming_store_backed_scheduler(spark, tmp_path):
     """StoreBackedScheduler: the stream's seen-state is a CrawlStore.
     Three micro-batches with cross-batch repeats; compact_every=2 with
@@ -473,6 +439,7 @@ def test_streaming_store_backed_scheduler(spark, tmp_path):
     assert {r["url"] for r in seen.collect()} == want
 
 
+@pytest.mark.slow
 def test_streaming_store_replay_is_idempotent(spark, tmp_path):
     """foreachBatch redelivery: re-running an already-committed batch
     id must change neither the sink nor the store (exactly-once), and
@@ -522,6 +489,7 @@ def test_streaming_store_replay_is_idempotent(spark, tmp_path):
     assert len({u for u, _ in rows}) == 70
 
 
+@pytest.mark.slow
 def test_streaming_store_checkpoint_resume(spark, tmp_path):
     """Stop the stream, add more input, restart from the SAME
     checkpoint: Spark redelivers nothing, batch ids continue, and the
@@ -567,6 +535,7 @@ def test_streaming_store_checkpoint_resume(spark, tmp_path):
     assert store.latest()[0] == 1  # batch ids continued from checkpoint
 
 
+@pytest.mark.slow
 def test_streaming_store_canonical_ext_knob(spark, tmp_path):
     """canonical_ext=True: tracking params and param order collapse to
     one canonical frontier row before the seen-dedup."""
@@ -593,6 +562,7 @@ def test_streaming_store_canonical_ext_knob(spark, tmp_path):
     assert out == {"http://h.test/p?a=1", "http://h.test/q?a=1&b=2"}
 
 
+@pytest.mark.slow
 def test_streaming_store_batch_to_stream_resume(spark, tmp_path):
     """A store with pre-existing BATCH-run waves 0..2 then serves a
     stream: micro-batch ids 0..1 must NOT be read as replays of those
@@ -646,6 +616,7 @@ def test_streaming_store_batch_to_stream_resume(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 20
 
 
+@pytest.mark.slow
 def test_politeness_spacing_stream_matches_batch(spark, tmp_path):
     """applyInPandasWithState per-host fetch shaper: on in-order input
     the streamed fetch assignments must be row-identical to the batch
@@ -707,6 +678,7 @@ def test_politeness_spacing_stream_matches_batch(spark, tmp_path):
     assert any(d > 0 for *_, d in got)
 
 
+@pytest.mark.slow
 def test_streaming_cms_linearity_matches_batch(spark, tmp_path):
     """CMS is linear: after streaming the input as multiple
     micro-batches, the stored sketch must be CELL-IDENTICAL to
@@ -758,6 +730,7 @@ def test_streaming_cms_linearity_matches_batch(spark, tmp_path):
     assert all(est[h] >= t for h, t in truth.items())
 
 
+@pytest.mark.slow
 def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
     """The LSH ingest gate: batch-1 clean docs join the corpus; a
     batch-2 near-dup of a batch-1 survivor is flagged; within-batch
@@ -838,6 +811,7 @@ def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
     assert twin == {(n, m) for (n, m) in flags2 if n >= 20}
 
 
+@pytest.mark.slow
 def test_streaming_ingest_dedup_replay_idempotent(spark, tmp_path):
     """Reprocessing the same batch_id overwrites its own state subdirs:
     corpus and flags are unchanged after a replay."""
@@ -857,6 +831,7 @@ def test_streaming_ingest_dedup_replay_idempotent(spark, tmp_path):
     assert gate.flags().count() == 0
 
 
+@pytest.mark.slow
 def test_streaming_ingest_dedup_compaction(spark, tmp_path):
     """compact() folds batch dirs into one base with identical distinct
     content; matching behavior and subsequent growth are unchanged."""
@@ -896,6 +871,7 @@ def test_streaming_ingest_dedup_compaction(spark, tmp_path):
     assert sorted(map(tuple, gate.corpus_bands().collect())) == after
 
 
+@pytest.mark.slow
 def test_streaming_ingest_dedup_replay_after_compaction(spark, tmp_path):
     """Replaying a batch AFTER compaction folded its rows into base:
     self-matches are filtered, the batch re-admits, corpus content is
@@ -916,6 +892,7 @@ def test_streaming_ingest_dedup_replay_after_compaction(spark, tmp_path):
     assert sorted(map(tuple, gate.corpus_bands().collect())) == before
 
 
+@pytest.mark.slow
 def test_stream_stream_interval_join(spark, tmp_path):
     """Native watermarked stream-stream interval join: fetch events
     joined to extraction events on host within 30s after the fetch;
@@ -981,6 +958,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert got == {(1, 10), (2, 11)}
 
 
+@pytest.mark.slow
 def test_streaming_quantiles_two_tier_parity(spark, tmp_path):
     """StreamingQuantiles (KLL maintainer): exact regime — after two
     micro-batches totalling <= k rows the stored summary is
@@ -1027,6 +1005,7 @@ def test_streaming_quantiles_two_tier_parity(spark, tmp_path):
         assert out[qq] == (s[math.ceil(qq * len(s)) - 1], len(s))
 
 
+@pytest.mark.slow
 def test_streaming_quantiles_compaction_regime_bounds(spark, tmp_path):
     """Compaction regime (k=64 << n): n stays EXACT across micro-batch
     merges (weight-exact halving) and every reported quantile's true
@@ -1065,6 +1044,7 @@ def test_streaming_quantiles_compaction_regime_bounds(spark, tmp_path):
         assert abs(true_rank - target) <= 0.05 * n, (r["q"], true_rank)
 
 
+@pytest.mark.slow
 def test_streaming_quantiles_replay_idempotent(spark, tmp_path):
     """A re-delivered batch_id (foreachBatch replay after restart)
     must be a no-op: n and the summary stay exactly what one
@@ -1087,6 +1067,7 @@ def test_streaming_quantiles_replay_idempotent(spark, tmp_path):
     assert sq.quantiles((0.5,)).collect()[0]["n"] == 2 * len(vals)
 
 
+@pytest.mark.slow
 def test_streaming_cms_replay_idempotent(spark, tmp_path):
     """Same replay contract for the CMS maintainer: re-delivering the
     last batch_id must not double-count."""
@@ -1105,3 +1086,151 @@ def test_streaming_cms_replay_idempotent(spark, tmp_path):
     hh.process_batch(df, 1)
     doubled = {(r["i"], r["bucket"]): r["c"] for r in hh.sketch().collect()}
     assert doubled == {k: 2 * v for k, v in once.items()}
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on_replace(monkeypatch):
+    """Make every os.replace raise: the state swap's publishing rename
+    (the pointer's) fails after the new version was written."""
+
+    def boom(src, dst, *a, **k):
+        raise _Crash(dst)
+
+    monkeypatch.setattr(os, "replace", boom)
+
+
+def test_streaming_cms_survives_crash_at_pointer_swap(spark, tmp_path, monkeypatch):
+    """A crash at the state swap of batch 2, then its redelivery: the
+    sketch is row-identical to cms_sketch over all three batches."""
+    from photon_spark.plans.schedule import cms_sketch
+    from photon_spark.streaming.heavy_hitters import StreamingHeavyHitters
+
+    batches = [
+        spark.createDataFrame([(f"host{k % 7}",) for k in range(n)], "host string")
+        for n in (50, 100, 150)
+    ]
+    hh = StreamingHeavyHitters(spark, str(tmp_path / "hh"), depth=4, width=256)
+    hh.process_batch(batches[0], 0)
+    hh.process_batch(batches[1], 1)
+    with monkeypatch.context() as m:
+        _crash_on_replace(m)
+        with pytest.raises(_Crash):
+            hh.process_batch(batches[2], 2)
+    hh.process_batch(batches[2], 2)  # redelivered after restart
+
+    union = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want = {
+        (r["i"], r["bucket"]): r["c"]
+        for r in cms_sketch(union, "host", depth=4, width=256).collect()
+    }
+    got = {(r["i"], r["bucket"]): r["c"] for r in hh.sketch().collect()}
+    assert got == want
+    assert sum(got.values()) == 4 * 300  # depth rows of 300 keys each
+
+
+def test_streaming_quantiles_survives_crash_at_pointer_swap(
+    spark, tmp_path, monkeypatch
+):
+    """Same crash point for the KLL maintainer: n == 300 after the
+    redelivery, and (300 <= k, exact regime) the summary equals the
+    batch sketch of all three batches."""
+    from photon_spark.plans.schedule import kll_merge, kll_partials
+    from photon_spark.streaming.quantiles import StreamingQuantiles
+
+    vals = [float((i * 37) % 101) for i in range(300)]
+    batches = [
+        spark.createDataFrame([(v,) for v in vals[j: j + 100]], "value double")
+        for j in (0, 100, 200)
+    ]
+    sq = StreamingQuantiles(spark, str(tmp_path / "kq"), k=512)
+    sq.process_batch(batches[0], 0)
+    sq.process_batch(batches[1], 1)
+    with monkeypatch.context() as m:
+        _crash_on_replace(m)
+        with pytest.raises(_Crash):
+            sq.process_batch(batches[2], 2)
+    sq.process_batch(batches[2], 2)  # redelivered after restart
+
+    assert sq.quantiles((0.5,)).collect()[0]["n"] == 300
+    df = spark.createDataFrame([(v,) for v in vals], "value double")
+    want = sorted(
+        (r["v"], r["w"])
+        for r in kll_merge(kll_partials(df, "value", 512), 512).collect()
+    )
+    assert sorted((r["v"], r["w"]) for r in sq.summary().collect()) == want
+
+
+_DOCS = [
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    "totally different words live in this second document body",
+    "third entry describing bucket routed shard construction rules",
+]
+
+
+def test_streaming_ingest_dedup_compaction_survives_crash_at_pointer_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A crash at the base swap of the SECOND compact() (the first has
+    no old base to lose): every admitted row stays readable exactly
+    once, and the retried compact() folds to the same rows."""
+    from photon_spark.streaming.ingest_dedup import StreamingIngestDedup
+
+    gate = StreamingIngestDedup(spark, str(tmp_path / "state"))
+    for i, t in enumerate(_DOCS):
+        gate.process_batch(
+            spark.createDataFrame([(i, t)], "doc_id long, text string"), i
+        )
+        if i == 1:
+            assert gate.compact() == 2
+    before = sorted(map(tuple, gate.corpus_bands().collect()))
+    assert {r[0] for r in before} == {0, 1, 2}
+    with monkeypatch.context() as m:
+        _crash_on_replace(m)
+        with pytest.raises(_Crash):
+            gate.compact()
+    assert sorted(map(tuple, gate.corpus_bands().collect())) == before
+    assert gate.compact() == 1
+    assert sorted(map(tuple, gate.corpus_bands().collect())) == before
+
+
+def test_streaming_ingest_dedup_replay_after_compaction_keeps_bucket_cap(
+    spark, tmp_path
+):
+    """A batch replayed after compact() folded it is skipped: re-admitted
+    band rows would double doc 1's buckets past max_bucket=1 and hide
+    doc 2's near-dup match."""
+    from photon_spark.streaming.ingest_dedup import StreamingIngestDedup
+
+    text = (
+        "the quick brown fox jumps over the lazy dog again and again "
+        "in the golden afternoon light near the riverbank meadow"
+    )
+    gate = StreamingIngestDedup(spark, str(tmp_path / "state"), max_bucket=1)
+    b0 = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    gate.process_batch(b0, 0)
+    gate.compact()
+    gate.process_batch(b0, 0)  # checkpoint replay, post-compaction
+    gate.process_batch(
+        spark.createDataFrame([(2, text + " extra")], "doc_id long, text string"),
+        1,
+    )
+    assert [tuple(r) for r in gate.flags().collect()] == [(2, 1)]
+    assert gate.corpus_bands().count() == 4  # doc 1's four bands, once
+
+
+def test_swapped_state_refuses_old_layout(spark, tmp_path):
+    """State written by the pre-pointer layout (parquet files directly
+    in the state dir, no pointer) raises instead of starting empty."""
+    from photon_spark.streaming.heavy_hitters import StreamingHeavyHitters
+
+    spark.createDataFrame([(0, 1, 5)], "i int, bucket int, c long").write.parquet(
+        str(tmp_path / "hh" / "cms_sketch")
+    )
+    hh = StreamingHeavyHitters(spark, str(tmp_path / "hh"))
+    with pytest.raises(ValueError, match="pre-pointer layout"):
+        hh.sketch()
+    with pytest.raises(ValueError, match="pre-pointer layout"):
+        hh.process_batch(spark.createDataFrame([("h",)], "host string"), 0)
