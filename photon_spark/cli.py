@@ -328,14 +328,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 else refetched
             )
         else:
-            from photon_spark.crawl import body_expr
+            from photon_spark.crawl import body_expr, join_pages
 
-            body = pages.select(
-                F.col("doc_id"), body_expr().alias("body")
-            )
-            fetched = waves.join(body, waves.url == body.doc_id, "left").select(
-                waves.url, F.coalesce(F.col("body"), F.lit(DUMMY)).alias("body")
-            )
+            fetched = join_pages(
+                waves, pages.select(F.col("doc_id"), body_expr().alias("body"))
+            ).select("url", "body")
         write_mirror(fetched, os.path.join(args.output, "mirror"))
     if args.export:
         export(result, args.output, args.export)

@@ -104,8 +104,6 @@ class EngineConfig:
     shuffle_partitions: int = 32   # ceiling; waves scale down to size
     urls_per_partition: int = 500  # target wave-partition granularity
     host_salts: int = 8           # fetch partitions a hot host spreads over
-    bloom_expected: int = 1_000_000
-    bloom_fpp: float = 0.01
     # Store maintenance cadence: every K committed waves, rewrite the
     # accumulated deltas into one consolidated base and expire the
     # superseded delta dirs (CrawlStore.compact/expire). 0 = never.

@@ -46,6 +46,18 @@ DATASET_NAMES = (
 )
 
 
+def join_pages(wave: DataFrame, body: DataFrame) -> DataFrame:
+    """The sandbox fetch (S1): left equi-join of a (url, level) wave
+    against the pages table's (doc_id, body) projection; a miss is the
+    'dummy' sentinel (Q11). The production twin is
+    ``sources.fetch_http.fetch_stage``."""
+    return wave.join(body, wave.url == body.doc_id, "left").select(
+        wave.url,
+        wave.level,
+        F.coalesce(F.col("body"), F.lit(DUMMY)).alias("body"),
+    )
+
+
 def _internal_after_max(metrics: list[dict], default: float) -> float:
     """Upper bound on |internal| after the last recorded wave (``default``
     before any wave). A wave recorded without the bound keeps codegen."""
@@ -205,8 +217,8 @@ def run_crawl(
     ``fetcher``: optional replacement fetch stage — a callable
     (url, level) DataFrame → (url, level, body) DataFrame. The
     production HTTP stage is ``sources.fetch_http.fetch_stage``; the
-    default is the sandbox pages-table join. ``pages`` is still used
-    for the zap (robots/sitemap) seed stage either way.
+    default is the sandbox pages-table join, ``join_pages``. ``pages``
+    is still used for the zap (robots/sitemap) seed stage either way.
     """
     cfg = cfg or EngineConfig()
     if main_url.endswith("/"):
@@ -218,17 +230,11 @@ def run_crawl(
     )
 
     def fetch(wave_df: DataFrame) -> DataFrame:
-        """Fetch = left equi-join against the pages table (S1); in
-        production this stage is the mapInPandas HTTP fetch per host
-        partition (sources/fetch_http.py) — same interface, different
-        body source (pass ``fetcher`` to swap it in)."""
+        """The pages-table join (S1) unless a ``fetcher`` is swapped in
+        — same interface, different body source."""
         if fetcher is not None:
             return fetcher(wave_df).select("url", "level", "body")
-        return wave_df.join(body, wave_df.url == body.doc_id, "left").select(
-            wave_df.url,
-            wave_df.level,
-            F.coalesce(F.col("body"), F.lit(DUMMY)).alias("body"),
-        )
+        return join_pages(wave_df, body)
 
     start_wave = 0
     meta: dict = {}
@@ -422,8 +428,10 @@ def run_crawl(
             else:
                 bloom = None
                 if use_bloom and processed_count > 1:
+                    # processed_count bounds |processed| exactly, so the
+                    # bloom keeps its fpp at any crawl size
                     bloom = UrlBloom.build(
-                        acc["processed"], "url", cfg.bloom_expected, cfg.bloom_fpp
+                        acc["processed"], "url", processed_count, 0.01
                     )
                 links = dedup_candidates(candidates, acc["processed"], "url", bloom)
             links = gate_links(links).persist()
@@ -601,7 +609,6 @@ def run_crawl(
                 "internal_after_max": internal_after_max,
                 "urls_candidates": n,
                 "urls_scheduled": n_sched,
-                "fetched": n_sched,
                 "elapsed_s": round(elapsed, 4),
                 "urls_per_s": round(n_sched / elapsed, 2) if elapsed > 0 else None,
                 "partitions": part_counts,

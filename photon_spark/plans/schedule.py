@@ -719,11 +719,10 @@ def recrawl_schedule(
     Shape at scale: one map-side-combinable groupBy((host, url)) — the
     observation log (the big input) is touched exactly once — then a
     per-host top-k window over the far smaller one-row-per-URL frame.
-    A Zipf-hot host with 10^8 distinct URLs would serialize its window
-    task; for a literal k ≤ 1000 Spark's partial WindowGroupLimit caps
-    each host map-side first, as in schedule_wave. Above that, a
-    (host, salt) pre-rank (rank ≤ k within each salt, then over host)
-    returns the identical result set.
+    For a literal k ≤ 1000 Spark's partial WindowGroupLimit caps each
+    host map-side before the host exchange, as in schedule_wave. Above
+    that nothing caps it: each hot host is one window task, so a
+    Zipf-hot host with 10^8 distinct URLs straggles (SCALE.md §1).
     """
     n = F.count(F.lit(1))
     last = F.max(F.unix_timestamp(F.col(ts_col)))
@@ -779,8 +778,9 @@ def recrawl_schedule_cold(
     truth) — gate the union on n_obs ≥ 2.
 
     Shape at scale: the hints frame is one row per sitemap-listed URL
-    (no observation log); one window over host partitions — host skew
-    is handled as in `recrawl_schedule` if one host lists 10^8 URLs.
+    (no observation log); one window over host partitions — capped
+    map-side for a literal k ≤ 1000, else one window task per hot host,
+    as in `recrawl_schedule`.
     """
     h = with_host(hints, url_col) if "host" not in hints.columns else hints
     score = (
@@ -841,7 +841,8 @@ def recrawl_schedule_unified(
     free: each source fills its own columns and NULLs the others —
     cheaper than two full-outer joins and still exact because every
     source is url-unique by contract), then the per-host top-k window
-    — host skew is handled as in `recrawl_schedule`.
+    — capped map-side for a literal k ≤ 1000, else one window task per
+    hot host, as in `recrawl_schedule`.
     ``freshness``: (url, stale_at_s, freshness_s); ``hints``:
     `sitemap_url_hints` output. Either may be None."""
     spark = observations.sparkSession

@@ -7,7 +7,8 @@ at 10^10-URL scale. Each wave is one batch job over three composed,
 individually-tested stages:
 
     schedule   fresh-first + change-rate revisits + politeness cap
-    fetch      conditional GET (sources/fetch_cond) — 304s cost ~200B
+    fetch      conditional GET (sources/fetch_http.fetch_stage with
+               the stored validators attached) — 304s cost ~200B
     merge      apply_revalidation: one url-keyed full-outer MERGE
 
 Scheduling policy per wave w (all integer arithmetic, wave units):
@@ -52,11 +53,8 @@ from pyspark.sql import functions as F
 
 from photon_spark.plans.storage import CrawlStore
 from photon_spark.session import jvm_empty
-from photon_spark.sources.fetch_cond import (
-    CondTransport,
-    apply_revalidation,
-    conditional_fetch_stage,
-)
+from photon_spark.sources.fetch_cond import apply_revalidation
+from photon_spark.sources.fetch_http import Transport, fetch_stage
 
 RECRAWL_SCHEMAS = {
     "state": (
@@ -88,7 +86,7 @@ class RecrawlResult:
 def run_recrawl(
     spark: SparkSession,
     universe: DataFrame,
-    transport_for_wave: Callable[[int], CondTransport],
+    transport_for_wave: Callable[[int], Transport],
     n_waves: int,
     k: int = 2,
     partitions: Optional[int] = None,
@@ -102,8 +100,8 @@ def run_recrawl(
     """Run ``n_waves`` revalidation waves over ``universe`` (a frame
     with a ``url`` column — at scale, the corpus table itself).
 
-    ``transport_for_wave(w)`` returns the CondTransport for wave w —
-    production passes ``lambda w: requests_cond_transport()``; tests
+    ``transport_for_wave(w)`` returns the fetch_stage Transport for
+    wave w — production passes ``lambda w: requests_transport()``; tests
     inject deterministic wave-aware origins. ``k`` is the per-host
     per-wave politeness budget (fresh + revisits combined).
 
@@ -163,7 +161,7 @@ def run_recrawl(
         wave_df = scheduled.join(
             state.select("url", "etag", "last_modified"), "url", "left"
         )
-        fetched = conditional_fetch_stage(
+        fetched = fetch_stage(
             wave_df,
             transport_factory=lambda: transport_for_wave(w),
             delay=delay,

@@ -13,156 +13,32 @@ change-rate studies (Cho & Garcia-Molina 2003, the same policy model
 recrawl_schedule implements) put the unchanged fraction per revisit
 well above half.
 
-Composition (each stage individually tested; the loop is the user's):
+Composition (each stage individually tested; `recrawl.run_recrawl`
+is the looped form):
 
-    validators = prior state (url, etag, last_modified)   # CrawlStore
-    wave   = recrawl_schedule(observations, pages, k)     # policy
-    wave   = wave.join(validators, "url", "left")         # attach
-    result = conditional_fetch_stage(wave, transport)     # this module
-    state, obs = apply_revalidation(prev, result, wave_id) # merge
-    observations = observations.unionByName(obs)          # feeds policy
+    validators = prior state (url, etag, last_modified)    # CrawlStore
+    wave   = recrawl_schedule(observations, pages, k)      # policy
+    wave   = wave.join(validators, "url", "left")          # attach
+    result = fetch_http.fetch_stage(wave, transport)       # revalidate
+    state, obs = apply_revalidation(prev, result, wave_id) # this module
+    observations = observations.unionByName(obs)           # feeds policy
 
-Scale notes: `conditional_fetch_stage` is the same host-partitioned
-`mapInPandas` shape as `fetch_stage` (run it AFTER schedule_wave so
-politeness locality and connection reuse hold); `apply_revalidation`
-is ONE url-keyed full-outer join — both sides are url-unique so the
-join is shuffle-bounded by the page count, and at store scale it is
-exactly the MERGE INTO shape CrawlStore documents (match → update,
-not-matched → insert).
+The fetch itself is the crawl's one HTTP stage: `fetch_stage` sends
+`If-None-Match` / `If-Modified-Since` for every row that carries a
+stored validator and marks a 304 answer `not_modified`, so the crawl
+and the recrawl share one requester — headers, UA rotation, proxies,
+politeness delay, content-type gate and failure mapping.
+
+Scale notes: `apply_revalidation` is ONE url-keyed full-outer join —
+both sides are url-unique so the join is shuffle-bounded by the page
+count, and at store scale it is exactly the MERGE INTO shape
+CrawlStore documents (match → update, not-matched → insert).
 """
 
 from __future__ import annotations
 
-import time
-from typing import Callable, Iterator, Mapping, Tuple
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from photon_spark.config import DUMMY
-from photon_spark.sources.fetch_http import DEFAULT_USER_AGENTS, build_headers
-
-# status/body semantics match fetch_stage (failures → status 0 + DUMMY,
-# non-text 2xx → DUMMY); 304 rows carry not_modified=True, an empty
-# body (the merge keeps the stored one), and the validators that were
-# SENT (they still identify the stored representation, RFC 9110
-# §13.1.2). etag/last_modified on 2xx rows are the RESPONSE validators
-# (null when the origin sent none — such URLs simply refetch in full
-# next time).
-COND_FETCH_SCHEMA = (
-    "url string, level int, status int, body string, "
-    "etag string, last_modified string, not_modified boolean"
-)
-
-# (url, headers, timeout) -> (status, content_type, text, response_headers)
-CondTransport = Callable[
-    [str, Mapping[str, str], float],
-    Tuple[int, str, str, Mapping[str, str]],
-]
-
-
-def requests_cond_transport() -> CondTransport:
-    """Production transport: like fetch_http.requests_transport but
-    surfaces response headers so ETag/Last-Modified can be stored.
-    Lazy import — the sandbox has no network; tests inject fakes."""
-    import requests  # deferred
-
-    session = requests.Session()
-    session.max_redirects = 3
-
-    def do(url: str, headers: Mapping[str, str], timeout: float):
-        resp = session.get(url, headers=dict(headers), timeout=timeout)
-        return (
-            resp.status_code,
-            resp.headers.get("Content-Type", ""),
-            resp.text,
-            dict(resp.headers),
-        )
-
-    return do
-
-
-def conditional_fetch_stage(
-    wave: DataFrame,
-    transport_factory: Callable[[], CondTransport] | None = None,
-    delay: float = 0.0,
-    timeout: float = 6.0,
-    user_agents: tuple[str, ...] = DEFAULT_USER_AGENTS,
-    headers: Mapping[str, str] | None = None,
-    cookie: str | None = None,
-) -> DataFrame:
-    """(url, level[, etag, last_modified]) revalidation wave →
-    COND_FETCH_SCHEMA rows.
-
-    Rows with a stored validator send `If-None-Match` and/or
-    `If-Modified-Since` on top of the regular header set (defaults or
-    the caller's verbatim dict — same replacement semantics as
-    fetch_stage, reference core/requester.py:37); rows without
-    validators are plain unconditional GETs, so a mixed wave (fresh
-    URLs + revisits) needs no split. Same per-request politeness
-    delay, content-type gate, and swallow-to-sentinel failure mapping
-    as fetch_stage."""
-    factory = transport_factory or requests_cond_transport
-    custom = dict(headers) if headers else None
-    cols = set(wave.columns)
-    for c in ("etag", "last_modified"):
-        if c not in cols:
-            wave = wave.withColumn(c, F.lit(None).cast("string"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = factory()  # one session per partition (task)
-        for pdf in batches:
-            out = {
-                "status": [],
-                "body": [],
-                "etag": [],
-                "last_modified": [],
-                "not_modified": [],
-            }
-            for url, req_etag, req_lm in zip(
-                pdf["url"], pdf["etag"], pdf["last_modified"]
-            ):
-                if delay:
-                    time.sleep(delay)
-                hdrs = build_headers(url, user_agents, custom, cookie)
-                if isinstance(req_etag, str) and req_etag:
-                    hdrs["If-None-Match"] = req_etag
-                if isinstance(req_lm, str) and req_lm:
-                    hdrs["If-Modified-Since"] = req_lm
-                try:
-                    status, ctype, text, resp = transport(url, hdrs, timeout)
-                except Exception:
-                    status, ctype, text, resp = 0, "", "", {}
-                resp = {k.lower(): v for k, v in resp.items()}
-                if status == 304:
-                    out["status"].append(304)
-                    out["body"].append("")
-                    out["etag"].append(req_etag if isinstance(req_etag, str) else None)
-                    out["last_modified"].append(
-                        req_lm if isinstance(req_lm, str) else None
-                    )
-                    out["not_modified"].append(True)
-                    continue
-                ok = "text/html" in (ctype or "").lower() or "text/plain" in (
-                    ctype or ""
-                ).lower()
-                out["status"].append(status)
-                out["body"].append(text if ok else DUMMY)
-                out["etag"].append(resp.get("etag"))
-                out["last_modified"].append(resp.get("last-modified"))
-                out["not_modified"].append(False)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "level": pdf["level"],
-                    **out,
-                }
-            )
-
-    return wave.select("url", "level", "etag", "last_modified").mapInPandas(
-        run, schema=COND_FETCH_SCHEMA
-    )
 
 
 def apply_revalidation(
@@ -172,7 +48,7 @@ def apply_revalidation(
     emit the change observations that feed recrawl_schedule.
 
     ``prev``: url-unique stored state (url, body, etag, last_modified,
-    fetched_wave). ``fetched``: url-unique COND_FETCH_SCHEMA rows.
+    fetched_wave). ``fetched``: url-unique `fetch_stage` rows.
     Returns ``(state, observations)``:
 
     * 304 row      → keep stored body + validators; checked, unchanged.
@@ -253,7 +129,7 @@ def http_freshness(
                                             heuristic, the 10% rule)
                   | 0
       with no-store / no-cache forcing 0 (always revalidate; the
-      conditional-GET stage above makes that cheap), and
+      validator-carrying `fetch_stage` makes that cheap), and
       stale_at_s = Date + freshness_s — feed it straight into the
       recrawl wave filter (stale_at_s <= now).
 

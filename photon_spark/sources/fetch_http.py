@@ -29,10 +29,15 @@ Reproduces the reference requester's observable semantics
   empty, so errors map to the sentinel body here too).
 * session reuse: one transport per partition (requester.py:8 SESSION —
   TCP connection reuse per executor task).
+* conditional revalidation (engine addition; the reference never
+  revisits a URL): a wave row carrying a stored ``etag`` /
+  ``last_modified`` sends ``If-None-Match`` / ``If-Modified-Since``,
+  and a 304 answer to such a request is the not-modified row
+  ``fetch_cond.apply_revalidation`` merges (RFC 9110 §13).
 
 ``transport(url, headers: dict, timeout) -> (status, content_type,
-text)`` is injectable: tests drive the stage with a fixture-backed
-fake (no network in this sandbox); production uses
+text, response_headers)`` is injectable: tests drive the stage with a
+fixture-backed fake (no network needed); production uses
 `requests_transport`. The default header set carries the rotated
 'User-Agent'; a custom dict is sent VERBATIM (reference semantics),
 plus 'Cookie' on either when one is configured.
@@ -47,12 +52,23 @@ from urllib.parse import urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from photon_spark.config import DUMMY
 
-Transport = Callable[[str, Mapping[str, str], float], Tuple[int, str, str]]
+# (url, headers, timeout) -> (status, content_type, text, response_headers)
+Transport = Callable[
+    [str, Mapping[str, str], float], Tuple[int, str, str, Mapping[str, str]]
+]
 
-FETCH_SCHEMA = "url string, level int, status int, body string"
+# etag/last_modified: the RESPONSE validators (null when the origin
+# sent none), except on a 304 row, which echoes the validators that
+# were SENT — they still name the stored representation (RFC 9110
+# §13.1.2); its body is empty (the merge keeps the stored one).
+FETCH_SCHEMA = (
+    "url string, level int, status int, body string, "
+    "etag string, last_modified string, not_modified boolean"
+)
 
 DEFAULT_USER_AGENTS = (
     # public UA strings, same rotation role as the reference's
@@ -195,7 +211,12 @@ def requests_transport(proxies: list[dict] | None = None) -> Transport:
             timeout=timeout,
             proxies=pick_proxy(url, proxies),
         )
-        return resp.status_code, resp.headers.get("Content-Type", ""), resp.text
+        return (
+            resp.status_code,
+            resp.headers.get("Content-Type", ""),
+            resp.text,
+            resp.headers,
+        )
 
     return do
 
@@ -210,18 +231,23 @@ class TooManyRedirects(Exception):
 
 REDIRECT_STATUSES = frozenset({301, 302, 303, 307, 308})
 
-SingleHop = Callable[[str, Mapping[str, str], float], Tuple[int, str, str, str | None]]
+
+def _header(headers: Mapping[str, str], name: str) -> str | None:
+    """Case-insensitive response-header lookup (field names are
+    case-insensitive, RFC 9110 §5.1; fakes return plain dicts)."""
+    name = name.lower()
+    return next((v for k, v in headers.items() if k.lower() == name), None)
 
 
-def with_redirects(single_hop: SingleHop, max_redirects: int = 3) -> Transport:
+def with_redirects(single_hop: Transport, max_redirects: int = 3) -> Transport:
     """Redirect-following wrapper over a SINGLE-HOP transport — the
     testable twin of the redirect handling `requests` performs inside
     `requests_transport` (session.max_redirects=3, requester.py:8-9).
 
-    ``single_hop(url, headers, timeout) -> (status, content_type, text,
-    location)`` fetches exactly one response; this wrapper follows
-    301/302/303/307/308 Location hops (relative Locations resolved
-    against the current URL, per RFC 9110) up to `max_redirects`, then
+    ``single_hop`` is a Transport that fetches exactly one response;
+    this wrapper follows 301/302/303/307/308 hops to the response's
+    ``Location`` header (relative Locations resolved against the
+    current URL, per RFC 9110) up to `max_redirects`, then
     raises TooManyRedirects — matching requests: three redirects are
     followed, a fourth aborts the request. A 30x response WITHOUT a
     Location header is returned as-is (requests treats it as a final
@@ -239,11 +265,12 @@ def with_redirects(single_hop: SingleHop, max_redirects: int = 3) -> Transport:
     def do(url: str, headers: Mapping[str, str], timeout: float):
         current = url
         for _ in range(max_redirects + 1):
-            status, ctype, text, location = single_hop(current, headers, timeout)
-            if status in REDIRECT_STATUSES and location:
+            resp = single_hop(current, headers, timeout)
+            location = _header(resp[3], "Location")
+            if resp[0] in REDIRECT_STATUSES and location:
                 current = urljoin(current, location)
                 continue
-            return status, ctype, text
+            return resp
         raise TooManyRedirects(f"exceeded {max_redirects} redirects for {url}")
 
     return do
@@ -259,43 +286,64 @@ def fetch_stage(
     cookie: str | None = None,
     proxies: list[dict] | None = None,
 ) -> DataFrame:
-    """(url, level) wave → (url, level, status, body); body is the
-    'dummy' sentinel for non-text responses and failures. Run AFTER
-    schedule_wave so partitions are host-local (politeness + connection
-    reuse). `headers` replaces the default header set (reference
-    requester.py:37); `cookie` maps the reference -c flag; `proxies`
-    maps --proxy (T15) and only applies to the default production
-    transport — an injected transport owns its own plumbing."""
+    """(url, level[, etag, last_modified]) wave → FETCH_SCHEMA rows;
+    body is the 'dummy' sentinel for non-text responses and failures
+    (status 0). Run AFTER schedule_wave so partitions are host-local
+    (politeness + connection reuse). `headers` replaces the default
+    header set (reference requester.py:37); `cookie` maps the
+    reference -c flag; `proxies` maps --proxy (T15) and only applies
+    to the default production transport — an injected transport owns
+    its own plumbing.
+
+    Rows with a stored validator also send `If-None-Match` and/or
+    `If-Modified-Since`; a 304 answer to them is a not_modified row.
+    Rows without validators (or a wave without the columns) are plain
+    GETs, so a mixed wave (fresh URLs + revisits) needs no split."""
     factory = transport_factory or (
         (lambda: requests_transport(proxies=proxies))
         if proxies
         else requests_transport
     )
     custom = dict(headers) if headers else None
+    validators = [
+        F.col(c) if c in wave.columns else F.lit(None).cast("string").alias(c)
+        for c in ("etag", "last_modified")
+    ]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = factory()  # one session per partition (task)
         for pdf in batches:
-            statuses, bodies = [], []
-            for url in pdf["url"]:
+            out = {c: [] for c in ("status", "body", "etag", "last_modified",
+                                   "not_modified")}
+            for url, etag, lm in zip(pdf["url"], pdf["etag"], pdf["last_modified"]):
                 if delay:
                     time.sleep(delay)  # requester.py:33 — before EVERY request
                 hdrs = build_headers(url, user_agents, custom, cookie)
+                etag, lm = etag or None, lm or None  # '' is no validator
+                if etag:
+                    hdrs["If-None-Match"] = etag
+                if lm:
+                    hdrs["If-Modified-Since"] = lm
                 try:
-                    status, ctype, text = transport(url, hdrs, timeout)
+                    status, ctype, text, resp = transport(url, hdrs, timeout)
                 except Exception:
-                    status, ctype, text = 0, "", ""
-                ctype = (ctype or "").lower()
-                ok = "text/html" in ctype or "text/plain" in ctype
-                statuses.append(status)
-                bodies.append(text if ok else DUMMY)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "level": pdf["level"],
-                    "status": statuses,
-                    "body": bodies,
-                }
-            )
+                    status, ctype, text, resp = 0, "", "", {}
+                not_modified = status == 304 and bool(etag or lm)
+                if not_modified:
+                    body = ""
+                else:
+                    ctype = (ctype or "").lower()
+                    ok = "text/html" in ctype or "text/plain" in ctype
+                    body = text if ok else DUMMY
+                    etag = _header(resp, "ETag")
+                    lm = _header(resp, "Last-Modified")
+                out["status"].append(status)
+                out["body"].append(body)
+                out["etag"].append(etag)
+                out["last_modified"].append(lm)
+                out["not_modified"].append(not_modified)
+            yield pd.DataFrame({"url": pdf["url"], "level": pdf["level"], **out})
 
-    return wave.select("url", "level").mapInPandas(run, schema=FETCH_SCHEMA)
+    return wave.select("url", "level", *validators).mapInPandas(
+        run, schema=FETCH_SCHEMA
+    )

@@ -233,7 +233,7 @@ def test_make_http_fetcher_plumbs_headers(spark):
 
     def factory():
         def do(url, headers, t):
-            return 200, "text/html", _json.dumps(dict(headers))
+            return 200, "text/html", _json.dumps(dict(headers)), {}
 
         return do
 
@@ -374,8 +374,8 @@ def test_cli_clone_http_fetches_each_url_once(spark, tmp_path, monkeypatch):
             if b is None and url.endswith("/"):
                 b = bodies.get(url.rstrip("/"))
             if b is None:
-                return 404, "text/html", ""
-            return 200, "text/html", b
+                return 404, "text/html", "", {}
+            return 200, "text/html", b, {}
 
         return do
 
@@ -445,8 +445,8 @@ def test_cli_clone_http_retries_failed_fetch(spark, tmp_path, monkeypatch):
             if b is None and url.endswith("/"):
                 b = pages.get(url.rstrip("/"))
             if b is None:
-                return 404, "text/html", ""
-            return 200, "text/html", b
+                return 404, "text/html", "", {}
+            return 200, "text/html", b, {}
 
         return do
 

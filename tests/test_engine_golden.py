@@ -146,6 +146,26 @@ def test_bloom_path_resume_identical(spark, fixture_pages, tmp_path, monkeypatch
     assert resumed.processed_count == full.processed_count
 
 
+def test_bloom_sized_to_processed(spark, fixture_pages, monkeypatch):
+    """Each wave's bloom is sized by processed_count: never below the
+    set it is built over (so its fpp holds), never above what the
+    crawl ever processes (no fixed 1M-key bitmap for a small crawl)."""
+    from photon_spark.plans.frontier import UrlBloom
+
+    sized = []
+    build = UrlBloom.build.__func__
+
+    def recording_build(cls, df, col, expected, *args, **kwargs):
+        sized.append((df.count(), expected))
+        return build(cls, df, col, expected, *args, **kwargs)
+
+    monkeypatch.setattr(UrlBloom, "build", classmethod(recording_build))
+    eng = run_crawl(spark, fixture_pages, ROOT, use_bloom=True)
+    assert sized
+    for n, expected in sized:
+        assert n <= expected <= eng.processed_count
+
+
 def test_span_sequences_byte_equal(spark, fixture_pages):
     """input_hint invariant: span sequences of every emitted (fetched)
     document equal the source (kind, text, media_ref, order)."""

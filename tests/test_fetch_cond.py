@@ -1,4 +1,5 @@
-"""Conditional-GET revalidation (sources/fetch_cond.py) — the
+"""Conditional-GET revalidation (sources/fetch_http.fetch_stage with
+validators attached, sources/fetch_cond.apply_revalidation) — the
 fetch-side half of the recrawl loop.
 
 The reference never revisits a URL (photon.py:91-100 pops the frontier
@@ -17,10 +18,8 @@ from pyspark.sql import functions as F
 
 from photon_spark.config import DUMMY
 from photon_spark.plans.schedule import recrawl_schedule
-from photon_spark.sources.fetch_cond import (
-    apply_revalidation,
-    conditional_fetch_stage,
-)
+from photon_spark.sources.fetch_cond import apply_revalidation
+from photon_spark.sources.fetch_http import fetch_stage
 
 ETAG = '"v1-abc"'
 LM = "Tue, 01 Jan 2026 00:00:00 GMT"
@@ -69,7 +68,7 @@ def test_validators_ride_only_when_stored(spark):
     )
     rows = {
         r["url"]: json.loads(r["body"])
-        for r in conditional_fetch_stage(
+        for r in fetch_stage(
             wave, transport_factory=_echo_transport_factory
         ).collect()
     }
@@ -85,7 +84,7 @@ def test_missing_validator_columns_are_synthesized(spark):
     # a plain (url, level) wave — fresh URLs mixed into a revalidation
     # pass — needs no split and no schema surgery by the caller
     wave = spark.createDataFrame([("http://h.test/b", 0)], "url string, level int")
-    [row] = conditional_fetch_stage(
+    [row] = fetch_stage(
         wave, transport_factory=_echo_transport_factory
     ).collect()
     assert row["status"] == 200 and row["not_modified"] is False
@@ -104,7 +103,7 @@ def test_response_semantics_304_200_failure_nontext(spark):
     )
     rows = {
         r["url"]: r
-        for r in conditional_fetch_stage(
+        for r in fetch_stage(
             wave, transport_factory=_validating_transport_factory
         ).collect()
     }
@@ -194,7 +193,7 @@ def test_recrawl_loop_composition(spark):
     attached = wave.join(
         prev.select("url", "etag", "last_modified"), "url", "left"
     )
-    fetched = conditional_fetch_stage(
+    fetched = fetch_stage(
         attached, transport_factory=_validating_transport_factory
     )
     state, obs = apply_revalidation(prev, fetched, wave=1)

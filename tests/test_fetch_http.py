@@ -20,7 +20,7 @@ def _fake_transport_factory():
         def do(url, headers, timeout):
             assert headers.get("User-Agent")  # UA always set
             if url in bodies:
-                return 200, "text/html; charset=utf-8", bodies[url]
+                return 200, "text/html; charset=utf-8", bodies[url], {}
             raise ConnectionError(url)
 
         return do
@@ -53,7 +53,7 @@ def test_fetch_headers_and_cookie_reach_transport(spark):
         def do(url, headers, t):
             # echo the headers through the body — the worker runs in a
             # separate process, so a closure dict would not be visible
-            return 200, "text/html", json.dumps(dict(headers))
+            return 200, "text/html", json.dumps(dict(headers)), {}
 
         return do
 
@@ -95,8 +95,8 @@ def test_fetch_stage_content_type_gate(spark):
     def factory():
         def do(url, headers, t):
             if url.endswith("bin"):
-                return 200, "application/octet-stream", "BINARY"
-            return 200, "text/plain", "PLAIN"
+                return 200, "application/octet-stream", "BINARY", {}
+            return 200, "text/plain", "PLAIN", {}
 
         return do
 
@@ -107,6 +107,34 @@ def test_fetch_stage_content_type_gate(spark):
     rows = {r["url"]: r["body"] for r in fetch_stage(wave, transport_factory=lambda: factory()).collect()}
     assert rows["http://x.test/a.bin"] == DUMMY
     assert rows["http://x.test/a.txt"] == "PLAIN"
+
+
+def test_fetch_stage_plain_wave_records_response_validators(spark):
+    """A plain (url, level) wave's rows carry the response's ETag /
+    Last-Modified (header names matched case-insensitively) — the
+    validators a later recrawl wave sends back."""
+
+    def factory():
+        def do(url, headers, t):
+            if url.endswith("/v"):
+                return 200, "text/html", "V", {
+                    "etag": '"e1"', "Last-Modified": "Tue, 01 Jan 2026 00:00:00 GMT"
+                }
+            return 200, "text/html", "N", {}
+
+        return do
+
+    wave = spark.createDataFrame(
+        [("http://x.test/v", 0), ("http://x.test/none", 0)], "url string, level int"
+    )
+    rows = {
+        r["url"]: (r["status"], r["body"], r["etag"], r["last_modified"], r["not_modified"])
+        for r in fetch_stage(wave, transport_factory=factory).collect()
+    }
+    assert rows == {
+        "http://x.test/v": (200, "V", '"e1"', "Tue, 01 Jan 2026 00:00:00 GMT", False),
+        "http://x.test/none": (200, "N", None, None, False),
+    }
 
 
 def _redirect_site():
@@ -128,12 +156,12 @@ def _redirect_site():
         }
         if url in chains:
             status, loc = chains[url]
-            return status, "text/html", "", loc
+            return status, "text/html", "", {"Location": loc}
         if url == "http://x.test/gone":
             raise ConnectionError(url)
         if url == "http://x.test/noloc":
-            return 301, "text/html", "NO-LOCATION-BODY", None
-        return 200, "text/html", f"BODY:{url}", None
+            return 301, "text/html", "NO-LOCATION-BODY", {}
+        return 200, "text/html", f"BODY:{url}", {}
 
     return hop
 
@@ -147,7 +175,7 @@ def test_with_redirects_follows_up_to_three():
 
     t = with_redirects(_redirect_site())
     assert t("http://x.test/r1", {}, 1.0) == (
-        200, "text/html", "BODY:http://x.test/final"
+        200, "text/html", "BODY:http://x.test/final", {}
     )
     with pytest.raises(TooManyRedirects):
         t("http://x.test/a", {}, 1.0)
@@ -155,7 +183,7 @@ def test_with_redirects_follows_up_to_three():
     assert t("http://x.test/rel", {}, 1.0)[2] == "BODY:http://x.test/sub/page"
     # 30x without Location is a final response, not a hop
     assert t("http://x.test/noloc", {}, 1.0) == (
-        301, "text/html", "NO-LOCATION-BODY"
+        301, "text/html", "NO-LOCATION-BODY", {}
     )
 
 

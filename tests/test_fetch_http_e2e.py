@@ -213,7 +213,9 @@ class _ProxyHandler(BaseHTTPRequestHandler):
     map means the 'origin' host needs no DNS at all."""
 
     bodies: dict[str, str] = {}
+    etags: dict[str, str] = {}  # absolute URI -> ETag the origin serves
     seen_uris: list[str] = []
+    seen_headers: dict[str, dict] = {}
     lock = threading.Lock()
 
     def log_message(self, *a):
@@ -222,6 +224,13 @@ class _ProxyHandler(BaseHTTPRequestHandler):
     def do_GET(self):  # noqa: N802
         with self.lock:
             self.seen_uris.append(self.path)
+            self.seen_headers[self.path] = dict(self.headers)
+        etag = self.etags.get(self.path)
+        if etag is not None and self.headers.get("If-None-Match") == etag:
+            self.send_response(304)
+            self.send_header("ETag", etag)
+            self.end_headers()
+            return
         body = self.bodies.get(self.path)
         if body is None:
             self.send_response(404)
@@ -232,6 +241,8 @@ class _ProxyHandler(BaseHTTPRequestHandler):
         self.send_response(200)
         self.send_header("Content-Type", "text/html; charset=utf-8")
         self.send_header("Content-Length", str(len(data)))
+        if etag is not None:
+            self.send_header("ETag", etag)
         self.end_headers()
         self.wfile.write(data)
 
@@ -281,6 +292,48 @@ def test_proxy_plumbing_on_wire(spark):
     assert picks == [pick_proxy(f"http://x.test/{i}", pool) for i in range(50)]
     assert len({id(p) for p in picks}) > 1  # the pool actually rotates
     assert pick_proxy("http://x.test/", None) is None
+
+
+def test_revalidation_wave_through_proxy(spark):
+    """A recrawl wave (stored ETag attached) goes through the same
+    production stage as the crawl, so --proxy reaches it: the proxy
+    sees the absolute URI with If-None-Match, and its 304 comes back
+    as a not-modified row; a row without a validator is a plain GET
+    whose response ETag is recorded."""
+    from photon_spark.sources.fetch_http import parse_proxy
+
+    cached = "http://phantom.fixture.test/cached"
+    fresh = "http://phantom.fixture.test/fresh"
+    _ProxyHandler.bodies = {cached: "<html>c</html>", fresh: "<html>f</html>"}
+    _ProxyHandler.etags = {cached: '"c1"', fresh: '"f1"'}
+    _ProxyHandler.seen_uris = []
+    _ProxyHandler.seen_headers = {}
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _ProxyHandler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        wave = spark.createDataFrame(
+            [(cached, 1, '"c1"', None), (fresh, 1, None, None)],
+            "url string, level int, etag string, last_modified string",
+        )
+        rows = {
+            r["url"]: r
+            for r in fetch_stage(
+                wave,
+                proxies=parse_proxy(f"127.0.0.1:{server.server_address[1]}"),
+            ).collect()
+        }
+    finally:
+        _ProxyHandler.etags = {}
+        server.shutdown()
+        server.server_close()
+    assert _ProxyHandler.seen_headers[cached].get("If-None-Match") == '"c1"'
+    assert "If-None-Match" not in _ProxyHandler.seen_headers[fresh]
+    c, f = rows[cached], rows[fresh]
+    assert (c["status"], c["body"], c["etag"], c["not_modified"]) == (
+        304, "", '"c1"', True
+    )
+    assert (f["status"], f["etag"], f["not_modified"]) == (200, '"f1"', False)
+    assert "<html>f</html>" in f["body"]
 
 
 def test_cookie_rides_to_the_wire(spark, site):

@@ -811,7 +811,6 @@ def test_streaming_ingest_dedup_grows_corpus(spark, tmp_path):
     assert twin == {(n, m) for (n, m) in flags2 if n >= 20}
 
 
-@pytest.mark.slow
 def test_streaming_ingest_dedup_replay_idempotent(spark, tmp_path):
     """Reprocessing the same batch_id overwrites its own state subdirs:
     corpus and flags are unchanged after a replay."""
@@ -831,7 +830,6 @@ def test_streaming_ingest_dedup_replay_idempotent(spark, tmp_path):
     assert gate.flags().count() == 0
 
 
-@pytest.mark.slow
 def test_streaming_ingest_dedup_compaction(spark, tmp_path):
     """compact() folds batch dirs into one base with identical distinct
     content; matching behavior and subsequent growth are unchanged."""
@@ -871,7 +869,6 @@ def test_streaming_ingest_dedup_compaction(spark, tmp_path):
     assert sorted(map(tuple, gate.corpus_bands().collect())) == after
 
 
-@pytest.mark.slow
 def test_streaming_ingest_dedup_replay_after_compaction(spark, tmp_path):
     """Replaying a batch AFTER compaction folded its rows into base:
     self-matches are filtered, the batch re-admits, corpus content is
@@ -1044,7 +1041,6 @@ def test_streaming_quantiles_compaction_regime_bounds(spark, tmp_path):
         assert abs(true_rank - target) <= 0.05 * n, (r["q"], true_rank)
 
 
-@pytest.mark.slow
 def test_streaming_quantiles_replay_idempotent(spark, tmp_path):
     """A re-delivered batch_id (foreachBatch replay after restart)
     must be a no-op: n and the summary stay exactly what one
@@ -1067,7 +1063,6 @@ def test_streaming_quantiles_replay_idempotent(spark, tmp_path):
     assert sq.quantiles((0.5,)).collect()[0]["n"] == 2 * len(vals)
 
 
-@pytest.mark.slow
 def test_streaming_cms_replay_idempotent(spark, tmp_path):
     """Same replay contract for the CMS maintainer: re-delivering the
     last batch_id must not double-count."""
