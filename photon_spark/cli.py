@@ -295,7 +295,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         waves = result.waves.select("url", "level")
         if fetcher is not None:
-            # Bodies fetched during the crawl are persisted on
+            # Bodies fetched during the crawl are kept cached on
             # result.fetched_bodies — no second network pass. Waves
             # not covered there (e.g. --resume continuing a store from
             # an earlier process) are re-fetched, but routed through

@@ -57,6 +57,12 @@ one consolidated base + the recent tail.
 Scalar counters ride in the manifest meta (processed_count includes
 the reference's 'dummy' sentinel, Q11).
 
+`WaveState` is the one state holder of the wave loops (crawl.run_crawl,
+recrawl.run_recrawl): resume from the manifest, one snapshot per wave
+(this store's commit + load, or without a store one tagged in-memory
+checkpoint that returns what load() returns), and the release of what
+each wave caches.
+
 Iceberg mapping (per interface call — what an Iceberg-backed
 implementation runs; the conformance suite in
 tests/test_storage_contract.py is the contract it must pass unchanged):
@@ -131,6 +137,51 @@ def _write_json_atomic(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
+def _wide_columns(schemas: dict[str, str]) -> dict[str, str]:
+    """column → type of the shared wide schema of the tables `schemas`
+    declares: every table's columns, each name once."""
+    cols: dict[str, str] = {}
+    for name, schema in schemas.items():
+        if not _TABLE_NAME.fullmatch(name):
+            raise ValueError(
+                f"table name {name!r}: only [A-Za-z0-9_.-] (it is a"
+                f" partition value of the on-disk layout)"
+            )
+        for col, tp in split_schema(schema):
+            if col == TABLE_TAG:
+                raise ValueError(
+                    f"table {name!r}: column {TABLE_TAG!r} is the store's table tag"
+                )
+            prev = cols.setdefault(col, tp)
+            if prev.replace(" ", "").lower() != tp.replace(" ", "").lower():
+                raise ValueError(
+                    f"column {col!r} is {prev} in one table and {tp} in"
+                    f" {name!r}; tables sharing a column name must agree"
+                    f" on its type"
+                )
+    return cols
+
+
+def _tagged(frames: dict[str, DataFrame], schemas: dict[str, str]) -> DataFrame:
+    """One relation over the wide schema: each table's rows in its own
+    columns, NULL in the rest, its name in the tag."""
+    columns = _wide_columns(schemas)
+    out = None
+    for name, df in frames.items():
+        if name not in schemas:
+            raise ValueError(f"unknown table {name!r}")
+        own = {c for c, _ in split_schema(schemas[name])}
+        f = df.select(
+            *[
+                (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
+                for c, tp in columns.items()
+            ],
+            F.lit(name).alias(TABLE_TAG),
+        )
+        out = f if out is None else out.unionByName(f)
+    return out
+
+
 class CrawlStore:
     def __init__(
         self,
@@ -167,32 +218,8 @@ class CrawlStore:
         self.bucket_seen = bucket_seen
         self.schemas = dict(schemas) if schemas is not None else dict(STATE_SCHEMAS)
         self.upsert_keys = dict(upsert_keys) if upsert_keys else {}
-        self._columns = self._wide_columns()
+        _wide_columns(self.schemas)  # validates the table set
         os.makedirs(root, exist_ok=True)
-
-    def _wide_columns(self) -> dict[str, str]:
-        """column → type of the shared on-disk schema: every table's
-        columns, each name once."""
-        cols: dict[str, str] = {}
-        for name, schema in self.schemas.items():
-            if not _TABLE_NAME.fullmatch(name):
-                raise ValueError(
-                    f"table name {name!r}: only [A-Za-z0-9_.-] (it is a"
-                    f" partition value of the on-disk layout)"
-                )
-            for col, tp in split_schema(schema):
-                if col == TABLE_TAG:
-                    raise ValueError(
-                        f"table {name!r}: column {TABLE_TAG!r} is the store's table tag"
-                    )
-                prev = cols.setdefault(col, tp)
-                if prev.replace(" ", "").lower() != tp.replace(" ", "").lower():
-                    raise ValueError(
-                        f"column {col!r} is {prev} in one table and {tp} in"
-                        f" {name!r}; tables sharing a column name must agree"
-                        f" on its type"
-                    )
-        return cols
 
     def _bucket_table_name(self, gen: int) -> str:
         import hashlib
@@ -251,24 +278,6 @@ class CrawlStore:
         are pruned."""
         return spark.read.schema(self.schemas[name]).parquet(*paths)
 
-    def _tagged(self, frames: dict[str, DataFrame]) -> DataFrame:
-        """One relation over the wide schema: each table's rows in its
-        own columns, NULL in the rest, its name in the tag."""
-        out = None
-        for name, df in frames.items():
-            if name not in self.schemas:
-                raise ValueError(f"unknown table {name!r}")
-            own = {c for c, _ in split_schema(self.schemas[name])}
-            f = df.select(
-                *[
-                    (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
-                    for c, tp in self._columns.items()
-                ],
-                F.lit(name).alias(TABLE_TAG),
-            )
-            out = f if out is None else out.unionByName(f)
-        return out
-
     def _write_tagged(self, tagged: DataFrame, parent: str, names) -> list[str]:
         """Write a tagged union into <root>/<parent>/ as one job; returns
         the tables whose dir landed (an empty table writes none)."""
@@ -292,7 +301,7 @@ class CrawlStore:
         records which tables each wave touched so load() lists only
         real paths."""
         written = (
-            self._write_tagged(self._tagged(deltas), f"wave={wave}", deltas)
+            self._write_tagged(_tagged(deltas, self.schemas), f"wave={wave}", deltas)
             if deltas
             else []
         )
@@ -462,7 +471,7 @@ class CrawlStore:
                 for n in plain
             }
             tables = self._write_tagged(
-                self._tagged(frames).dropDuplicates(), base_dir, plain
+                _tagged(frames, self.schemas).dropDuplicates(), base_dir, plain
             )
         bucketed_processed = None
         if bucketed:
@@ -565,6 +574,116 @@ class CrawlStore:
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
+
+
+def _release(frames: list[DataFrame]) -> None:
+    """Drop each frame's cached blocks: a persisted frame's through the
+    cache manager, a localCheckpoint's through its RDD (neither
+    DataFrame.unpersist nor catalog.clearCache drops those)."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+class WaveState:
+    """The state a wave loop (crawl.run_crawl, recrawl.run_recrawl)
+    carries from one wave to the next, and the lifetime of what the
+    waves cache. Used as a context manager.
+
+    Start: with ``resume`` and a committed wave in ``store``, the
+    store's latest snapshot; otherwise every table of ``schemas``
+    empty, and the store (if any) reset so an earlier lineage's deltas
+    cannot leak into this one. ``first_wave`` is the wave to run next,
+    ``meta`` the manifest meta ({} on a fresh start), ``state`` one
+    frame per table.
+
+    ``snapshot`` replaces the state once per wave and returns what
+    ``CrawlStore.load`` returns, one deduplicated frame per table. With
+    a store it commits the wave's delta (compacting every
+    ``compact_every`` waves) and loads; without one it takes ONE eager
+    localCheckpoint of the new state's tables as one tagged union,
+    deduplicated once, and splits it back by tag.
+
+    Lifetimes: ``hold`` registers a frame the caller cached for one
+    wave; the next snapshot releases it, with the previous in-memory
+    checkpoint, once the new state no longer reads them. ``keep``
+    registers one for the whole call. Leaving the block releases
+    everything still registered, the current checkpoint included,
+    except what ``hand_over`` gave to the caller's result.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        schemas: dict[str, str],
+        store: CrawlStore | None = None,
+        resume: bool = False,
+        compact_every: int = 0,
+    ):
+        self.spark, self.schemas, self.store = spark, schemas, store
+        self.compact_every = compact_every
+        self._wave: list[DataFrame] = []  # released at the next snapshot
+        self._kept: list[DataFrame] = []  # released on leaving the block
+        self._checkpoint: list[DataFrame] = []  # the in-memory snapshot, if any
+        latest = store.latest() if resume and store is not None else None
+        if latest is None:
+            if store is not None:
+                store.reset()
+            self.first_wave, self.meta = 0, {}
+            self.state = {n: jvm_empty(spark, s) for n, s in schemas.items()}
+        else:
+            last_wave, self.meta = latest
+            self.first_wave = last_wave + 1
+            self.state = store.load(spark, last_wave)
+
+    def __enter__(self) -> "WaveState":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _release(self._wave + self._kept + self._checkpoint)
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        self._wave.append(df)
+        return df
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        self._kept.append(df)
+        return df
+
+    def hand_over(self, *frames: DataFrame) -> None:
+        """The caller's result holds the current snapshot and ``frames``
+        from here on."""
+        self._kept = [f for f in self._kept if all(f is not g for g in frames)]
+        self._checkpoint = []
+
+    def snapshot(
+        self,
+        wave: int,
+        state: dict[str, DataFrame],
+        delta: dict[str, DataFrame],
+        meta: dict,
+    ) -> dict[str, DataFrame]:
+        store = self.store
+        if store is not None:
+            store.commit(wave, delta, meta)
+            if self.compact_every and (wave + 1) % self.compact_every == 0:
+                store.compact(self.spark)
+                store.expire()
+            out = store.load(self.spark, wave)
+        else:
+            self._wave += self._checkpoint
+            tagged = _tagged(state, self.schemas).dropDuplicates()
+            self._checkpoint = [tagged.localCheckpoint(eager=True)]
+            out = {
+                name: self._checkpoint[0].filter(F.col(TABLE_TAG) == name)
+                .select(*[c for c, _ in split_schema(schema)])
+                for name, schema in self.schemas.items()
+            }
+        _release(self._wave)
+        self._wave = []
+        return out
 
 
 class SwappedTable:

@@ -33,8 +33,11 @@ the per-host cap); the log is touched once per wave.
 State persists in an upsert CrawlStore table (`recrawl_store`): each
 wave commits only the rows it actually revalidated — O(|wave|), like
 an Iceberg MERGE INTO with merge-on-read resolution at load; the
-observation log is a plain append table. Resume restarts from the
-manifest exactly like run_crawl.
+observation log is a plain append table. Without a store, each wave's
+snapshot is one localCheckpoint of both tables, deduplicated, so it
+holds the rows a store's load() would return. Resume, snapshots and
+the release of each wave's cached `fetched` frame are
+`plans/storage.WaveState`'s, the same code run_crawl runs.
 
 Failure semantics (from apply_revalidation, pinned by tests): a
 transport failure keeps every stored field (stale beats lost) and
@@ -51,8 +54,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from photon_spark.plans.storage import CrawlStore
-from photon_spark.session import jvm_empty
+from photon_spark.plans.storage import CrawlStore, WaveState
 from photon_spark.sources.fetch_cond import apply_revalidation
 from photon_spark.sources.fetch_http import Transport, fetch_stage
 
@@ -106,119 +108,103 @@ def run_recrawl(
     per-wave politeness budget (fresh + revisits combined).
 
     ``stop_after_wave`` simulates a crash for resume tests: state is
-    committed to ``store`` and the function returns None.
+    committed to ``store``, everything the call cached is released,
+    and the function returns None. A result holds the last wave's
+    snapshot (a localCheckpoint, without a store) cached.
     """
     from photon_spark.plans.schedule import schedule_wave
 
-    start_wave = 0
-    if resume and store is not None and store.latest() is not None:
-        last_wave, _meta = store.latest()
-        loaded = store.load(spark, last_wave)
-        state = loaded["state"]
-        observations = loaded["observations"]
-        start_wave = last_wave + 1
-    else:
-        if store is not None:
-            store.reset()
-        state = jvm_empty(spark, RECRAWL_SCHEMAS["state"])
-        observations = jvm_empty(spark, RECRAWL_SCHEMAS["observations"])
+    with WaveState(spark, RECRAWL_SCHEMAS, store, resume) as ws:
+        state, observations = ws.state["state"], ws.state["observations"]
+        metrics: list[dict] = []
+        for w in range(ws.first_wave, n_waves):
+            t0 = time.time()
 
-    metrics: list[dict] = []
-    for w in range(start_wave, n_waves):
-        t0 = time.time()
+            # ---- score revisits: ONE groupBy over the observation log.
+            ch_wave = F.when(F.col("changed") == 1, F.col("wave"))
+            g = observations.groupBy("url").agg(
+                F.sum("changed").alias("n_ch"),
+                F.max(ch_wave).alias("last_ch"),
+                F.min(ch_wave).alias("first_ch"),
+                F.max("wave").alias("last_checked"),
+            )
+            span = F.col("last_ch") - F.col("first_ch")
+            rate = F.expr(
+                f"(({w} - last_ch) * (n_ch - 1) * 1000000) div (last_ch - first_ch)"
+            )
+            revisits = g.select(
+                "url",
+                F.when((span > 0) & (rate > 0), rate)
+                .otherwise(-(F.col("last_checked") + 1))
+                .cast("long")
+                .alias("score"),
+            )
+            fresh = universe.select("url").join(
+                state.select("url"), "url", "left_anti"
+            ).select("url", F.lit(_FRESH_SCORE).alias("score"))
 
-        # ---- score revisits: ONE groupBy over the observation log.
-        ch_wave = F.when(F.col("changed") == 1, F.col("wave"))
-        g = observations.groupBy("url").agg(
-            F.sum("changed").alias("n_ch"),
-            F.max(ch_wave).alias("last_ch"),
-            F.min(ch_wave).alias("first_ch"),
-            F.max("wave").alias("last_checked"),
-        )
-        span = F.col("last_ch") - F.col("first_ch")
-        rate = F.expr(
-            f"(({w} - last_ch) * (n_ch - 1) * 1000000) div (last_ch - first_ch)"
-        )
-        revisits = g.select(
-            "url",
-            F.when((span > 0) & (rate > 0), rate)
-            .otherwise(-(F.col("last_checked") + 1))
-            .cast("long")
-            .alias("score"),
-        )
-        fresh = universe.select("url").join(
-            state.select("url"), "url", "left_anti"
-        ).select("url", F.lit(_FRESH_SCORE).alias("score"))
+            scheduled = schedule_wave(
+                fresh.unionByName(revisits).withColumn("level", F.lit(w)),
+                budget=k,
+                partitions=partitions,
+                salts=salts,
+            ).select("url", "level")
 
-        scheduled = schedule_wave(
-            fresh.unionByName(revisits).withColumn("level", F.lit(w)),
-            budget=k,
-            partitions=partitions,
-            salts=salts,
-        ).select("url", "level")
+            # ---- attach stored validators, revalidate over the wire.
+            wave_df = scheduled.join(
+                state.select("url", "etag", "last_modified"), "url", "left"
+            )
+            fetched = ws.hold(
+                fetch_stage(
+                    wave_df,
+                    transport_factory=lambda: transport_for_wave(w),
+                    delay=delay,
+                    timeout=timeout,
+                ).persist()
+            )
+            mrow = fetched.agg(
+                F.count(F.lit(1)).alias("scheduled"),
+                F.sum(F.col("not_modified").cast("int")).alias("n_unchanged"),
+                F.sum((F.col("status") == 0).cast("int")).alias("n_failed"),
+            ).collect()[0]
 
-        # ---- attach stored validators, revalidate over the wire.
-        wave_df = scheduled.join(
-            state.select("url", "etag", "last_modified"), "url", "left"
-        )
-        fetched = fetch_stage(
-            wave_df,
-            transport_factory=lambda: transport_for_wave(w),
-            delay=delay,
-            timeout=timeout,
-        ).persist()
-        mrow = fetched.agg(
-            F.count(F.lit(1)).alias("scheduled"),
-            F.sum(F.col("not_modified").cast("int")).alias("n_unchanged"),
-            F.sum((F.col("status") == 0).cast("int")).alias("n_failed"),
-        ).collect()[0]
-
-        # ---- merge + grow the log. Failed-first-fetch rows come out
-        # of the merge all-null except url; dropping them (no stored
-        # fetch ⇒ fetched_wave null) reschedules the URL as fresh.
-        state, obs_w = apply_revalidation(state, fetched, wave=w)
-        state = state.filter(F.col("fetched_wave").isNotNull())
-        observations = observations.unionByName(obs_w)
-
-        if store is not None:
-            store.commit(
+            # ---- merge + grow the log. Failed-first-fetch rows come out
+            # of the merge all-null except url; dropping them (no stored
+            # fetch ⇒ fetched_wave null) reschedules the URL as fresh.
+            state, obs_w = apply_revalidation(state, fetched, wave=w)
+            state = state.filter(F.col("fetched_wave").isNotNull())
+            snap = ws.snapshot(
                 w,
-                {
-                    # O(|wave|) upsert delta: only rows touched this wave
-                    "state": state.filter(F.col("checked_wave") == w),
-                    "observations": obs_w,
-                },
+                {"state": state, "observations": observations.unionByName(obs_w)},
+                # O(|wave|) upsert delta: only rows touched this wave
+                {"state": state.filter(F.col("checked_wave") == w), "observations": obs_w},
                 {"wave": w},
             )
-            loaded = store.load(spark, w)
-            state = loaded["state"]
-            observations = loaded["observations"]
-        else:
-            state = state.localCheckpoint(eager=True)
-            observations = observations.localCheckpoint(eager=True)
+            state, observations = snap["state"], snap["observations"]
 
-        n_sched = int(mrow["scheduled"])
-        n_unch = int(mrow["n_unchanged"] or 0)
-        n_fail = int(mrow["n_failed"] or 0)
-        elapsed = time.time() - t0
-        metrics.append(
-            {
-                "wave": w,
-                "scheduled": n_sched,
-                "n_modified": n_sched - n_unch - n_fail,
-                "n_unchanged": n_unch,
-                "n_failed": n_fail,
-                "elapsed_s": round(elapsed, 4),
-            }
+            n_sched = int(mrow["scheduled"])
+            n_unch = int(mrow["n_unchanged"] or 0)
+            n_fail = int(mrow["n_failed"] or 0)
+            elapsed = time.time() - t0
+            metrics.append(
+                {
+                    "wave": w,
+                    "scheduled": n_sched,
+                    "n_modified": n_sched - n_unch - n_fail,
+                    "n_unchanged": n_unch,
+                    "n_failed": n_fail,
+                    "elapsed_s": round(elapsed, 4),
+                }
+            )
+            if stop_after_wave is not None and w >= stop_after_wave:
+                return None
+
+        # Uniform contract for checked_wave regardless of persistence mode:
+        # the last SUCCESSFUL check per url, recomputed from the log (the
+        # in-loop state only carries the current wave's marker).
+        last_check = observations.groupBy("url").agg(
+            F.max("wave").cast("int").alias("checked_wave")
         )
-        if stop_after_wave is not None and w >= stop_after_wave:
-            return None
-
-    # Uniform contract for checked_wave regardless of persistence mode:
-    # the last SUCCESSFUL check per url, recomputed from the log (the
-    # in-loop state only carries the current wave's marker).
-    last_check = observations.groupBy("url").agg(
-        F.max("wave").cast("int").alias("checked_wave")
-    )
-    state = state.drop("checked_wave").join(last_check, "url", "left")
-    return RecrawlResult(state=state, observations=observations, metrics=metrics)
+        state = state.drop("checked_wave").join(last_check, "url", "left")
+        ws.hand_over()
+        return RecrawlResult(state=state, observations=observations, metrics=metrics)

@@ -1,7 +1,8 @@
 """Profile crawls on the engine's standard session: per-wave elapsed
 time, Spark jobs, Janino compiles (count and milliseconds, from Spark's
-CodegenMetrics) and the CPU seconds of the driver, the JVM and the
-Python workers.
+CodegenMetrics), the CPU seconds of the driver, the JVM and the
+Python workers, and the RDDs the crawl left persisted (with its result
+still held; a count that grows with the waves is a cache leak).
 
     python scripts/profile_crawl.py                       # every crawl below
     python scripts/profile_crawl.py --crawl resume_http   # one, in a cold JVM
@@ -76,7 +77,8 @@ def cpu_split() -> dict[str, float]:
 
 
 class Probe:
-    """Jobs, compiles and CPU between construction and report()."""
+    """Jobs, compiles, CPU and newly persisted RDDs between construction
+    and report()."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -85,6 +87,10 @@ class Probe:
         self.jobs0 = self._jobs()
         self.compiles0 = janino_compiles(spark)
         self.cpu0 = cpu_split()
+        self.rdds0 = self._persisted()
+
+    def _persisted(self) -> set[int]:
+        return set(self.spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def _jobs(self) -> int:
         self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -99,11 +105,12 @@ class Probe:
         cpu = cpu_split()
         split = {k: cpu[k] - self.cpu0[k] for k in cpu}
         ms_txt = f"{ms:.0f} ms" if ms is not None else "n/a ms"
+        left = len(self._persisted() - self.rdds0)
         print(
             f"{label}: {wall:.2f}s wall, {jobs} jobs, {n} Janino compiles"
             f" ({ms_txt}), CPU-s jvm {split['jvm']:.1f} workers"
             f" {split['workers']:.1f} driver {split['driver']:.1f}"
-            f" (total {sum(split.values()):.1f})"
+            f" (total {sum(split.values()):.1f}), {left} RDDs left persisted"
         )
 
 

@@ -25,6 +25,7 @@ from photon_spark.crawl import run_crawl
 from photon_spark.operators.extract import body_expr
 from photon_spark.plans.storage import CrawlStore
 from tests.test_storage_jobs import _jobs
+from tests.test_wave_state import persisted
 
 WHOLE_STAGE = "spark.sql.codegen.wholeStage"
 FACTORY = "spark.sql.codegen.factoryMode"
@@ -81,17 +82,23 @@ def test_stop_after_wave_restores(spark, fixture_pages, tmp_path):
     before = _set_values(spark)
     seen = []
     store = CrawlStore(str(tmp_path / "store"))
+    spark.catalog.clearCache()  # else body may read an earlier crawl's cache
+    cached = persisted(spark)
     out = run_crawl(spark, fixture_pages, ROOT, store=store, stop_after_wave=0,
                     fetcher=_fetcher(fixture_pages, seen))
     assert out is None and seen == [("false", "NO_CODEGEN")]
     assert _set_values(spark) == before
+    assert not persisted(spark) - cached  # body and the wave's frames released
 
 
 def test_failing_fetcher_restores(spark, fixture_pages):
     before = _set_values(spark)
+    spark.catalog.clearCache()  # else body may read an earlier crawl's cache
+    cached = persisted(spark)
     with pytest.raises(RuntimeError, match="fetch failed"):
         run_crawl(spark, fixture_pages, ROOT, fetcher=_fetcher(fixture_pages, [], fail=True))
     assert _set_values(spark) == before
+    assert not persisted(spark) - cached  # body and the wave's frames released
 
 
 def test_caller_values_come_back(spark, fixture_pages):
@@ -179,8 +186,12 @@ def test_store_crawl_job_count_per_wave(spark, fixture_pages, tmp_path):
     and the post-loop scripts count) runs 21. The traced benchmark
     reports 7 per wave because its forcing probes absorb the rest.
     Cached frames of earlier crawls would let an identical plan skip
-    its jobs, so the cache is cleared first."""
+    its jobs, so the cache is cleared first. The fetch source (the
+    fetcher's body column) is then cached for both calls, as an origin
+    stays up across a crash: run_crawl releases only what it cached."""
     spark.catalog.clearCache()
+    source = fixture_pages.select("doc_id", body_expr().alias("body")).persist()
+    source.count()
     cfg = EngineConfig(crawl_level=2, only_urls=False, extract_keys=True,
                        shuffle_partitions=4, compact_every=2)
     store = CrawlStore(str(tmp_path / "store"))
@@ -189,5 +200,6 @@ def test_store_crawl_job_count_per_wave(spark, fixture_pages, tmp_path):
                                                 stop_after_wave=0, **kw))
     res, resumed = _jobs(spark, lambda: run_crawl(spark, fixture_pages, ROOT,
                                                   resume=True, **kw))
+    source.unpersist()
     assert [m["wave"] for m in res.metrics] == [1]
     assert crashed <= 10 and resumed <= 21, (crashed, resumed)

@@ -233,3 +233,34 @@ def test_upsert_delta_internal_dup_is_rejected(spark, tmp_path):
     st.commit(0, {"state": spark.createDataFrame(rows, sch)}, {})
     with pytest.raises(Exception):
         st.load(spark, 0)["state"].collect()
+
+
+def test_memory_recrawl_equals_store_recrawl(spark, tmp_path):
+    """The in-memory snapshot returns what the store's load() returns,
+    row for row."""
+    uni = _universe(spark, URLS)
+    memory = run_recrawl(spark, uni, _origin(VERSIONS), n_waves=4, k=2)
+    stored = run_recrawl(
+        spark, uni, _origin(VERSIONS), n_waves=4, k=2,
+        store=recrawl_store(str(tmp_path / "s")),
+    )
+    key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert key(memory.state) == key(stored.state)
+    assert key(memory.observations) == key(stored.observations)
+
+
+def test_memory_recrawl_job_count(spark):
+    """Job-count guard for the in-memory recrawl: one tagged snapshot
+    job per wave. Untraced counts, every AQE query stage included; the
+    cache is cleared first, as an identical earlier plan would let a
+    call skip its jobs."""
+    from tests.test_storage_jobs import _jobs
+
+    uni = _universe(spark, URLS)
+    jobs = {}
+    for n in (2, 4):
+        spark.catalog.clearCache()
+        _, jobs[n] = _jobs(
+            spark, lambda: run_recrawl(spark, uni, _origin(VERSIONS), n_waves=n, k=2)
+        )
+    assert jobs[2] <= 19 and jobs[4] <= 43, jobs
