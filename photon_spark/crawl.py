@@ -32,7 +32,6 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import Optional
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,14 +99,10 @@ class CrawlResult:
     def results(self) -> DataFrame:
         """Single (dataset, value) table — the reference's output dir
         as one relation (SURVEY.md §1.2 K1)."""
-        parts = []
-        for name in DATASET_NAMES:
-            df = self.datasets[name]
-            parts.append(df.select(F.lit(name).alias("dataset"), F.col("value")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, [
+            self.datasets[name].select(F.lit(name).alias("dataset"), F.col("value"))
+            for name in DATASET_NAMES
+        ])
 
     def to_sets(self, max_rows: int = 5_000_000) -> dict[str, set]:
         """Collect every dataset — test/CLI helper, not for big runs.
@@ -124,14 +119,10 @@ class CrawlResult:
         names = list(self.datasets)
         if not names:
             return {}
-        tagged = None
-        for i, name in enumerate(names):
-            part = (
-                self.datasets[name]
-                .limit(max_rows + 1)
-                .select(F.lit(i).alias("_d"), F.col("value"))
-            )
-            tagged = part if tagged is None else tagged.unionAll(part)
+        tagged = reduce(DataFrame.unionAll, [
+            self.datasets[name].limit(max_rows + 1).select(F.lit(i).alias("_d"), F.col("value"))
+            for i, name in enumerate(names)
+        ])
         # Small crawls collect interpreted (session.small_plans), sized
         # by the bound on the final |internal|; the other datasets are
         # by-products of the same fetched pages.
@@ -243,11 +234,9 @@ def run_crawl(
         main_url = main_url[:-1]
 
     with WaveState(spark, STATE_SCHEMAS, store, resume, cfg.compact_every) as ws:
-        body = pages.select(F.col("doc_id"), body_expr().alias("body"))
-        if body.storageLevel == StorageLevel.NONE:
-            # released on return; a cache of the same plan that the
-            # caller made stays the caller's
-            body = ws.keep(body.persist())
+        body = ws.keep(
+            pages.select(F.col("doc_id"), body_expr().alias("body")).persist()
+        )
 
         def fetch(wave_df: DataFrame) -> DataFrame:
             """The pages-table join (S1) unless a ``fetcher`` is swapped in
@@ -316,17 +305,8 @@ def run_crawl(
                     sitemap_tree_locs,
                 )
 
-                roots = discover_sitemap_roots(body, main_url)
-                leaves = (
-                    sitemap_tree_locs(body, roots)
-                    .select("url")
-                    .distinct()
-                )
-                state["internal"] = (
-                    state["internal"]
-                    .unionByName(leaves)
-                    .dropDuplicates(["url"])
-                )
+                leaves = sitemap_tree_locs(body, discover_sitemap_roots(body, main_url))
+                state["internal"] = state["internal"].unionByName(leaves.select("url")).distinct()
             if cfg.exclude:
                 state["internal"] = state["internal"].filter(
                     ~F.col("url").rlike(cfg.exclude)
@@ -427,16 +407,22 @@ def run_crawl(
                             state["processed"], "url", processed_count, 0.01
                         )
                     links = dedup_candidates(candidates, state["processed"], "url", bloom)
-                links = ws.hold(gate_links(links).persist())
+                links = ws.hold(gate_links(links))
                 # ONE driver action for both loop-control counts (|internal| for
                 # the Q25 break, |links| for termination + partition sizing) — a
                 # tagged union instead of two jobs per wave. links materializes
                 # into its persisted cache inside this same job.
+                counted = state["internal"].select(F.lit("internal").alias("k")).unionAll(
+                    links.select(F.lit("links").alias("k"))
+                )
+                if level == ws.first_wave > 0:
+                    # A fresh start's zap collect fills body's cache; a resumed
+                    # call fills it here, so the first fetch join is planned
+                    # against its measured size, not the pages table's estimate.
+                    counted = counted.unionAll(body.select(F.lit("body").alias("k")))
                 wave_counts = {
                     r["k"]: r["n"]
-                    for r in state["internal"]
-                    .select(F.lit("internal").alias("k"))
-                    .unionAll(links.select(F.lit("links").alias("k")))
+                    for r in counted
                     .groupBy("k")
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
@@ -468,7 +454,7 @@ def run_crawl(
                         partitions=wave_parts,
                         salts=cfg.host_salts if wave_parts > 1 else 1,
                         host_budgets=host_budgets,
-                    ).select("url", "level").persist()
+                    ).select("url", "level")
                 )
                 fetched = fetch(scheduled)
                 # The wave's bodies feed extra consumers: the --clone mirror
@@ -480,7 +466,7 @@ def run_crawl(
                     fetched = ws.keep(fetched.localCheckpoint(eager=False))
                     kept_bodies.append(fetched)
                 elif cfg.nofollow_gate:
-                    fetched = ws.hold(fetched.persist())
+                    fetched = ws.hold(fetched)
                 ext = extract_wave(fetched, cfg, main_url)
                 if cfg.nofollow_gate:
                     from photon_spark.operators.extract import html_directives
@@ -494,7 +480,7 @@ def run_crawl(
                             c, F.when(gated, blank).otherwise(F.col(c))
                         )
                     ext = ext.drop("nofollow")
-                ext = ws.hold(ext.persist())
+                ext = ws.hold(ext)
 
                 # The per-partition lineage collect doubles as (a) ext's cache
                 # materialization (the snapshot reads it next) and (b) the
@@ -525,9 +511,13 @@ def run_crawl(
                 def exploded(col: str, out: str = "value") -> DataFrame:
                     return ext.select(F.explode(col).alias(out))
 
-                # ---- this wave's rows per table, repeats included. files
-                # side-effect is gated on the processed check (utils.py:40-46):
-                # anti-join against processed as of wave start.
+                # ---- this wave's rows per table, deduplicated: the snapshot
+                # takes only these (a store appends them, an in-memory
+                # snapshot unions them onto the last checkpoint; never a
+                # full-state rewrite); the scheduled URLs are distinct
+                # already. files side-effect is gated on the processed check
+                # (utils.py:40-46): anti-join against processed as of wave start.
+                # Wave 0's delta also carries the seed state.
                 new = {
                     "internal": exploded("internal_new", "url"),
                     "external": exploded("external_new", "url"),
@@ -539,23 +529,15 @@ def run_crawl(
                     "bad_scripts": exploded("script_srcs"),
                     "custom": exploded("custom"),
                     "keys": exploded("keys"),
-                    "processed": scheduled.select("url"),
-                    "waves": scheduled.select("url", "level"),
                 }
-                # The store commits ONLY the wave's new rows, deduplicated
-                # (append-only snapshots, never a full-state rewrite; the
-                # scheduled URLs are distinct already). Wave 0's commit also
-                # carries the seed state (wave -1 has no dir).
-                delta = {
-                    k: df if k in ("processed", "waves") else df.distinct()
-                    for k, df in new.items()
-                }
+                delta = {k: df.distinct() for k, df in new.items()}
+                delta["processed"] = scheduled.select("url")
+                delta["waves"] = scheduled.select("url", "level")
                 if level == 0:
                     delta["internal"] = delta["internal"].unionByName(state["internal"])
                 processed_count += n_sched
                 state = ws.snapshot(
                     level,
-                    {k: state[k].unionByName(df) for k, df in new.items()},
                     delta,
                     {
                         "processed_count": processed_count,
@@ -586,10 +568,7 @@ def run_crawl(
         # ------------------------------------------------------------------
         # Post-loop stages (photon.py:332-368), all skipped under only_urls.
         empty_vals = jvm_empty(spark, "value string")
-        scripts = empty_vals
-        endpoints = empty_vals
-        fuzzable = empty_vals
-        intel = empty_vals
+        scripts = endpoints = fuzzable = intel = empty_vals
         if not cfg.only_urls:
             # sized by the bound on the final |internal|: the last wave's
             # internal_after_max, or the counted |internal| after a break
@@ -616,7 +595,9 @@ def run_crawl(
                     # the unconditional persist measurably slowed the crawl
                     # loop (~1s/run, r5 A/B probe).
                     endpoints = ws.keep(endpoints.persist())
-                processed_count += scripts.count()
+                # counted on the RDD: no aggregation exchange, one job
+                # fewer than scripts.count()
+                processed_count += scripts._jdf.rdd().count()
 
             fuzzable = (
                 state["internal"].filter(F.col("url").contains("="))
@@ -640,11 +621,10 @@ def run_crawl(
             "keys": state["keys"],
         }
         ws.hand_over(scripts, endpoints, *kept_bodies)
-        fetched_bodies = None
-        if kept_bodies:
-            fetched_bodies = reduce(
-                DataFrame.unionByName, [f.select("url", "body") for f in kept_bodies]
-            )
+        fetched_bodies = (
+            reduce(DataFrame.unionByName, [f.select("url", "body") for f in kept_bodies])
+            if kept_bodies else None
+        )
         return CrawlResult(
             datasets=datasets,
             waves=state["waves"],

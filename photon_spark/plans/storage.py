@@ -100,6 +100,7 @@ import json
 import os
 import re
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -166,20 +167,19 @@ def _tagged(frames: dict[str, DataFrame], schemas: dict[str, str]) -> DataFrame:
     """One relation over the wide schema: each table's rows in its own
     columns, NULL in the rest, its name in the tag."""
     columns = _wide_columns(schemas)
-    out = None
+    parts = []
     for name, df in frames.items():
         if name not in schemas:
             raise ValueError(f"unknown table {name!r}")
         own = {c for c, _ in split_schema(schemas[name])}
-        f = df.select(
+        parts.append(df.select(
             *[
                 (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
                 for c, tp in columns.items()
             ],
             F.lit(name).alias(TABLE_TAG),
-        )
-        out = f if out is None else out.unionByName(f)
-    return out
+        ))
+    return reduce(DataFrame.unionByName, parts)
 
 
 class CrawlStore:
@@ -420,8 +420,7 @@ class CrawlStore:
         """Snapshot-as-of `wave` for ONE table — the streaming hot path
         reads only `processed`, without building the other tables'
         plans."""
-        latest = self.latest()
-        meta = latest[1] if latest else {}
+        meta = (self.latest() or (None, {}))[1]
         return self._read_snapshot(spark, name, wave, meta)
 
     def load(self, spark: SparkSession, wave: int) -> dict[str, DataFrame]:
@@ -430,12 +429,8 @@ class CrawlStore:
         table. Time travel to a wave BEFORE the base reads the raw
         deltas while they still exist and raises once expire() removed
         them (Iceberg expired-snapshot semantics)."""
-        latest = self.latest()
-        meta = latest[1] if latest else {}
-        return {
-            name: self._read_snapshot(spark, name, wave, meta)
-            for name in self.schemas
-        }
+        meta = (self.latest() or (None, {}))[1]
+        return {name: self._read_snapshot(spark, name, wave, meta) for name in self.schemas}
 
     def compact(self, spark: SparkSession, upto: int | None = None) -> str:
         """Rewrite the snapshot-as-of `upto` (default: latest wave) into
@@ -576,11 +571,13 @@ class CrawlStore:
         shutil.rmtree(self.root, ignore_errors=True)
 
 
-def _release(frames: list[DataFrame]) -> None:
+def _release(frames: list[DataFrame | None]) -> None:
     """Drop each frame's cached blocks: a persisted frame's through the
     cache manager, a localCheckpoint's through its RDD (neither
     DataFrame.unpersist nor catalog.clearCache drops those)."""
     for df in frames:
+        if df is None:
+            continue
         df.unpersist()
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -599,19 +596,19 @@ class WaveState:
     ``meta`` the manifest meta ({} on a fresh start), ``state`` one
     frame per table.
 
-    ``snapshot`` replaces the state once per wave and returns what
+    ``snapshot`` applies a wave's delta once per wave and returns what
     ``CrawlStore.load`` returns, one deduplicated frame per table. With
-    a store it commits the wave's delta (compacting every
-    ``compact_every`` waves) and loads; without one it takes ONE eager
-    localCheckpoint of the new state's tables as one tagged union,
+    a store it commits the delta (compacting every ``compact_every``
+    waves) and loads; without one it takes ONE eager localCheckpoint of
+    the previous checkpoint and the delta as one tagged union,
     deduplicated once, and splits it back by tag.
 
-    Lifetimes: ``hold`` registers a frame the caller cached for one
-    wave; the next snapshot releases it, with the previous in-memory
-    checkpoint, once the new state no longer reads them. ``keep``
-    registers one for the whole call. Leaving the block releases
-    everything still registered, the current checkpoint included,
-    except what ``hand_over`` gave to the caller's result.
+    Lifetimes: ``hold`` persists a frame for one wave; the next
+    snapshot releases it, with the previous in-memory checkpoint, once
+    the new state no longer reads them. ``keep`` registers a cached
+    frame for the whole call. Leaving the block releases everything
+    still registered, the current checkpoint included, except what
+    ``hand_over`` gave to the caller's result.
     """
 
     def __init__(
@@ -623,10 +620,10 @@ class WaveState:
         compact_every: int = 0,
     ):
         self.spark, self.schemas, self.store = spark, schemas, store
-        self.compact_every = compact_every
+        self.compact_every = compact_every  # with a store: compact + expire every K waves
         self._wave: list[DataFrame] = []  # released at the next snapshot
         self._kept: list[DataFrame] = []  # released on leaving the block
-        self._checkpoint: list[DataFrame] = []  # the in-memory snapshot, if any
+        self._checkpoint: DataFrame | None = None  # the in-memory snapshot
         latest = store.latest() if resume and store is not None else None
         if latest is None:
             if store is not None:
@@ -642,9 +639,10 @@ class WaveState:
         return self
 
     def __exit__(self, *exc) -> None:
-        _release(self._wave + self._kept + self._checkpoint)
+        _release(self._wave + self._kept + [self._checkpoint])
 
     def hold(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
         self._wave.append(df)
         return df
 
@@ -656,15 +654,19 @@ class WaveState:
         """The caller's result holds the current snapshot and ``frames``
         from here on."""
         self._kept = [f for f in self._kept if all(f is not g for g in frames)]
-        self._checkpoint = []
+        self._checkpoint = None
 
     def snapshot(
         self,
         wave: int,
-        state: dict[str, DataFrame],
         delta: dict[str, DataFrame],
         meta: dict,
+        replace: dict[str, DataFrame] | None = None,
     ) -> dict[str, DataFrame]:
+        """``delta``: the wave's rows per table, as ``commit`` takes
+        them. ``replace``: tables whose whole new contents the caller
+        has (an upsert table, which the store resolves at load); an
+        in-memory snapshot takes them instead of adding their delta."""
         store = self.store
         if store is not None:
             store.commit(wave, delta, meta)
@@ -673,11 +675,17 @@ class WaveState:
                 store.expire()
             out = store.load(self.spark, wave)
         else:
-            self._wave += self._checkpoint
-            tagged = _tagged(state, self.schemas).dropDuplicates()
-            self._checkpoint = [tagged.localCheckpoint(eager=True)]
+            replace = replace or {}
+            rows = _tagged({**delta, **replace}, self.schemas)
+            prev = self._checkpoint
+            if prev is not None:
+                # ONE scan of the previous checkpoint, less the replaced tables
+                tag = F.col(TABLE_TAG)
+                rows = prev.filter(~tag.isin(list(replace))).unionByName(rows)
+                self._wave.append(prev)
+            self._checkpoint = rows.dropDuplicates().localCheckpoint(eager=True)
             out = {
-                name: self._checkpoint[0].filter(F.col(TABLE_TAG) == name)
+                name: self._checkpoint.filter(F.col(TABLE_TAG) == name)
                 .select(*[c for c, _ in split_schema(schema)])
                 for name, schema in self.schemas.items()
             }

@@ -160,7 +160,7 @@ def run_recrawl(
                     transport_factory=lambda: transport_for_wave(w),
                     delay=delay,
                     timeout=timeout,
-                ).persist()
+                )
             )
             mrow = fetched.agg(
                 F.count(F.lit(1)).alias("scheduled"),
@@ -175,10 +175,10 @@ def run_recrawl(
             state = state.filter(F.col("fetched_wave").isNotNull())
             snap = ws.snapshot(
                 w,
-                {"state": state, "observations": observations.unionByName(obs_w)},
                 # O(|wave|) upsert delta: only rows touched this wave
                 {"state": state.filter(F.col("checked_wave") == w), "observations": obs_w},
                 {"wave": w},
+                replace={"state": state},
             )
             state, observations = snap["state"], snap["observations"]
 

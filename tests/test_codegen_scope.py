@@ -186,12 +186,8 @@ def test_store_crawl_job_count_per_wave(spark, fixture_pages, tmp_path):
     and the post-loop scripts count) runs 21. The traced benchmark
     reports 7 per wave because its forcing probes absorb the rest.
     Cached frames of earlier crawls would let an identical plan skip
-    its jobs, so the cache is cleared first. The fetch source (the
-    fetcher's body column) is then cached for both calls, as an origin
-    stays up across a crash: run_crawl releases only what it cached."""
+    its jobs, so the cache is cleared first."""
     spark.catalog.clearCache()
-    source = fixture_pages.select("doc_id", body_expr().alias("body")).persist()
-    source.count()
     cfg = EngineConfig(crawl_level=2, only_urls=False, extract_keys=True,
                        shuffle_partitions=4, compact_every=2)
     store = CrawlStore(str(tmp_path / "store"))
@@ -200,6 +196,5 @@ def test_store_crawl_job_count_per_wave(spark, fixture_pages, tmp_path):
                                                 stop_after_wave=0, **kw))
     res, resumed = _jobs(spark, lambda: run_crawl(spark, fixture_pages, ROOT,
                                                   resume=True, **kw))
-    source.unpersist()
     assert [m["wave"] for m in res.metrics] == [1]
     assert crashed <= 10 and resumed <= 21, (crashed, resumed)
