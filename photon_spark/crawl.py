@@ -99,10 +99,14 @@ class CrawlResult:
     def results(self) -> DataFrame:
         """Single (dataset, value) table — the reference's output dir
         as one relation (SURVEY.md §1.2 K1)."""
-        return reduce(DataFrame.unionByName, [
-            self.datasets[name].select(F.lit(name).alias("dataset"), F.col("value"))
-            for name in DATASET_NAMES
-        ])
+        parts = []
+        for name in DATASET_NAMES:
+            df = self.datasets[name]
+            parts.append(df.select(F.lit(name).alias("dataset"), F.col("value")))
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
     def to_sets(self, max_rows: int = 5_000_000) -> dict[str, set]:
         """Collect every dataset — test/CLI helper, not for big runs.
@@ -119,10 +123,14 @@ class CrawlResult:
         names = list(self.datasets)
         if not names:
             return {}
-        tagged = reduce(DataFrame.unionAll, [
-            self.datasets[name].limit(max_rows + 1).select(F.lit(i).alias("_d"), F.col("value"))
-            for i, name in enumerate(names)
-        ])
+        tagged = None
+        for i, name in enumerate(names):
+            part = (
+                self.datasets[name]
+                .limit(max_rows + 1)
+                .select(F.lit(i).alias("_d"), F.col("value"))
+            )
+            tagged = part if tagged is None else tagged.unionAll(part)
         # Small crawls collect interpreted (session.small_plans), sized
         # by the bound on the final |internal|; the other datasets are
         # by-products of the same fetched pages.
@@ -305,8 +313,17 @@ def run_crawl(
                     sitemap_tree_locs,
                 )
 
-                leaves = sitemap_tree_locs(body, discover_sitemap_roots(body, main_url))
-                state["internal"] = state["internal"].unionByName(leaves.select("url")).distinct()
+                roots = discover_sitemap_roots(body, main_url)
+                leaves = (
+                    sitemap_tree_locs(body, roots)
+                    .select("url")
+                    .distinct()
+                )
+                state["internal"] = (
+                    state["internal"]
+                    .unionByName(leaves)
+                    .dropDuplicates(["url"])
+                )
             if cfg.exclude:
                 state["internal"] = state["internal"].filter(
                     ~F.col("url").rlike(cfg.exclude)
@@ -568,7 +585,10 @@ def run_crawl(
         # ------------------------------------------------------------------
         # Post-loop stages (photon.py:332-368), all skipped under only_urls.
         empty_vals = jvm_empty(spark, "value string")
-        scripts = endpoints = fuzzable = intel = empty_vals
+        scripts = empty_vals
+        endpoints = empty_vals
+        fuzzable = empty_vals
+        intel = empty_vals
         if not cfg.only_urls:
             # sized by the bound on the final |internal|: the last wave's
             # internal_after_max, or the counted |internal| after a break
@@ -621,10 +641,11 @@ def run_crawl(
             "keys": state["keys"],
         }
         ws.hand_over(scripts, endpoints, *kept_bodies)
-        fetched_bodies = (
-            reduce(DataFrame.unionByName, [f.select("url", "body") for f in kept_bodies])
-            if kept_bodies else None
-        )
+        fetched_bodies = None
+        if kept_bodies:
+            fetched_bodies = reduce(
+                DataFrame.unionByName, [f.select("url", "body") for f in kept_bodies]
+            )
         return CrawlResult(
             datasets=datasets,
             waves=state["waves"],

@@ -100,7 +100,6 @@ import json
 import os
 import re
 import shutil
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,19 +166,20 @@ def _tagged(frames: dict[str, DataFrame], schemas: dict[str, str]) -> DataFrame:
     """One relation over the wide schema: each table's rows in its own
     columns, NULL in the rest, its name in the tag."""
     columns = _wide_columns(schemas)
-    parts = []
+    out = None
     for name, df in frames.items():
         if name not in schemas:
             raise ValueError(f"unknown table {name!r}")
         own = {c for c, _ in split_schema(schemas[name])}
-        parts.append(df.select(
+        f = df.select(
             *[
                 (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
                 for c, tp in columns.items()
             ],
             F.lit(name).alias(TABLE_TAG),
-        ))
-    return reduce(DataFrame.unionByName, parts)
+        )
+        out = f if out is None else out.unionByName(f)
+    return out
 
 
 class CrawlStore:
@@ -420,7 +420,8 @@ class CrawlStore:
         """Snapshot-as-of `wave` for ONE table — the streaming hot path
         reads only `processed`, without building the other tables'
         plans."""
-        meta = (self.latest() or (None, {}))[1]
+        latest = self.latest()
+        meta = latest[1] if latest else {}
         return self._read_snapshot(spark, name, wave, meta)
 
     def load(self, spark: SparkSession, wave: int) -> dict[str, DataFrame]:
@@ -429,8 +430,12 @@ class CrawlStore:
         table. Time travel to a wave BEFORE the base reads the raw
         deltas while they still exist and raises once expire() removed
         them (Iceberg expired-snapshot semantics)."""
-        meta = (self.latest() or (None, {}))[1]
-        return {name: self._read_snapshot(spark, name, wave, meta) for name in self.schemas}
+        latest = self.latest()
+        meta = latest[1] if latest else {}
+        return {
+            name: self._read_snapshot(spark, name, wave, meta)
+            for name in self.schemas
+        }
 
     def compact(self, spark: SparkSession, upto: int | None = None) -> str:
         """Rewrite the snapshot-as-of `upto` (default: latest wave) into
@@ -620,7 +625,7 @@ class WaveState:
         compact_every: int = 0,
     ):
         self.spark, self.schemas, self.store = spark, schemas, store
-        self.compact_every = compact_every  # with a store: compact + expire every K waves
+        self.compact_every = compact_every
         self._wave: list[DataFrame] = []  # released at the next snapshot
         self._kept: list[DataFrame] = []  # released on leaving the block
         self._checkpoint: DataFrame | None = None  # the in-memory snapshot
