@@ -164,21 +164,24 @@ def _wide_columns(schemas: dict[str, str]) -> dict[str, str]:
 
 def _tagged(frames: dict[str, DataFrame], schemas: dict[str, str]) -> DataFrame:
     """One relation over the wide schema: each table's rows in its own
-    columns, NULL in the rest, its name in the tag."""
+    columns, NULL in the rest, its name in the tag. Every branch lists
+    the columns in one order, so the branches union by position; the
+    projections are SQL strings, one driver call per branch (a wave
+    loop builds this relation every wave)."""
     columns = _wide_columns(schemas)
     out = None
     for name, df in frames.items():
         if name not in schemas:
             raise ValueError(f"unknown table {name!r}")
         own = {c for c, _ in split_schema(schemas[name])}
-        f = df.select(
+        f = df.selectExpr(
             *[
-                (F.col(c) if c in own else F.lit(None)).cast(tp).alias(c)
+                f"CAST({f'`{c}`' if c in own else 'NULL'} AS {tp}) AS `{c}`"
                 for c, tp in columns.items()
             ],
-            F.lit(name).alias(TABLE_TAG),
+            f"'{name}' AS `{TABLE_TAG}`",
         )
-        out = f if out is None else out.unionByName(f)
+        out = f if out is None else out.union(f)
     return out
 
 
