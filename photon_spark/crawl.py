@@ -432,7 +432,7 @@ def run_crawl(
                 counted = state["internal"].select(F.lit("internal").alias("k")).unionAll(
                     links.select(F.lit("links").alias("k"))
                 )
-                if level == ws.first_wave > 0:
+                if ws.first_wave > 0 and level == ws.first_wave:
                     # A fresh start's zap collect fills body's cache; a resumed
                     # call fills it here, so the first fetch join is planned
                     # against its measured size, not the pages table's estimate.

@@ -688,8 +688,7 @@ class WaveState:
             prev = self._checkpoint
             if prev is not None:
                 # ONE scan of the previous checkpoint, less the replaced tables
-                tag = F.col(TABLE_TAG)
-                rows = prev.filter(~tag.isin(list(replace))).unionByName(rows)
+                rows = prev.filter(~F.col(TABLE_TAG).isin(list(replace))).union(rows)
                 self._wave.append(prev)
             self._checkpoint = rows.dropDuplicates().localCheckpoint(eager=True)
             out = {
