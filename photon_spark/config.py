@@ -102,7 +102,8 @@ class EngineConfig:
     nofollow_gate: bool = False
     # Spark-side knobs (scale levers, not semantics):
     shuffle_partitions: int = 32   # ceiling; waves scale down to size
-    urls_per_partition: int = 500  # target wave-partition granularity
+    urls_per_partition: int = 500  # target wave-partition granularity,
+                                   # the JS pass's included
     host_salts: int = 8           # fetch partitions a hot host spreads over
     # Store maintenance cadence: every K committed waves, rewrite the
     # accumulated deltas into one consolidated base and expire the

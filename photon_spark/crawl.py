@@ -14,6 +14,15 @@ Dataflow per wave (SURVEY.md §3.1 Spark lifecycle):
         ── merge: internal/external/files/bad_intel/bad_scripts/…
         ── snapshot: store commit + load, or one tagged localCheckpoint
 
+After the last wave, the JS pass (photon.py:332-342) is one more wave
+of the same shape, at level -1, skipped when no script was found:
+
+    distinct scripts ── count ── schedule(host; sized like a wave)
+        ── fetch ── mapInPandas extract_endpoints ── distinct
+
+Every fetch the crawl makes therefore runs on host-partitioned input,
+in as few partitions as its size needs (``_scheduled``).
+
 The state between waves lives in `plans/storage.WaveState`, shared with
 `recrawl.run_recrawl`: it resumes from the store's manifest, takes each
 wave's snapshot (one deduplicated frame per table either way), and
@@ -203,6 +212,23 @@ def _urls(spark: SparkSession, urls, colname: str = "url") -> DataFrame:
     )
 
 
+def _scheduled(
+    wave: DataFrame, n: int, cfg: EngineConfig, **schedule_kw
+) -> DataFrame:
+    """The (url, level) fetch input for a wave of ``n`` URLs: scheduled
+    by ``schedule_wave`` into a partition count that scales with the
+    wave. cfg.shuffle_partitions is the ceiling (the cluster-width
+    knob), but a small wave gets few partitions — task and
+    Python-worker spin-up would otherwise dominate tiny waves (the
+    explicit repartition is exempt from AQE coalescing, so it is sized
+    here). A one-partition wave needs no host salting."""
+    parts = max(1, min(cfg.shuffle_partitions, -(-n // cfg.urls_per_partition)))
+    return schedule_wave(
+        wave, partitions=parts, salts=cfg.host_salts if parts > 1 else 1,
+        **schedule_kw,
+    ).select("url", "level")
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -236,6 +262,10 @@ def run_crawl(
     production HTTP stage is ``sources.fetch_http.fetch_stage``; the
     default is the sandbox pages-table join, ``join_pages``. ``pages``
     is still used for the zap (robots/sitemap) seed stage either way.
+    Besides once per wave, the fetch stage is called once more for the
+    JS pass (unless only_urls, or no script was found): with the
+    crawl's script URLs at level -1, host-partitioned and sized like a
+    wave.
     """
     cfg = cfg or EngineConfig()
     if main_url.endswith("/"):
@@ -453,25 +483,16 @@ def run_crawl(
                 break  # Q25
 
             with small_plans(spark, wave_rows):
-                # Partition count scales with the wave: cfg.shuffle_partitions
-                # is the ceiling (the cluster-width knob), but a small wave gets
-                # few partitions — task + Python-worker spin-up would otherwise
-                # dominate tiny waves (the explicit repartition below is exempt
-                # from AQE coalescing, so we size it ourselves).
-                wave_parts = max(1, min(cfg.shuffle_partitions, -(-n // cfg.urls_per_partition)))
                 wave = links.withColumn("level", F.lit(level))
                 if cfg.use_priority:
                     from photon_spark.plans.schedule import priority_score
 
                     wave = priority_score(wave, host_ranks=host_ranks)
                 scheduled = ws.hold(
-                    schedule_wave(
-                        wave,
-                        budget=cfg.per_host_budget,
-                        partitions=wave_parts,
-                        salts=cfg.host_salts if wave_parts > 1 else 1,
-                        host_budgets=host_budgets,
-                    ).select("url", "level")
+                    _scheduled(
+                        wave, n, cfg,
+                        budget=cfg.per_host_budget, host_budgets=host_budgets,
+                    )
                 )
                 fetched = fetch(scheduled)
                 # The wave's bodies feed extra consumers: the --clone mirror
@@ -600,24 +621,33 @@ def run_crawl(
                     .distinct()
                     .persist()
                 )
-                sfetched = fetch(scripts.select(F.col("value").alias("url"), F.lit(-1).alias("level")))
-                endpoints = (
-                    extract_endpoints(sfetched)
-                    .select(F.explode("endpoints").alias("value"))
-                    .distinct()
-                )
-                if fetcher is not None:
-                    # endpoints is consumed by multiple downstream actions
-                    # (txt writer, counts, exports); without the cache each
-                    # action replays the JS second-pass FETCH — a second
-                    # network hit per script URL per action. Only under a real
-                    # fetcher: the sandbox pages-join recompute is cheap and
-                    # the unconditional persist measurably slowed the crawl
-                    # loop (~1s/run, r5 A/B probe).
-                    endpoints = ws.keep(endpoints.persist())
                 # counted on the RDD: no aggregation exchange, one job
-                # fewer than scripts.count()
-                processed_count += scripts._jdf.rdd().count()
+                # fewer than scripts.count(); the count sizes the JS pass
+                n_scripts = scripts._jdf.rdd().count()
+                processed_count += n_scripts
+                if n_scripts:
+                    # The JS pass is one more wave (photon.py:332-342), so it is
+                    # scheduled like one: AQE never coalesces the shuffle of a
+                    # cached plan, so scripts keeps shuffle_partitions
+                    # partitions, and each of their tasks would hold a fetch
+                    # and an extract Python worker.
+                    js_wave = scripts.select(
+                        F.col("value").alias("url"), F.lit(-1).alias("level")
+                    )
+                    endpoints = (
+                        extract_endpoints(fetch(_scheduled(js_wave, n_scripts, cfg)))
+                        .select(F.explode("endpoints").alias("value"))
+                        .distinct()
+                    )
+                    if fetcher is not None:
+                        # endpoints is consumed by multiple downstream actions
+                        # (txt writer, counts, exports); without the cache each
+                        # action replays the JS second-pass FETCH — a second
+                        # network hit per script URL per action. Only under a
+                        # real fetcher: the sandbox pages-join recompute is
+                        # cheap and the unconditional persist measurably slowed
+                        # the crawl loop (~1s/run, r5 A/B probe).
+                        endpoints = ws.keep(endpoints.persist())
 
             fuzzable = (
                 state["internal"].filter(F.col("url").contains("="))

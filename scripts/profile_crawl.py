@@ -2,7 +2,11 @@
 time, Spark jobs, Janino compiles (count and milliseconds, from Spark's
 CodegenMetrics), the CPU seconds of the driver, the JVM and the
 Python workers, and the RDDs the crawl left persisted (with its result
-still held; a count that grows with the waves is a cache leak).
+still held; a count that grows with the waves is a cache leak). Next to
+that count: the live Python worker processes (forked by pyspark.daemon)
+before the crawl and with its result held, and their summed RSS; a
+crawl that ends with more workers than it began with forked them
+mid-crawl.
 
     python scripts/profile_crawl.py                       # every crawl below
     python scripts/profile_crawl.py --crawl resume_http   # one, in a cold JVM
@@ -12,7 +16,8 @@ Crawls:
                one warm-up crawl first, so its numbers are warm-JVM
   fixture      the golden fixture site, full extraction, then to_sets()
   resume_http  the crawl_resume_http benchmark crawl (loopback HTTP into
-               a CrawlStore, crashed after wave 0, resumed, write_txt)
+               a CrawlStore, crashed after wave 0, resumed, write_txt),
+               after the benchmark's set-up (a Python worker per slot)
   frontier     the frontier_wave benchmark wave (75k Zipf-skewed URLs:
                canonicalize, dedup, schedule with budget 1000 and
                salts=max(8, cores)); 6 untimed warm-up waves, then 8
@@ -61,6 +66,30 @@ def _cpu_s(pid: int, reaped: bool) -> float:
     return sum(int(x) for x in fields[11:15 if reaped else 13]) / CLK_TCK
 
 
+def python_workers() -> tuple[int, float]:
+    """(count, summed RSS in MB) of the live Python workers: the
+    processes pyspark.daemon, a child of the JVM, has forked."""
+    children = _proc_tree()
+    page_mb = os.sysconf("SC_PAGE_SIZE") / 1e6
+    n, mb = 0, 0.0
+    for jvm in children.get(os.getpid(), ()):
+        for pid in children.get(jvm, ()):
+            try:
+                with open(f"/proc/{pid}/cmdline", "rb") as f:
+                    if b"pyspark.daemon" not in f.read():
+                        continue
+            except OSError:
+                continue
+            for worker in children.get(pid, ()):
+                try:
+                    with open(f"/proc/{worker}/statm") as f:
+                        mb += int(f.read().split()[1]) * page_mb
+                except OSError:
+                    continue
+                n += 1
+    return n, mb
+
+
 def cpu_split() -> dict[str, float]:
     """CPU seconds so far: this Python driver, the JVM it launched, and
     every process under the JVM (the Python workers)."""
@@ -88,6 +117,7 @@ class Probe:
         self.compiles0 = janino_compiles(spark)
         self.cpu0 = cpu_split()
         self.rdds0 = self._persisted()
+        self.workers0 = python_workers()[0]
 
     def _persisted(self) -> set[int]:
         return set(self.spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -106,11 +136,14 @@ class Probe:
         split = {k: cpu[k] - self.cpu0[k] for k in cpu}
         ms_txt = f"{ms:.0f} ms" if ms is not None else "n/a ms"
         left = len(self._persisted() - self.rdds0)
+        workers, workers_mb = python_workers()
         print(
             f"{label}: {wall:.2f}s wall, {jobs} jobs, {n} Janino compiles"
             f" ({ms_txt}), CPU-s jvm {split['jvm']:.1f} workers"
             f" {split['workers']:.1f} driver {split['driver']:.1f}"
-            f" (total {sum(split.values()):.1f}), {left} RDDs left persisted"
+            f" (total {sum(split.values()):.1f}), {left} RDDs left persisted,"
+            f" Python workers {self.workers0} -> {workers}"
+            f" ({workers_mb:.0f} MB RSS)"
         )
 
 
@@ -149,6 +182,7 @@ def fixture(spark) -> None:
 
 
 def resume_http(spark) -> None:
+    from perfbench.run import warm_up
     from perfbench.workloads import CrawlResumeHttp
 
     nproc = int(spark.sparkContext.defaultParallelism)
@@ -156,6 +190,7 @@ def resume_http(spark) -> None:
         wl = CrawlResumeHttp(seed=1, nproc=nproc, tmp=tmp)
         wl.start()
         try:
+            warm_up(spark, nproc)  # the benchmark's set-up: a worker per slot
             wl.build(spark)
             wl.prepare_reference()
             probe = Probe(spark)

@@ -17,11 +17,20 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
+from pyspark.sql import functions as F
 
-from fixtures.gen import PAGES_SCHEMA, ROOT, _spanify, page_bodies
+from fixtures.gen import (
+    BIG_ROOT,
+    PAGES_SCHEMA,
+    ROOT,
+    _spanify,
+    big_site_df,
+    page_bodies,
+)
 from oracle.photon_oracle import crawl as oracle_crawl
-from photon_spark.config import DUMMY
-from photon_spark.crawl import run_crawl
+from photon_spark.config import DUMMY, EngineConfig
+from photon_spark.crawl import join_pages, run_crawl
+from photon_spark.operators.extract import body_expr
 from photon_spark.sources.fetch_http import (
     DEFAULT_USER_AGENTS,
     fetch_stage,
@@ -161,6 +170,69 @@ def test_crawl_over_real_sockets_matches_oracle(spark, site):
     assert "/" in seen
     assert seen["/"]["User-Agent"] in DEFAULT_USER_AGENTS
     assert seen["/"].get("Accept-Encoding") == "gzip"
+
+
+class _RecordingFetcher:
+    """A crawl ``fetcher`` that records, per call, the wave's partition
+    count and its (url, level, partition id) rows, then delegates."""
+
+    def __init__(self, fetch):
+        self.fetch = fetch
+        self.calls: list[tuple[int, list]] = []
+
+    def __call__(self, wave):
+        rows = wave.select(
+            "url", "level", F.spark_partition_id().alias("pid")
+        ).collect()
+        self.calls.append((wave.rdd.getNumPartitions(), rows))
+        return self.fetch(wave)
+
+    def js_calls(self) -> list[tuple[int, list]]:
+        return [c for c in self.calls if any(r["level"] == -1 for r in c[1])]
+
+
+def test_js_pass_is_a_sized_host_partitioned_wave(spark, site):
+    """The JS pass fetches its script URLs once, at level -1, sized by
+    the wave rule: one partition at the defaults; min(shuffle_partitions,
+    n) partitions at one URL per partition, with each host in one of
+    them (host_salts=1: salting spreads a host on purpose)."""
+    local_root, bodies_local = site
+    pages = _pages_df(spark, bodies_local)
+    want = oracle_crawl(bodies_local, local_root, crawl_level=2).datasets
+    wide = EngineConfig(urls_per_partition=1, shuffle_partitions=4, host_salts=1)
+    for cfg in (EngineConfig(), wide):
+        rec = _RecordingFetcher(
+            lambda wave: fetch_stage(wave, transport_factory=requests_transport)
+        )
+        res = run_crawl(spark, pages, local_root, cfg=cfg, fetcher=rec)
+        got = {r["value"] for r in res.datasets["endpoints"].collect()}
+        assert got == want["endpoints"]
+        [(parts, rows)] = rec.js_calls()
+        assert {r["level"] for r in rows} == {-1}
+        assert {r["url"] for r in rows} == want["scripts"]
+        if cfg is wide:
+            assert parts == min(4, len(rows))
+            host_pids: dict[str, set] = {}
+            for r in rows:
+                host = r["url"].split("/")[2]
+                host_pids.setdefault(host, set()).add(r["pid"])
+            assert all(len(p) == 1 for p in host_pids.values()), host_pids
+        else:
+            assert parts == 1
+
+
+def test_js_pass_skipped_without_scripts(spark):
+    """A crawl that found no script runs no JS pass: the fetcher is
+    called once per wave and never at level -1, and endpoints is
+    empty."""
+    pages = big_site_df(spark, n_pages=111, fanout=10)
+    body = pages.select("doc_id", body_expr().alias("body"))
+    rec = _RecordingFetcher(lambda wave: join_pages(wave, body))
+    res = run_crawl(spark, pages, BIG_ROOT, fetcher=rec)
+    assert len(rec.calls) == len(res.metrics) == 2
+    assert not rec.js_calls()
+    assert res.datasets["scripts"].count() == 0
+    assert res.datasets["endpoints"].count() == 0
 
 
 def test_redirect_cap_and_content_type_gate_on_wire(spark, site):
