@@ -97,10 +97,10 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--budget", type=int, default=None, help="per-host politeness budget/wave")
     p.add_argument("--salts", type=int, default=8, help="fetch partitions a hot host spreads over")
     p.add_argument("--respect-robots", action="store_true",
-                   help="gate fetches on robots.txt Disallow rules")
+                   help="gate fetches on robots.txt Disallow lines (RFC 9309)")
     p.add_argument("--robots-agent", default=None, metavar="NAME",
-                   help="RFC 9309 user-agent group selection for the "
-                        "robots gate (implies rules from NAME's group)")
+                   help="gate on the Allow and Disallow rules of NAME's "
+                        "RFC 9309 user-agent group (implies --respect-robots)")
     p.add_argument("--sitemap-recursive", action="store_true",
                    help="seed from <sitemapindex> trees + robots Sitemap: lines")
     p.add_argument("--store", default=None, help="snapshot dir (resumable state)")

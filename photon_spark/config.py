@@ -56,8 +56,10 @@ class EngineConfig:
     seeds: tuple[str, ...] = ()        # -s, photon.py:72-73
     faithful_py3: bool = True
     per_host_budget: int | None = None
-    # Opt-in robots.txt Disallow gating (north-star capability; the
-    # reference only SEEDS from robots.txt — default preserves parity).
+    # Opt-in robots.txt gating with RFC 9309 matching (plans/schedule.
+    # robots_gate_rfc: $ anchors, longest match wins) over the file's
+    # non-empty Disallow lines without a * (north-star capability;
+    # the reference only SEEDS from robots.txt — default preserves parity).
     respect_robots: bool = False
     # Opt-in robots.txt Crawl-delay politeness (requires
     # respect_robots): the crawled host's per-wave budget becomes
@@ -68,8 +70,9 @@ class EngineConfig:
     crawl_delay_window: float | None = None
     # Opt-in RFC 9309 §2.2.1 user-agent group selection for the robots
     # rules (kernels.robots_group_rules): when set (e.g. 'photonbot'),
-    # the Disallow gate and Crawl-delay come from the most-specific
-    # matching User-agent group instead of every line in the file.
+    # the gate's Allow and Disallow rules and Crawl-delay come from the
+    # most-specific matching User-agent group instead of every line in
+    # the file (whose Allow lines, perhaps another bot's, un-gate nothing).
     # None = reference-faithful all-lines parse (zap.py:29).
     robots_agent: str | None = None
     # Opt-in crawler-trap gate (plans/schedule.trap_flags): drop

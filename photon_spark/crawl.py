@@ -54,7 +54,7 @@ from photon_spark.operators.extract import (
     normalize_scripts_col,
 )
 from photon_spark.plans.frontier import UrlBloom, dedup_candidates
-from photon_spark.plans.schedule import schedule_wave, with_host
+from photon_spark.plans.schedule import _host_of, robots_gate_rfc, schedule_wave
 from photon_spark.plans.storage import STATE_SCHEMAS, CrawlStore, WaveState
 from photon_spark.session import jvm_empty, small_plans
 
@@ -298,6 +298,7 @@ def run_crawl(
                 r[-1] if isinstance(r, list) else r
                 for r in meta.get("disallow_rules", [])
             ]
+            allow_rules = meta.get("allow_rules", [])
             crawl_delay = meta.get("crawl_delay")
             wave_rows = _internal_after_max(metrics, processed_count)
         else:
@@ -314,21 +315,18 @@ def run_crawl(
 
             robots_body = special.get(main_url + "/robots.txt", DUMMY)
             robots_urls = [main_url + p for p in K.robots_paths(robots_body)]
+            # RFC 9309 group selection picks the most-specific User-agent
+            # group for this crawler; the default all-lines view mixes every
+            # group, so its Allow lines (perhaps another bot's) must not
+            # un-gate us: it keeps Disallow lines only. An empty rule
+            # matches nothing (RFC 9309 §2.2.2).
             if cfg.robots_agent is not None:
-                # RFC 9309 group selection: gate + delay from the
-                # most-specific User-agent group for this crawler
-                group_rules, group_delay = K.robots_group_rules(
-                    robots_body, cfg.robots_agent
-                )
-                disallow_rules = [
-                    p for rule, p in group_rules if rule == "disallow" and p
-                ]
-                crawl_delay = group_delay
+                rules, crawl_delay = K.robots_group_rules(robots_body, cfg.robots_agent)
             else:
-                disallow_rules = [
-                    p for rule, p in K.robots_rules(robots_body) if rule == "disallow"
-                ]
-                crawl_delay = K.robots_crawl_delay(robots_body)
+                rules, crawl_delay = K.robots_rules(robots_body)
+                rules = [r for r in rules if r[0] == "disallow"]
+            disallow_rules = [p for rule, p in rules if rule == "disallow" and p]
+            allow_rules = [p for rule, p in rules if rule == "allow" and p]
             sitemap_urls = K.sitemap_locs(special.get(main_url + "/sitemap.xml", DUMMY))
 
             internal0 = set(cfg.seeds) | {main_url} | set(robots_urls) | set(sitemap_urls)
@@ -361,42 +359,39 @@ def run_crawl(
             processed_count = 1  # the 'dummy' sentinel (Q11)
             wave_rows = float("inf") if cfg.sitemap_recursive else len(internal0)
 
-        # Constant across waves: build the robots-disallow relation once,
-        # JVM-only (explode of a literal array — no Python leaf). Its host,
-        # like the Crawl-delay row's below, is with_host of the root URL:
-        # the expression robots_gate and schedule_wave match on (a root with
-        # a port keeps no port in that key).
-        root = spark.range(1).select(F.lit(main_url).alias("url"))
-        disallows = None
+        # Constant across waves: the robots rules, compiled by
+        # robots_gate_rfc into one scan-side CASE (no relation, no job).
+        # Their host, like the Crawl-delay row's below, is with_host's key
+        # of the root URL, the key the links and schedule_wave match on (a
+        # root with a port keeps no port in that key).
+        root_host = _host_of(F.lit(main_url))
+        gate_rules = []
         if cfg.respect_robots and disallow_rules:
-            disallows = with_host(root).select(
-                "host",
-                F.explode(F.array(*[F.lit(p) for p in disallow_rules])).alias("prefix"),
-            )
+            gate_rules = [(root_host, p, False) for p in disallow_rules] + [
+                (root_host, p, True) for p in allow_rules
+            ]
 
         # Constant across waves: robots.txt Crawl-delay → per-wave budget
         # cap for the crawled host (opt-in; the reference never reads the
         # line). floor(window / delay) fetches fit politely in one wave's
-        # fetch window; built JVM-only like `disallows` and broadcast into
-        # the schedule (one row per crawled host — no exchange).
+        # fetch window; built JVM-only and broadcast into the schedule
+        # (one row per crawled host — no exchange).
         host_budgets = None
         if cfg.respect_robots and cfg.crawl_delay_window and crawl_delay:
             delay_budget = max(1, int(cfg.crawl_delay_window // crawl_delay))
             if cfg.per_host_budget is not None:
                 delay_budget = min(delay_budget, cfg.per_host_budget)
-            host_budgets = with_host(root).select(
-                "host", F.lit(delay_budget).alias("host_budget")
+            host_budgets = spark.range(1).select(
+                root_host.alias("host"), F.lit(delay_budget).alias("host_budget")
             )
 
         def gate_links(links: DataFrame) -> DataFrame:
             """Post-dedup wave filters: exclusion regex (photon.py:317) +
-            robots disallow gate — pure expressions."""
+            robots.txt gate — pure expressions."""
             if cfg.exclude:
                 links = links.filter(~F.col("url").rlike(cfg.exclude))
-            if disallows is not None:
-                from photon_spark.plans.schedule import robots_gate
-
-                links = robots_gate(links, disallows)
+            if gate_rules:
+                links = robots_gate_rfc(links, gate_rules)
             return links
 
         def trap_filtered(internal: DataFrame) -> DataFrame:
@@ -453,7 +448,9 @@ def run_crawl(
                         bloom = UrlBloom.build(
                             state["processed"], "url", processed_count, 0.01
                         )
-                    links = dedup_candidates(candidates, state["processed"], "url", bloom)
+                    links = dedup_candidates(
+                        candidates, state["processed"], "url", bloom, ws.hold
+                    )
                 links = ws.hold(gate_links(links))
                 # ONE driver action for both loop-control counts (|internal| for
                 # the Q25 break, |links| for termination + partition sizing) — a
@@ -581,6 +578,7 @@ def run_crawl(
                         "processed_count": processed_count,
                         "robots_urls": robots_urls,
                         "disallow_rules": disallow_rules,
+                        "allow_rules": allow_rules,
                         "crawl_delay": crawl_delay,
                         "metrics": metrics,
                     },

@@ -242,7 +242,10 @@ def etld1(url: str) -> str | None:
     """
     if not url.startswith(("http://", "https://", "ftp://")):
         url = "https://" + url  # tld fix_protocol behavior
-    netloc = urlparse(url).netloc
+    try:
+        netloc = urlparse(url).netloc
+    except ValueError:  # e.g. an unclosed '[' (Invalid IPv6 URL)
+        return None
     labels = netloc.split(".")
     if len(labels) < 2 or not labels[-1] or not labels[-2]:
         return None
@@ -266,32 +269,25 @@ def robots_paths(body: str) -> list[str]:
     return out
 
 
-def robots_rules(body: str) -> list[tuple[str, str]]:
-    """(rule, path) pairs with rule ∈ {'allow','disallow'}, wildcards
-    skipped, same '<body' gate as robots_paths. The reference only
-    SEEDS from robots.txt (zap.py:38-42 — both Allow and Disallow
-    paths become crawl candidates); this separated view powers the
-    engine's opt-in `respect_robots` gate (north-star capability, off
-    by default for reference parity)."""
+def robots_rules(body: str) -> tuple[list[tuple[str, str]], float | None]:
+    """(rules, crawl_delay): every Allow/Disallow line of the file as a
+    (rule, path) pair, rule ∈ {'allow','disallow'}, wildcards skipped,
+    and the first Crawl-delay value in seconds (or None). Same '<body'
+    gate as robots_paths. The reference only SEEDS from robots.txt
+    (zap.py:38-42 — both Allow and Disallow paths become crawl
+    candidates) and never reads Crawl-delay; this view powers the
+    engine's opt-in `respect_robots` gate and Crawl-delay budget
+    (north-star capability, off by default for reference parity). A
+    rule is labelled by the alternative that matched, so an empty
+    ``Allow: `` stays an allow."""
     if "<body" in body:
-        return []
-    out = []
-    for allow, disallow in rx.ROBOTS_RULE.findall(body):
-        path = allow or disallow
-        if "*" not in path:
-            out.append(("allow" if allow else "disallow", path))
-    return out
-
-
-def robots_crawl_delay(body: str) -> float | None:
-    """First Crawl-delay value in seconds, or None. Same '<body' gate
-    (fancy-404 detection) as robots_paths. The reference never reads
-    this line; the engine's opt-in politeness budget uses it
-    (EngineConfig.crawl_delay_window) — off by default for parity."""
-    if "<body" in body:
-        return None
+        return [], None
+    rules = [
+        ("allow" if m.lastindex == 1 else "disallow", m.group(m.lastindex))
+        for m in rx.ROBOTS_RULE.finditer(body)
+    ]
     m = rx.ROBOTS_CRAWL_DELAY.search(body)
-    return float(m.group(1)) if m else None
+    return [r for r in rules if "*" not in r[1]], float(m.group(1)) if m else None
 
 
 def sitemap_locs(body: str) -> list[str]:

@@ -20,7 +20,7 @@ vectorized on both build and probe.
 from __future__ import annotations
 
 import math
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -561,6 +561,7 @@ def dedup_candidates(
     seen: DataFrame,
     url_col: str = "url",
     bloom: UrlBloom | None = None,
+    hold: Callable | None = None,
 ) -> DataFrame:
     """candidates ∖ seen, exactly.
 
@@ -571,7 +572,10 @@ def dedup_candidates(
     * ``bloom`` built over ``seen`` — bloom-negative rows skip the
       shuffle entirely; only bloom-positive rows (true dups + ~fpp of
       the new) pay the exact anti-join. The 10^10-frontier path, where
-      `seen` fits neither broadcast nor memory.
+      `seen` fits neither broadcast nor memory. ``hold``, if given,
+      caches the frame both branches read (else a localCheckpoint
+      does) and takes the filter's broadcast too, to release both
+      once the result is no longer read.
 
     A store-backed crawl with a bucketed `processed` base uses
     `dedup_candidates_parts` instead.
@@ -588,10 +592,15 @@ def dedup_candidates(
     with_flag = candidates.withColumn(
         "_maybe", maybe_seen(F.xxhash64(F.col(url_col)))
     )
-    # Both union branches read the flagged frame; checkpoint it so the
-    # upstream (canonicalization + bloom probe) computes exactly once
-    # instead of once per branch per downstream stage.
-    with_flag = with_flag.localCheckpoint(eager=False)
+    # Both union branches read the flagged frame; cache it (through the
+    # caller's hold, else a localCheckpoint) so the upstream
+    # (canonicalization + bloom probe) computes exactly once instead of
+    # once per branch per downstream stage.
+    if hold is None:
+        with_flag = with_flag.localCheckpoint(eager=False)
+    else:
+        hold(bloom_bc)
+        with_flag = hold(with_flag)
     definitely_new = with_flag.filter(~F.col("_maybe")).drop("_maybe")
     needs_check = with_flag.filter(F.col("_maybe")).drop("_maybe")
     return definitely_new.unionByName(needs_check.join(seen, url_col, "left_anti"))

@@ -52,14 +52,33 @@ def _final_ckpt(df: DataFrame, checkpoint_dir: str | None, tag: str) -> DataFram
     return df.sparkSession.read.parquet(path)
 
 
+_URL_PARTS = {
+    "HOST": r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^@/?#]*@)?(\[[^\]/?#]*\]|[^/:?#]*)",
+    "PATH": r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/?#]*([^?#]*)",
+    "QUERY": r"^[^?#]*\?([^#]*)",
+}
+
+
+def _url_part(url: Column, part: str) -> Column:
+    """try_parse_url's ``part`` ("HOST", "PATH" or "QUERY"). Where
+    Java's URI parser rejects the URL (a '[', '|', '^', '\\', '{', '}'
+    or space anywhere in it, the query included; parse_url raises on
+    it under ANSI mode), the same part by regex, so such a URL keeps
+    its real host, path and query. Null where neither finds it."""
+    return F.coalesce(
+        F.try_parse_url(url, F.lit(part)),
+        F.nullif(F.regexp_extract(url, _URL_PARTS[part], 1), F.lit("")),
+    )
+
+
 def _host_of(url: Column) -> Column:
     """with_host's host expression, for use inside a select."""
-    return F.coalesce(F.parse_url(url, F.lit("HOST")), url)
+    return F.coalesce(_url_part(url, "HOST"), url)
 
 
 def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Host column via parse_url; unparseable URLs fall back to the raw
-    string (still a stable partition key)."""
+    """Host column via _url_part; a URL with no host falls back to the
+    raw string (still a stable partition key)."""
     return df.withColumn("host", _host_of(F.col(url_col)))
 
 
@@ -194,45 +213,26 @@ def priority_score(
     return df.withColumn("score", score)
 
 
-def robots_gate(
-    wave: DataFrame,
-    disallows: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
-    """Drop URLs whose path falls under a disallowed prefix for their
-    host. ``disallows``: (host string, prefix string) — small (one row
-    per robots rule), so the anti-join broadcasts; the gate is a
-    host-equi + startswith non-equi condition. Opt-in via
-    EngineConfig.respect_robots (the reference never gates — SURVEY.md
-    §2.1 S2 seeds from robots.txt instead)."""
-    w = with_host(wave, url_col) if "host" not in wave.columns else wave
-    d = disallows.select(
-        F.col("host").alias("_r_host"), F.col("prefix").alias("_r_prefix")
-    )
-    # path = everything from the first '/' after the authority
-    path = F.regexp_extract(F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*(/.*)?$", 1)
-    gated = w.join(
-        F.broadcast(d),
-        (F.col("host") == F.col("_r_host")) & path.startswith(F.col("_r_prefix")),
-        "left_anti",
-    )
-    return gated if "host" in wave.columns else gated.drop("host")
-
-
 def robots_gate_rfc(
     wave: DataFrame,
-    rules: list[tuple[str, str, bool]],
+    rules: list[tuple[str | Column, str, bool]],
     url_col: str = "url",
 ) -> DataFrame:
     """RFC 9309 (public Robots Exclusion Protocol) Allow/Disallow gate:
     ``*`` wildcards, ``$`` end anchors, LONGEST-match-wins with Allow
     beating Disallow on ties — the semantics production crawlers
-    implement, a superset of `robots_gate`'s plain prefix Disallow.
+    implement. A Disallow-only rule set without ``*`` or ``$`` gates
+    exactly the URLs one of whose host's rules is a prefix of the path.
+    Opt-in in the crawl via EngineConfig.respect_robots (the reference
+    never gates — SURVEY.md §2.1 S2 seeds from robots.txt instead).
 
-    ``rules``: [(host, path_pattern, allow)]. The rule set is compiled
+    ``rules``: [(host, path_pattern, allow)]; ``host`` is matched
+    against with_host's key, as a string or a Column (the crawl passes
+    ``_host_of`` of its root URL). The rule set is compiled
     DRIVER-SIDE into one chained CASE expression ordered by
     (pattern length desc, allow first), so the first matching branch
-    IS the RFC's most-specific rule — the whole gate is a scan-side
+    IS the RFC's most-specific rule (branches of different hosts never
+    both match, so their order is free) — the whole gate is a scan-side
     boolean inside whole-stage codegen: zero joins, zero shuffles.
     Right whenever the rule set fits an expression tree (robots rules
     are ~10^1 per host; 10^3-10^4 total inline fine). For web-scale
@@ -257,7 +257,7 @@ def robots_gate_rfc(
 
     expr = None
     for host, pat, allow in sorted(
-        rules, key=lambda r: (-len(r[1]), not r[2], r[0], r[1])
+        rules, key=lambda r: (-len(r[1]), not r[2], r[1])
     ):
         cond = (F.col("host") == host) & path.rlike(rx(pat))
         branch = F.when(cond, F.lit(bool(allow)))
@@ -1132,7 +1132,7 @@ def trap_flags(
       faceted-search explosion).
 
     ``is_trap`` ORs them. Everything is a narrow scan-side expression
-    (parse_url + array HOFs — the per-URL repetition count is O(d^2)
+    (_url_part + array HOFs — the per-URL repetition count is O(d^2)
     over a <=max_depth-segment array, constant work); zero shuffle,
     pipelines with the frontier scan, and dropping flagged rows pushes
     into the source like url_policy_filter. At 10^10 URLs this is the
@@ -1158,8 +1158,8 @@ def trap_flags(
             f" the input — pass out_prefix to rename them"
         )
     u = F.col(url_col)
-    path = F.coalesce(F.parse_url(u, F.lit("PATH")), F.lit(""))
-    query = F.coalesce(F.parse_url(u, F.lit("QUERY")), F.lit(""))
+    path = F.coalesce(_url_part(u, "PATH"), F.lit(""))
+    query = F.coalesce(_url_part(u, "QUERY"), F.lit(""))
     segs = F.filter(F.split(path, "/"), lambda s: s != "")
     depth = F.size(segs)
     max_rep = F.when(depth == 0, F.lit(0)).otherwise(
@@ -2211,7 +2211,7 @@ def latency_aware_delay(
     delay = clamp(p95 latency × multiplier) — the "leave the server
     (multiplier−1)/multiplier idle" rule public crawler etiquette
     writeups state (and IRLbot-class adaptive politeness implements);
-    robots Crawl-delay (kernels.robots_crawl_delay) is the site's own
+    robots Crawl-delay (kernels.robots_rules) is the site's own
     declaration, AIMD (adaptive_host_budgets) reacts to ERRORS — this
     fills the third case: a slow-but-healthy server that declares
     nothing. Output feeds schedule_wave(host_budgets=⌊window/delay⌋)

@@ -101,6 +101,7 @@ import os
 import re
 import shutil
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -579,17 +580,19 @@ class CrawlStore:
         shutil.rmtree(self.root, ignore_errors=True)
 
 
-def _release(frames: list[DataFrame | None]) -> None:
+def _release(frames: list[DataFrame | Broadcast | None]) -> None:
     """Drop each frame's cached blocks: a persisted frame's through the
     cache manager, a localCheckpoint's through its RDD (neither
-    DataFrame.unpersist nor catalog.clearCache drops those)."""
+    DataFrame.unpersist nor catalog.clearCache drops those). A
+    broadcast is destroyed."""
     for df in frames:
-        if df is None:
-            continue
-        df.unpersist()
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        if isinstance(df, Broadcast):
+            df.destroy()
+        elif df is not None:
+            df.unpersist()
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
 
 
 class WaveState:
@@ -613,10 +616,11 @@ class WaveState:
 
     Lifetimes: ``hold`` persists a frame for one wave; the next
     snapshot releases it, with the previous in-memory checkpoint, once
-    the new state no longer reads them. ``keep`` registers a cached
-    frame for the whole call. Leaving the block releases everything
-    still registered, the current checkpoint included, except what
-    ``hand_over`` gave to the caller's result.
+    the new state no longer reads them (a broadcast given to ``hold``
+    is destroyed then). ``keep`` registers a cached frame for the
+    whole call. Leaving the block
+    releases everything still registered, the current checkpoint
+    included, except what ``hand_over`` gave to the caller's result.
     """
 
     def __init__(
@@ -629,7 +633,7 @@ class WaveState:
     ):
         self.spark, self.schemas, self.store = spark, schemas, store
         self.compact_every = compact_every
-        self._wave: list[DataFrame] = []  # released at the next snapshot
+        self._wave: list[DataFrame | Broadcast] = []  # released at the next snapshot
         self._kept: list[DataFrame] = []  # released on leaving the block
         self._checkpoint: DataFrame | None = None  # the in-memory snapshot
         latest = store.latest() if resume and store is not None else None
@@ -649,8 +653,9 @@ class WaveState:
     def __exit__(self, *exc) -> None:
         _release(self._wave + self._kept + [self._checkpoint])
 
-    def hold(self, df: DataFrame) -> DataFrame:
-        df = df.persist()
+    def hold(self, df: DataFrame | Broadcast) -> DataFrame | Broadcast:
+        if isinstance(df, DataFrame):
+            df = df.persist()
         self._wave.append(df)
         return df
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from fixtures.gen import ROOT, page_bodies, pages_df
+from fixtures.gen import PAGES_SCHEMA, ROOT, _spanify, page_bodies, pages_df
 from oracle.photon_oracle import crawl as oracle_crawl
 from photon_spark.config import EngineConfig
 from photon_spark.crawl import run_crawl
@@ -207,3 +207,41 @@ def test_empty_pages_table(spark):
     for name in ("files", "scripts", "external", "fuzzable", "endpoints",
                  "bad_intel", "custom", "keys"):
         assert sets.get(name, set()) == set(), name
+
+
+def _site_df(spark, bodies):
+    return spark.createDataFrame(
+        [{"doc_id": u, "spans": _spanify(u, b)} for u, b in sorted(bodies.items())],
+        schema=PAGES_SCHEMA,
+    )
+
+
+def test_bracketed_external_link_matches_oracle(spark):
+    """An external link urlparse rejects (an unclosed '[': "Invalid IPv6
+    URL") has no registered domain, as the reference's try/except around
+    get_tld gives (photon.py:362-368, Q9): the intel assembly keeps
+    going, and the crawl matches the oracle."""
+    root = "http://bracket.test"
+    bodies = {root: "<html>\n<a href=http://[x/>x</a>\nmail alice@example.com\n</html>"}
+    eng = run_crawl(spark, _site_df(spark, bodies), root)
+    ora = oracle_crawl(bodies, root)
+    assert "http://[x/" in ora.datasets["external"]
+    assert_match(eng, ora)
+
+
+@pytest.mark.parametrize("cfg", [EngineConfig(), EngineConfig(trap_gate=(12, 8, 3))])
+def test_unparseable_internal_links_match_oracle(spark, cfg):
+    """Internal links Java's URI parser rejects ('[', '^', '|') are
+    scheduled under their real host and pass the trap gate by their
+    real path, not an error that aborts the crawl (parse_url raises on
+    them under ANSI mode)."""
+    root = "http://pipe.test"
+    links = ["/x[y", "/q^r", "/a|b", "/ok"]
+    bodies = {
+        root: "<html>\n" + "".join(f'<a href="{p}">x</a>\n' for p in links) + "</html>",
+        root + "/ok": "<html>ok</html>",
+    }
+    eng = run_crawl(spark, _site_df(spark, bodies), root, cfg=cfg)
+    ora = oracle_crawl(bodies, root)
+    assert {root + p for p in links} <= set(ora.waves)
+    assert_match(eng, ora)

@@ -6,6 +6,8 @@ import re
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from photon_spark.plans.frontier import UrlBloom, dedup_candidates
@@ -154,8 +156,9 @@ def test_resume_from_snapshot(spark, fixture_pages, tmp_path):
 
 
 def test_robots_gate(spark):
-    """Opt-in Disallow gating: host-scoped prefix anti-join."""
-    from photon_spark.plans.schedule import robots_gate
+    """A plain prefix Disallow is a host-scoped prefix gate; a trailing
+    $ anchors a pattern without * at the end."""
+    from photon_spark.plans.schedule import robots_gate_rfc
 
     wave = spark.createDataFrame(
         [
@@ -164,17 +167,18 @@ def test_robots_gate(spark):
             ("http://a.test/public/x",),
             ("http://b.test/private/x",),   # other host → kept
             ("http://a.test/",),
+            ("http://a.test/a.php",),       # anchored → gated
+            ("http://a.test/a.php?x=1",),   # longer than the anchor → kept
         ],
         "url string",
     )
-    rules = spark.createDataFrame(
-        [("a.test", "/private")], "host string, prefix string"
-    )
-    kept = {r["url"] for r in robots_gate(wave, rules).collect()}
+    rules = [("a.test", "/private", False), ("a.test", "/a.php$", False)]
+    kept = {r["url"] for r in robots_gate_rfc(wave, rules).collect()}
     assert kept == {
         "http://a.test/public/x",
         "http://b.test/private/x",
         "http://a.test/",
+        "http://a.test/a.php?x=1",
     }
 
 
@@ -894,10 +898,65 @@ def test_robots_gate_rfc_semantics(spark):
     assert robots_gate_rfc(df, []).count() == len(urls)
 
 
+_PATH_CHARS = "ab/.+()[?|\\^#"
+_URL_PATH = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*(/.*)?$")
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.data())
+def test_robots_gate_rfc_is_prefix_gate_for_plain_disallows(spark, data):
+    """Disallow-only rules with no * and no trailing $ keep exactly the
+    URLs for which no rule has the URL's host key and a prefix of its
+    path: the plain prefix gate, with regex metacharacters in paths and
+    rules, and hosts with and without ports. The host key is a host
+    column the wave already carries, or with_host's, which is the real
+    host also for URLs Java's URI parser rejects (a '[', '|', '\\' or
+    '^' in the path)."""
+    from photon_spark.plans.schedule import robots_gate_rfc
+
+    hosts = ["a.test", "b.test"]
+    paths = st.text(_PATH_CHARS, max_size=8).map(lambda p: "/" + p)
+    parts = data.draw(st.lists(
+        st.tuples(st.sampled_from(hosts), st.sampled_from(["", ":8080"]), paths),
+        min_size=1, max_size=10,
+    ))
+    urls = sorted({f"http://{h}{port}{p}" for h, port, p in parts})
+    host_of = {f"http://{h}{port}{p}": h for h, port, p in parts}
+    prefix = st.one_of(
+        paths.map(lambda p: p[:3]),
+        st.sampled_from([p for _, _, p in parts]).flatmap(
+            lambda p: st.integers(1, len(p)).map(lambda n: p[:n])
+        ),
+    )
+    rules = data.draw(st.lists(
+        st.tuples(st.sampled_from(hosts), prefix, st.just(False)), max_size=4
+    ))
+
+    def expected(key):
+        return {
+            u for u in urls
+            if not any(
+                h == key[u] and (_URL_PATH.match(u).group(1) or "").startswith(p)
+                for h, p, _ in rules
+            )
+        }
+
+    df = spark.createDataFrame([(u, host_of[u]) for u in urls], "url string, host string")
+    kept = {r["url"] for r in robots_gate_rfc(df, rules).collect()}
+    assert kept == expected(host_of)
+
+    bare = df.select("url")
+    assert {r["url"]: r["host"] for r in with_host(bare).collect()} == host_of
+    kept = {r["url"] for r in robots_gate_rfc(bare, rules).collect()}
+    assert kept == expected(host_of)
+
+
 def test_trap_flags_heuristics_and_edges(spark):
     """Each trap heuristic fires independently at its exact boundary
     and the degenerate URL shapes (no path, bare root, no query)
-    parse to zeros rather than nulls."""
+    parse to zeros rather than nulls. URLs Java's URI parser rejects
+    ('|', '^', '[' anywhere in them) are flagged from their real path
+    and query: a trap with a '|' stays a trap."""
     from photon_spark.plans.schedule import trap_flags
 
     urls = [
@@ -909,6 +968,9 @@ def test_trap_flags_heuristics_and_edges(spark):
         "http://h.test",                          # no path at all
         "http://h.test/",                         # bare root
         "http://h.test/doc/9?ref=1",              # benign tail shape
+        "http://h.test/gal/gal/gal/a|b",          # seg loop, '|'
+        "http://h.test/x^y?a=1&b=2|3&c&d&e&f&g&h#f",  # 8 params, '^' '|'
+        "http://h.test/x[y",                      # benign, '['
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     got = {
@@ -926,6 +988,9 @@ def test_trap_flags_heuristics_and_edges(spark):
     assert got[urls[5]] == (0, 0, 0, False, False, False, False)
     assert got[urls[6]] == (0, 0, 0, False, False, False, False)
     assert got[urls[7]] == (2, 1, 1, False, False, False, False)
+    assert got[urls[8]] == (4, 3, 0, True, False, False, True)
+    assert got[urls[9]] == (1, 1, 8, False, False, True, True)
+    assert got[urls[10]] == (1, 1, 0, False, False, False, False)
 
 
 @pytest.mark.slow
@@ -1079,8 +1144,9 @@ def test_crawl_robots_agent_group_selection(spark):
 @pytest.mark.parametrize("root", ["http://h.test", "http://h.test:8080"])
 def test_crawl_robots_bind_root_with_port(spark, tmp_path, root):
     """Disallow and Crawl-delay bind the crawled host whether or not the
-    root URL carries a port: both relations take their host from
-    with_host, the key robots_gate and schedule_wave match on, so the
+    root URL carries a port: the rules and the Crawl-delay row take
+    their host from with_host's key of the root URL, the key
+    robots_gate_rfc and schedule_wave match on, so the
     fetched paths and the per-wave cap are the same for both roots,
     fresh and across a store resume."""
     from photon_spark.config import EngineConfig
@@ -1122,6 +1188,93 @@ def test_crawl_robots_bind_root_with_port(spark, tmp_path, root):
     )
     resumed = run_crawl(spark, pages, root, cfg=cfg, store=store, resume=True)
     assert fetched_and_per_wave(resumed) == want
+
+
+def _mini_site(spark, root, robots, paths):
+    """Pages table of a root linking to each of ``paths``, one leaf page
+    per path, and ``robots`` as its robots.txt."""
+    body = "<html>\n" + "".join(f'<a href="{p}">x</a>\n' for p in paths) + "</html>"
+    rows = [(root, body), (root + "/robots.txt", robots)] + [
+        (root + p, "<html>leaf</html>") for p in paths
+    ]
+    return spark.createDataFrame(
+        [
+            (d, [{"kind": "text", "text": b, "media_ref": "", "offset": 0}])
+            for d, b in rows
+        ],
+        "doc_id string, spans array<struct<"
+        "kind string, text string, media_ref string, offset int>>",
+    )
+
+
+def _fetched(res, root):
+    return sorted(r["url"][len(root):] for r in res.waves.collect())
+
+
+def test_crawl_robots_empty_rules_gate_nothing(spark):
+    """An empty Disallow allows everything (RFC 9309 §2.2.2), and an
+    empty Allow is no Disallow: an allow-all robots.txt gives the
+    ungated crawl's waves, and beside a real rule gates only it."""
+    from photon_spark.config import EngineConfig
+    from photon_spark.crawl import run_crawl
+
+    root = "http://allow.test"
+    paths = ["/p1", "/p2", "/p3"]
+    pages = _mini_site(spark, root, "User-agent: *\nDisallow: \n", paths)
+    ungated = run_crawl(spark, pages, root)
+    gated = run_crawl(spark, pages, root, cfg=EngineConfig(respect_robots=True))
+    waves = {(r["url"], r["level"]) for r in ungated.waves.collect()}
+    assert len(waves) == 4
+    assert {(r["url"], r["level"]) for r in gated.waves.collect()} == waves
+
+    pages = _mini_site(spark, root, "User-agent: *\nAllow: \nDisallow: /p2\n", paths)
+    gated = run_crawl(spark, pages, root, cfg=EngineConfig(respect_robots=True))
+    assert _fetched(gated, root) == ["", "/p1", "/p3"]
+
+
+def test_crawl_robots_gates_urls_java_rejects(spark):
+    """A link Java's URI parser rejects ('|' in its path or query) keys
+    on its real host, so a Disallow of its host gates it: the gate does
+    not fail open on it, and the link beside it is still fetched."""
+    from photon_spark.config import EngineConfig
+    from photon_spark.crawl import run_crawl
+
+    root = "http://pipe.test"
+    paths = ["/private/a|b", "/private?x=a|b", "/pub|x"]
+    pages = _mini_site(spark, root, "User-agent: *\nDisallow: /private\n", paths)
+    # ungated, the robots.txt seed /private is fetched too (core/zap.py)
+    assert _fetched(run_crawl(spark, pages, root), root) == sorted(["", "/private", *paths])
+    gated = run_crawl(spark, pages, root, cfg=EngineConfig(respect_robots=True))
+    assert _fetched(gated, root) == ["", "/pub|x"]
+
+
+def test_crawl_robots_agent_rfc_rules(spark, tmp_path):
+    """Under robots_agent the chosen group's Allow and Disallow rules
+    gate with RFC 9309 matching: a longer Allow re-opens a disallowed
+    prefix, and a * pattern with a $ anchor gates only the exact path.
+    Another bot's group gates nothing. A store crawl stopped after wave
+    0 resumes to the same waves."""
+    from photon_spark.config import EngineConfig
+    from photon_spark.crawl import run_crawl
+    from photon_spark.plans.storage import CrawlStore
+
+    root = "http://agent.test"
+    robots = (
+        "User-agent: otherbot\nDisallow: /public\n\n"
+        "User-agent: photonbot\n"
+        "Disallow: /private\nAllow: /private/ok\nDisallow: /*.php$\n"
+    )
+    paths = ["/public", "/private/ok", "/private/x", "/a.php", "/a.php?x=1"]
+    pages = _mini_site(spark, root, robots, paths)
+    cfg = EngineConfig(respect_robots=True, robots_agent="photonbot")
+    res = run_crawl(spark, pages, root, cfg=cfg)
+    assert _fetched(res, root) == ["", "/a.php?x=1", "/private/ok", "/public"]
+
+    store = CrawlStore(str(tmp_path / "agent_store"))
+    assert run_crawl(spark, pages, root, cfg=cfg, store=store, stop_after_wave=0) is None
+    resumed = run_crawl(spark, pages, root, cfg=cfg, store=store, resume=True)
+    waves = {(r["url"], r["level"]) for r in res.waves.collect()}
+    assert {(r["url"], r["level"]) for r in resumed.waves.collect()} == waves
 
 
 # ---------------------------------------------------------------------------

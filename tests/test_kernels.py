@@ -109,6 +109,7 @@ def test_etld1_matches_reference_tld_behavior():
     assert K.etld1("nodots") is None
     assert K.etld1("facebook.com/p") == "facebook.com"  # fix_protocol path
     assert K.etld1("https://github.com/x") in INTELS
+    assert K.etld1("http://[x/") is None  # urlparse: Invalid IPv6 URL
 
 
 def test_robots_and_sitemap_parsing():
@@ -135,13 +136,25 @@ def test_span_reassembly_roundtrip():
 
 
 def test_robots_crawl_delay_parsing():
-    assert K.robots_crawl_delay("User-agent: *\nCrawl-delay: 10\n") == 10.0
-    assert K.robots_crawl_delay("crawl-delay:   2.5\nDisallow: /x\n") == 2.5
+    assert K.robots_rules("User-agent: *\nCrawl-delay: 10\n")[1] == 10.0
+    assert K.robots_rules("crawl-delay:   2.5\nDisallow: /x\n")[1] == 2.5
     # first value wins; later lines ignored
-    assert K.robots_crawl_delay("Crawl-delay: 3\nCrawl-delay: 9\n") == 3.0
+    assert K.robots_rules("Crawl-delay: 3\nCrawl-delay: 9\n")[1] == 3.0
     # fancy-404 gate (same as robots_paths)
-    assert K.robots_crawl_delay("<html><body>Crawl-delay: 10") is None
-    assert K.robots_crawl_delay("User-agent: *\nDisallow: /\n") is None
+    assert K.robots_rules("<html><body>Crawl-delay: 10")[1] is None
+    assert K.robots_rules("User-agent: *\nDisallow: /\n")[1] is None
+
+
+def test_robots_rules_label_empty_values_by_their_line():
+    """An empty ``Allow: `` is an allow, not a disallow; both empty
+    rules keep their '' path (the crawl drops them, RFC 9309 §2.2.2),
+    and robots_paths still seeds the root from them."""
+    assert K.robots_rules("User-agent: *\nDisallow: \n") == ([("disallow", "")], None)
+    body = "Allow: \nDisallow: /p2\nDisallow: /a*\nAllow: /x\n"
+    assert K.robots_rules(body)[0] == [
+        ("allow", ""), ("disallow", "/p2"), ("allow", "/x"),
+    ]
+    assert K.robots_paths(body) == ["", "/p2", "/x"]
 
 
 def test_robots_group_rules_rfc9309():

@@ -13,6 +13,7 @@ from __future__ import annotations
 from fixtures.gen import BIG_ROOT, big_site_df
 from photon_spark.config import EngineConfig
 from photon_spark.crawl import run_crawl
+from photon_spark.plans.frontier import UrlBloom
 from photon_spark.plans.storage import CrawlStore
 from photon_spark.recrawl import recrawl_store, run_recrawl
 from tests.test_recrawl import URLS, VERSIONS, _origin, _universe
@@ -73,3 +74,27 @@ def test_store_recrawl_leaves_nothing(spark, tmp_path):
             spark, uni, _origin(VERSIONS), n_waves=n, k=2, store=store))
         assert len(res.metrics) == n
         assert not left, (n, left)
+
+
+def test_bloom_crawl_leaves_last_snapshot_only(spark, monkeypatch):
+    """The bloom path's per-wave cache of the flagged candidates and its
+    filter's broadcast go at the next snapshot too."""
+    sc = spark.sparkContext
+    blooms = []
+    broadcast = sc.broadcast
+
+    def recording_broadcast(value):
+        bc = broadcast(value)
+        if isinstance(value, UrlBloom):
+            blooms.append(bc)
+        return bc
+
+    monkeypatch.setattr(sc, "broadcast", recording_broadcast)
+    pages = big_site_df(spark, 1111)
+    for level in (2, 4):
+        cfg = EngineConfig(crawl_level=level, only_urls=True, shuffle_partitions=4)
+        res, left = _left(spark, lambda: run_crawl(
+            spark, pages, BIG_ROOT, cfg=cfg, use_bloom=True))
+        assert len(res.metrics) == level
+        assert len(left) == 1, (level, left)
+    assert blooms and not any(bc._jbroadcast.isValid() for bc in blooms)
